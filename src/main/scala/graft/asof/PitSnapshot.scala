@@ -133,13 +133,12 @@ object PitSnapshot {
   /** PIT snapshot over a VERSIONED trades table, entered through the
     * composed skipping tiers: the `(symbol = ? AND time <= ts)` access is
     * exactly the reference's `(symbol, time DESC)` composite-index shape
-    * (`sql/timescaledb_schema.sql:34-35`), and on a commit-log table it
-    * resolves to [[graft.sources.VersionedTableOps.readFiltered]] with a
-    * symbol [[graft.sources.VersionedTable.PointFilter]] (bloom sidecars)
-    * ∧ a time [[graft.sources.VersionedTable.RangeFilter]] (manifest
-    * min/max) — one manifest read, the surviving dirs only, then the usual
-    * guarded 9-branch assembly. At 100 TB with per-day append commits the
-    * snapshot touches O(dirs overlapping the horizon ∧ containing the
+    * (`sql/timescaledb_schema.sql:34-35`). [[snapshot]]'s PIT guard is
+    * applied over [[graft.sources.VersionedTableOps.read]], whose scan
+    * turns it into a symbol point probe (bloom sidecars) ∧ a time range
+    * (manifest min/max) — one manifest read, the surviving dirs only, then
+    * the usual guarded 9-branch assembly. At 100 TB with per-day append
+    * commits the snapshot touches O(dirs overlapping the horizon ∧ containing the
     * symbol), never the table. Skipping is conservative; [[snapshot]]'s
     * row-level PIT guard still applies on top, so the result is
     * value-identical to a full-table snapshot (PitSpec-gated).
@@ -148,19 +147,9 @@ object PitSnapshot {
     * commit with `statsCols = Seq("time"), bloomCols = Seq("symbol")`.
     */
   def snapshotVersioned(spark: SparkSession, root: String, symbol: String,
-      asOf: Timestamp, asOfVersion: Option[Int] = None): DataFrame = {
-    import graft.sources.VersionedTable
-    import graft.sources.VersionedTable.{PointFilter, RangeFilter}
-    // exact epoch micros: getTime carries millis (incl. the nanos' integral
-    // millis), so rebuild from whole seconds + the full nano field
-    val tsMicros =
-      Math.floorDiv(asOf.getTime, 1000L) * 1000000L + asOf.getNanos / 1000L
-    val pruned = VersionedTable.readFiltered(spark, root,
-      Seq(PointFilter("symbol", symbol),
-        RangeFilter("time", Double.NegativeInfinity, tsMicros.toDouble)),
-      asOfVersion)
-    snapshot(spark, pruned, symbol, asOf)
-  }
+      asOf: Timestamp, asOfVersion: Option[Int] = None): DataFrame =
+    snapshot(spark, graft.sources.VersionedTable.read(spark, root, asOfVersion),
+      symbol, asOf)
 
   def snapshot(spark: SparkSession, trades: DataFrame, symbol: String, asOf: Timestamp): DataFrame = {
     val asOfCol = lit(asOf)

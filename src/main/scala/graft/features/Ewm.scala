@@ -24,12 +24,17 @@ object Ewm {
 
   val Alpha = 0.15
 
-  /** Fold `s = (1-α)·s + α·p` over an array column of prices (ascending). */
+  /** Fold `s = (1-α)·s + α·p` over an array column of prices (ascending).
+    * An empty array has no seed and folds to null (both `slice` with a
+    * negative length and `element_at(arr, 1)` raise under ANSI), like the
+    * DuckDB `list_reduce` over an empty list: a PIT snapshot of a symbol
+    * with no tick at or before the as-of time is one all-null row.
+    */
   def ewmOverArray(arr: Column, alpha: Double = Alpha): Column =
-    aggregate(
+    when(size(arr) > 0, aggregate(
       slice(arr, lit(2), size(arr) - 1),
       element_at(arr, 1),
-      (acc, x) => lit(1.0 - alpha) * acc + lit(alpha) * x)
+      (acc, x) => lit(1.0 - alpha) * acc + lit(alpha) * x))
 
   def compute(trades: DataFrame, n: Int = 12, alpha: Double = Alpha): DataFrame = {
     val w = Window.partitionBy("symbol").orderBy("time").rowsBetween(-(n - 1), 0)

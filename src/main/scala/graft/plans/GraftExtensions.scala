@@ -172,7 +172,7 @@ object GraftExtensions {
   }
 
   /** `graft_versioned(root[, version])` — snapshot read / time travel.
-    * Served through [[graft.sources.VersionedTable.scan]]'s manifest
+    * Served through [[graft.sources.VersionedTable.read]]'s manifest
     * `FileIndex`, so a SQL `WHERE` over the function prunes data dirs from
     * the manifest's min/max stats and bloom sidecars at planning time —
     * pure-SQL sessions get the engine's data skipping with no Scala API.
@@ -183,7 +183,7 @@ object GraftExtensions {
       s"graft_versioned(root[, version]) takes 1-2 arguments, got ${exprs.length}")
     val asOf = if (exprs.length == 2) Some(intArg(exprs(1), "version")) else None
     graft.sources.VersionedTable
-      .scan(org.apache.spark.sql.SparkSession.active,
+      .read(org.apache.spark.sql.SparkSession.active,
         stringArg(exprs.head, "root"), asOf)
       .queryExecution.logical
   }

@@ -70,11 +70,11 @@ object CoreQueries {
     }),
 
     // Manifest-level data skipping: three chronological commits carrying
-    // per-dir (min,max) time stats in the commit log, then a range read of
-    // the MIDDLE third through readPruned (only the intersecting dir is
-    // scanned — VersionedTableSpec asserts the skipped dirs never appear in
-    // inputFiles) + the exact row predicate on top. Oracle = the plain
-    // range filter over the raw table: pruning must be value-transparent.
+    // per-dir (min,max) time stats in the commit log, then a range filter
+    // of the MIDDLE third over read (the pushed time bounds admit only the
+    // intersecting dir — ManifestIndexSpec asserts the scanned file count).
+    // Oracle = the plain range filter over the raw table: pruning must be
+    // value-transparent.
     "q_versioned_prune" -> ((s, d) => {
       import graft.sources.VersionedTable
       val root = java.nio.file.Files.createTempDirectory("graft_vtprune_").toString
@@ -90,20 +90,22 @@ object CoreQueries {
       VersionedTable.commit(t.filter(um >= t1 && um < t2), root, "append",
         statsCols = Seq("time"))
       VersionedTable.commit(t.filter(um >= t2), root, "append", statsCols = Seq("time"))
-      VersionedTable.readPruned(s, root, "time", t1.toDouble, (t2 - 1).toDouble)
-        .filter(um >= t1 && um < t2) // pruning is conservative; predicate on top
+      // attribute-vs-literal bounds: the shape the scan's dir filters translate
+      VersionedTable.read(s, root)
+        .filter(col("time") >= timestamp_micros(lit(t1)) &&
+          col("time") < timestamp_micros(lit(t2)))
         .groupBy("symbol")
         .agg(count(lit(1)).as("n"), sum(col("volume")).as("sum_volume"),
           Quantize.r(sum(col("price")), 4).as("sum_price"))
     }),
 
     // Bloom-sidecar point lookup: three keyed append commits each carrying a
-    // per-dir bloom over o_orderkey, then a point read through readPoint —
+    // per-dir bloom over o_orderkey, then an equality filter over read —
     // only dirs whose bloom might contain the probe key are scanned
-    // (VersionedTableSpec asserts skipped dirs never appear in inputFiles)
-    // + the exact equality predicate on top. Oracle = the plain point
-    // filter over the raw table: bloom skipping must be value-transparent,
-    // exactly like the min/max pruning of q_versioned_prune.
+    // (ManifestIndexSpec asserts the scanned file count). Oracle = the
+    // plain point filter over the raw table: bloom skipping must be
+    // value-transparent, exactly like the min/max pruning of
+    // q_versioned_prune.
     "q_versioned_point" -> ((s, d) => {
       import graft.sources.VersionedTable
       val root = java.nio.file.Files.createTempDirectory("graft_vtpoint_").toString
@@ -113,8 +115,8 @@ object CoreQueries {
         orders.filter(col("o_orderkey") % 3 === r), root, "append",
         bloomCols = Seq("o_orderkey")))
       val k = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-      VersionedTable.readPoint(s, root, "o_orderkey", k)
-        .filter(col("o_orderkey") === k) // bloom is conservative; exact on top
+      VersionedTable.read(s, root)
+        .filter(col("o_orderkey") === k)
         .select(col("o_orderkey"), col("o_orderstatus"),
           Quantize.r(col("o_totalprice"), 2).as("total_price"))
     }),
@@ -123,16 +125,14 @@ object CoreQueries {
     // POINT, the reference's `(symbol, time DESC)` composite index,
     // `sql/timescaledb_schema.sql:34-35`): six append commits — three
     // chronological thirds × two symbol halves — each carrying time min/max
-    // stats AND a symbol bloom sidecar, then ONE readFiltered probe of the
+    // stats AND a symbol bloom sidecar, then ONE filtered read of the
     // middle third ∧ the lexicographically smallest symbol. The range tier
     // dismisses the four off-third dirs from the manifest alone; the bloom
-    // tier dismisses the wrong symbol half without its dir being listed
-    // (VersionedTableSpec asserts the surviving-file set). Conservative as
-    // ever: exact predicates on top. Oracle = the plain two-predicate
-    // filter — composition must be value-transparent.
+    // tier dismisses the wrong symbol half without its files being read
+    // (ManifestIndexSpec asserts the scanned file count). Oracle = the
+    // plain two-predicate filter — composition must be value-transparent.
     "q_versioned_combo" -> ((s, d) => {
       import graft.sources.VersionedTable
-      import graft.sources.VersionedTable.{PointFilter, RangeFilter}
       val root = java.nio.file.Files.createTempDirectory("graft_vtcombo_").toString
       val t = Tables.trades(s, d)
         .select(col("time"), col("symbol"), col("price"), col("volume"))
@@ -147,10 +147,9 @@ object CoreQueries {
       for (tf <- third; h <- 0 to 1)
         VersionedTable.commit(t.filter(tf && crc32(col("symbol")) % 2 === h),
           root, "append", statsCols = Seq("time"), bloomCols = Seq("symbol"))
-      VersionedTable.readFiltered(s, root,
-        Seq(RangeFilter("time", t1.toDouble, (t2 - 1).toDouble),
-          PointFilter("symbol", sym)))
-        .filter(um >= t1 && um < t2 && col("symbol") === sym)
+      VersionedTable.read(s, root)
+        .filter(col("time") >= timestamp_micros(lit(t1)) &&
+          col("time") < timestamp_micros(lit(t2)) && col("symbol") === sym)
         .groupBy("symbol")
         .agg(count(lit(1)).as("n"), sum(col("volume")).as("sum_volume"),
           Quantize.r(sum(col("price")), 4).as("sum_price"))
@@ -178,7 +177,7 @@ object CoreQueries {
       VersionedTable.delete(s, root,
         col("o_orderkey") > lo && col("o_orderkey") <= hi &&
           col("o_orderstatus") === "F")
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           (sum(Quantize.i(col("o_totalprice"), 2)) / lit(100.0)).as("sum_price"))
@@ -206,7 +205,7 @@ object CoreQueries {
         col("o_orderkey") > lo && col("o_orderkey") <= hi &&
           col("o_orderstatus") === "O",
         Map("o_totalprice" -> (col("o_totalprice") * lit(1.1))))
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           (sum(Quantize.i(col("o_totalprice"), 2)) / lit(100.0)).as("sum_price"))
@@ -236,7 +235,7 @@ object CoreQueries {
         col("o_orderkey") > lo && col("o_orderkey") <= hi &&
           col("o_orderstatus") === "O",
         Map("amount" -> (col("amount") * lit(1.1))))
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           (sum(Quantize.i(col("amount"), 2)) / lit(100.0)).as("sum_amount"))
@@ -266,7 +265,7 @@ object CoreQueries {
           .select((col("o_orderkey") + mk).as("o_orderkey"),
             lit("N").as("o_orderstatus"), col("o_totalprice")))
       VersionedTable.merge(s, root, src, "o_orderkey")
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           (sum(Quantize.i(col("o_totalprice"), 2)) / lit(100.0)).as("sum_price"))
@@ -327,7 +326,7 @@ object CoreQueries {
       VersionedTable.deleteMor(s, root,
         col("o_orderkey") > lo && col("o_orderkey") <= hi &&
           col("o_orderstatus") === "F")
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           (sum(Quantize.i(col("o_totalprice"), 2)) / lit(100.0)).as("sum_price"))
@@ -352,7 +351,7 @@ object CoreQueries {
         col("o_orderkey") > lo && col("o_orderkey") <= hi &&
           col("o_orderstatus") === "O",
         Map("o_totalprice" -> (col("o_totalprice") * lit(1.1))))
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           (sum(Quantize.i(col("o_totalprice"), 2)) / lit(100.0)).as("sum_price"))
@@ -380,7 +379,7 @@ object CoreQueries {
           .select((col("o_orderkey") + mk).as("o_orderkey"),
             lit("N").as("o_orderstatus"), col("o_totalprice")))
       VersionedTable.mergeMor(s, root, src, "o_orderkey")
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           (sum(Quantize.i(col("o_totalprice"), 2)) / lit(100.0)).as("sum_price"))
@@ -407,7 +406,7 @@ object CoreQueries {
         col("o_orderkey") > lo && col("o_orderkey") <= hi &&
           col("o_orderstatus") === "F")
       VersionedTable.purgeDeletes(s, root)
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           (sum(Quantize.i(col("o_totalprice"), 2)) / lit(100.0)).as("sum_price"))
@@ -435,7 +434,7 @@ object CoreQueries {
         col("o_orderkey") > lo && col("o_orderkey") <= hi &&
           col("o_orderstatus") === "F")
       VersionedTable.restore(s, root, 3)
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           (sum(Quantize.i(col("o_totalprice"), 2)) / lit(100.0)).as("sum_price"))
@@ -464,7 +463,7 @@ object CoreQueries {
           statsCols = Seq("o_orderkey")))
       VersionedTable.compactWhere(s, root, col("o_orderkey") <= lo,
         statsCols = Seq("o_orderkey"))
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           (sum(Quantize.i(col("o_totalprice"), 2)) / lit(100.0)).as("sum_price"))
@@ -487,11 +486,11 @@ object CoreQueries {
       val (mn, mx) = (b.getLong(0), b.getLong(1))
       val t1 = mn + (mx - mn) / 3
       val t2 = mn + 2 * ((mx - mn) / 3)
-      def um = unix_micros(col("time"))
       VersionedTable.commit(t.repartitionByRange(8, col("time")), root,
         "append", statsCols = Seq("time"))
-      VersionedTable.scan(s, root)
-        .filter(um >= t1 && um < t2)
+      VersionedTable.read(s, root)
+        .filter(col("time") >= timestamp_micros(lit(t1)) &&
+          col("time") < timestamp_micros(lit(t2)))
         .groupBy("symbol")
         .agg(count(lit(1)).as("n"), sum(col("volume")).as("sum_volume"),
           Quantize.r(sum(col("price")), 4).as("sum_price"))
@@ -526,7 +525,7 @@ object CoreQueries {
         actions.exists(_.isInstanceOf[Maintenance.CompactSmallDirs]),
         s"policy must trigger purge + compact, got $actions")
       Maintenance.execute(s, root, actions, statsCols = Seq("o_orderkey"))
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           (sum(Quantize.i(col("o_totalprice"), 2)) / lit(100.0)).as("sum_price"))
@@ -567,7 +566,7 @@ object CoreQueries {
       require(actions.exists(_.isInstanceOf[Maintenance.Recluster]),
         s"drift must trigger a Recluster, got $actions")
       Maintenance.execute(s, root, actions, statsCols = Seq("o_orderkey"))
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           (sum(Quantize.i(col("o_totalprice"), 2)) / lit(100.0)).as("sum_price"))
@@ -575,7 +574,7 @@ object CoreQueries {
 
     // PLANNING-TIME skipping — the same six-dir corpus and probe as
     // q_versioned_combo, but nobody names a DirFilter: the probe is an
-    // ordinary `.filter` over VersionedTable.scan's manifest FileIndex,
+    // ordinary `.filter` over VersionedTable.read's manifest FileIndex,
     // and the dir dismissal happens inside Catalyst when the pushed data
     // filters reach ManifestFileIndex.listFiles (min/max for the time
     // range, bloom for the symbol equality). ManifestIndexSpec asserts
@@ -598,7 +597,7 @@ object CoreQueries {
       for (tf <- third; h <- 0 to 1)
         VersionedTable.commit(t.filter(tf && crc32(col("symbol")) % 2 === h),
           root, "append", statsCols = Seq("time"), bloomCols = Seq("symbol"))
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .filter(col("time") >= timestamp_micros(lit(t1)) &&
           col("time") < timestamp_micros(lit(t2)) && col("symbol") === sym)
         .groupBy("symbol")
@@ -624,7 +623,7 @@ object CoreQueries {
       (0 to 2).foreach(h => VersionedTable.commit(
         t.filter(crc32(col("symbol")) % 3 === h), root, "append",
         bloomCols = Seq("symbol")))
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .filter(col("symbol").isin(s1, s2))
         .groupBy("symbol")
         .agg(count(lit(1)).as("n"), sum(col("volume")).as("sum_volume"),
@@ -635,7 +634,7 @@ object CoreQueries {
     // but the table is committed with NO skipping metadata at all — then
     // one `analyze` backfills per-dir key min/max + blooms onto the
     // existing dirs (zero data movement, a new manifest referencing the
-    // same files), and readPoint prunes exactly as if the table had been
+    // same files), and a filtered read prunes exactly as if the table had been
     // born indexed. Oracle = the plain point filter: a metadata backfill
     // must be value-transparent.
     // STRING-range skipping — the prefix-image stats tier: three commits
@@ -660,7 +659,7 @@ object CoreQueries {
         VersionedTable.commit(t.filter(col("symbol").isin(g: _*)), root,
           "append", statsCols = Seq("symbol")))
       val (lo, hi) = (syms(k), syms(math.min(2 * k, syms.length) - 1))
-      VersionedTable.scan(s, root)
+      VersionedTable.read(s, root)
         .filter(col("symbol") >= lo && col("symbol") <= hi)
         .groupBy("symbol")
         .agg(count(lit(1)).as("n"), sum(col("volume")).as("sum_volume"),
@@ -697,7 +696,7 @@ object CoreQueries {
         orders.filter(col("o_orderkey") % 3 === r), root)) // no stats, no blooms
       VersionedTable.analyze(s, root, Seq("o_orderkey"), Seq("o_orderkey"))
       val k = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-      VersionedTable.readPoint(s, root, "o_orderkey", k)
+      VersionedTable.read(s, root)
         .filter(col("o_orderkey") === k)
         .select(col("o_orderkey"), col("o_orderstatus"),
           Quantize.r(col("o_totalprice"), 2).as("total_price"))
@@ -707,13 +706,12 @@ object CoreQueries {
     // (nothing skippable), then `optimize` rewrites the snapshot as 8 dirs
     // clustered on the (symbol, time) Morton interleave — per-dir time
     // min/max + symbol blooms now BOTH bite on the same PIT-shaped probe
-    // (middle third ∧ one symbol, via readFiltered). Oracle = the plain
+    // (middle third ∧ one symbol, via a filtered read). Oracle = the plain
     // two-predicate filter: the layout op must be value-transparent, like
     // every other skipping tier. (VersionedTableSpec asserts the actual
     // dir-skipping on a synthetic grid.)
     "q_zorder_optimize" -> ((s, d) => {
       import graft.sources.VersionedTable
-      import graft.sources.VersionedTable.{PointFilter, RangeFilter}
       val root = java.nio.file.Files.createTempDirectory("graft_vtzo_").toString
       val t = Tables.trades(s, d)
         .select(col("time"), col("symbol"), col("price"), col("volume"))
@@ -729,11 +727,9 @@ object CoreQueries {
         nDirs = 8, statsCols = Seq("time"), bloomCols = Seq("symbol"))
       val t1 = mn + (mx - mn) / 3
       val t2 = mn + 2 * ((mx - mn) / 3)
-      def um = unix_micros(col("time"))
-      VersionedTable.readFiltered(s, root,
-        Seq(RangeFilter("time", t1.toDouble, (t2 - 1).toDouble),
-          PointFilter("symbol", sym)))
-        .filter(um >= t1 && um < t2 && col("symbol") === sym)
+      VersionedTable.read(s, root)
+        .filter(col("time") >= timestamp_micros(lit(t1)) &&
+          col("time") < timestamp_micros(lit(t2)) && col("symbol") === sym)
         .groupBy("symbol")
         .agg(count(lit(1)).as("n"), sum(col("volume")).as("sum_volume"),
           Quantize.r(sum(col("price")), 4).as("sum_price"))
@@ -750,7 +746,6 @@ object CoreQueries {
     // dir-skipping on a synthetic 16^3 grid.)
     "q_zorder_multi" -> ((s, d) => {
       import graft.sources.VersionedTable
-      import graft.sources.VersionedTable.{PointFilter, RangeFilter}
       val root = java.nio.file.Files.createTempDirectory("graft_vtzm_").toString
       val t = Tables.trades(s, d)
         .select(col("time"), col("symbol"), col("price"), col("volume"))
@@ -774,12 +769,9 @@ object CoreQueries {
         nDirs = 8, statsCols = Seq("time", "price"), bloomCols = Seq("symbol"))
       val t1 = mn + (mx - mn) / 3
       val t2 = mn + 2 * ((mx - mn) / 3)
-      def um = unix_micros(col("time"))
-      VersionedTable.readFiltered(s, root,
-        Seq(RangeFilter("time", t1.toDouble, (t2 - 1).toDouble),
-          PointFilter("symbol", sym),
-          RangeFilter("price", Double.NegativeInfinity, pMid)))
-        .filter(um >= t1 && um < t2 && col("symbol") === sym &&
+      VersionedTable.read(s, root)
+        .filter(col("time") >= timestamp_micros(lit(t1)) &&
+          col("time") < timestamp_micros(lit(t2)) && col("symbol") === sym &&
           col("price") <= pMid)
         .groupBy("symbol")
         .agg(count(lit(1)).as("n"), sum(col("volume")).as("sum_volume"),

@@ -54,13 +54,16 @@ object StreamQueries {
     * ~32 MB of input per partition (≈128 MB decompressed rows), floor 2
     * (never serial), capped at the session width so a genuinely large
     * corpus keeps full parallelism. The driver-side size probe is one
-    * `File.length` walk — no data read.
+    * Hadoop `FileSystem.getContentSummary` — no data read, and the same
+    * answer for a plain path, a `file:` URI or an object-store URI. A
+    * probe that reads 0 bytes fails: a silent 0 would pin the replay to
+    * the floor width at exactly the scale the width exists for.
     */
   def replayWidth(s: SparkSession, sourcePath: String): Int = {
-    def du(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles()).toSeq.flatten.map(du).sum
-    val bytes = du(new java.io.File(sourcePath))
+    val path = new org.apache.hadoop.fs.Path(sourcePath)
+    val bytes = path.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getContentSummary(path).getLength
+    require(bytes > 0, s"replay corpus $sourcePath sized 0 bytes")
     val sessionWidth = s.conf.get("spark.sql.shuffle.partitions").toInt
     math.max(2, math.min(sessionWidth,
       (bytes / (32L * 1024 * 1024)).toInt + 1))

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.StructType
   * }}}
   *
   * The read relation is the SAME manifest-governed `HadoopFsRelation` as
-  * [[VersionedTable.scan]] (one shared `scanIndex`), so ordinary pushed
+  * [[VersionedTable.read]] (one shared `scanIndex`), so ordinary pushed
   * predicates — ranges, equality, IN-lists, ORs — dismiss whole dirs from
   * the manifest's min/max stats and bloom sidecars at planning time, and
   * the survivors still reach the parquet reader as row-group filters.
@@ -75,11 +75,11 @@ final class GraftTableProvider
           VersionedTable.tableSchema(sqlContext.sparkSession, root, Some(v))))
       // merge-on-read or column-mapped snapshot: the bare HadoopFsRelation
       // can carry neither the deletion-vector anti-join nor the logical
-      // rename projection, so serve the scan() frame through a
-      // PrunedFilteredScan (catalog SQL reads and the library
-      // scan()/read() paths keep full planning-time pruning; this
-      // fallback applies translatable filters to the inner frame, whose
-      // own FileIndex then prunes)
+      // rename projection, so serve the read() frame through a
+      // PrunedFilteredScan (catalog SQL reads and the library read()
+      // keep full planning-time pruning; this fallback applies
+      // translatable filters to the inner frame, whose own FileIndex
+      // then prunes)
       dvRelation(sqlContext, root, Some(v))
     else {
       val (index, schema) =
@@ -91,7 +91,7 @@ final class GraftTableProvider
 
   /** The merge-on-read fallback relation for the DSv1 provider: pushed
     * filters and the column projection are re-applied to the DV-applied
-    * [[VersionedTable.scan]] frame — predicates reach the inner frame's
+    * [[VersionedTable.read]] frame — predicates reach the inner frame's
     * `ManifestFileIndex` (dir skipping survives) and parquet row-group
     * filters; unhandled filter shapes are simply re-evaluated by Spark on
     * top (`unhandledFilters` defaults to all — strictly conservative).
@@ -107,7 +107,7 @@ final class GraftTableProvider
           filters: Array[org.apache.spark.sql.sources.Filter]):
           org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
         import org.apache.spark.sql.functions.col
-        val base = VersionedTable.scan(ctx.sparkSession, root, asOf)
+        val base = VersionedTable.read(ctx.sparkSession, root, asOf)
         val filtered = filters.flatMap(GraftTableProvider.filterColumn)
           .foldLeft(base)(_.filter(_))
         val projected = filtered.select(

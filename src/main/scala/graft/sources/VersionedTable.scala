@@ -442,8 +442,7 @@ class VersionedTableOps(val store: CommitStore,
     */
   def tableSchema(spark: SparkSession, root: String,
       asOf: Option[Int] = None): org.apache.spark.sql.types.StructType = {
-    val v = asOf.orElse(latestVersion(root))
-      .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
+    val v = resolveVersion(root, asOf)
     snapshotSchema(spark, root, snapshot(root, v))
   }
 
@@ -466,10 +465,10 @@ class VersionedTableOps(val store: CommitStore,
     * longs/timestamps as micros, doubles via `Double.toString` round-trip,
     * STRINGS as their order-preserving 6-byte prefix image,
     * [[VersionedTable.strImage]] — so symbol ranges skip too).
-    * They power [[readPruned]]: manifest-level data skipping, the Delta
+    * They power [[read]]'s pruning: manifest-level data skipping, the Delta
     * data-skipping analogue with the stats in the commit log instead of a
-    * sidecar — a pruned scan touches the manifest and the SURVIVING dirs
-    * only, never a listing, never a footer of a skipped dir. Cost at commit:
+    * sidecar — a pruned scan reads the manifest and the SURVIVING files
+    * only, never a footer of a skipped dir. Cost at commit:
     * one small agg over the batch being written (it is in cache anyway).
     */
   def commit(df: DataFrame, root: String, mode: String = "append",
@@ -721,147 +720,54 @@ class VersionedTableOps(val store: CommitStore,
       catch { case _: Throwable => () }
   }
 
-  /** Read a snapshot (default: latest). Only the manifest's dirs are read —
-    * orphan dirs from crashed commits and vacuumed history are invisible.
+  /** Read a snapshot (default: latest) — the one frame-returning read.
+    * Only the manifest's dirs are read: orphan dirs from crashed commits
+    * and vacuumed history are invisible. The frame is backed by a
+    * [[org.apache.spark.sql.graft.ManifestFileIndex]], so predicates
+    * Catalyst pushes at the scan — `read(...).filter(...)` or a SQL
+    * `WHERE` over `graft_versioned(root)` — dismiss dirs (and files) from
+    * the manifest's min/max stats and bloom sidecars at planning time,
+    * with no engine-specific API at the call site. Only attribute-vs-
+    * literal comparisons translate (see
+    * [[org.apache.spark.sql.graft.ManifestScan.dirFiltersFrom]]):
+    * `col("time") >= ts` prunes, `unix_micros(col("time")) >= n` does
+    * not. The surviving predicates still reach the parquet reader as
+    * row-group filters (the tiers compose). Skipped dirs are never
+    * footer-read; nothing moves to the executors but the surviving files.
+    *
+    * Schema anchor: [[snapshotSchema]] (the manifest's persisted union
+    * schema); older dirs missing a column serve nulls for it. A delete-all
+    * snapshot reads as a schema-correct empty frame.
     */
   def read(spark: SparkSession, root: String, asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.orElse(latestVersion(root))
-      .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
+    // Resolve the version ONCE and pin it for BOTH the dv set and the
+    // FileIndex: resolving twice lets a commit land in between and pair
+    // version v's dvs with v+N's dirs — a read corresponding to no
+    // committed snapshot.
+    val v = resolveVersion(root, asOf)
     val snap = snapshot(root, v)
-    // a delete-all leaves a legitimately EMPTY snapshot: serve
-    // schema-correct emptiness off the manifest anchor (legacy manifests
-    // without a persisted schema keep the loud error — they have no
-    // authoritative schema to serve)
-    if (snap.dataDirs.isEmpty && snap.schemaJson.isDefined)
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        VersionedTable.logicalSchema(snapshotSchema(spark, root, snap)))
-    require(snap.dataDirs.nonEmpty, s"version $v has no data dirs")
-    val dirs = snap.dataDirs.map(d => new File(root, d).getPath)
-    // The union schema (nulls for pre-evolution rows) comes from the
-    // manifest when persisted — schema-PINNED read, zero footer I/O at
-    // planning (at 100 TB a snapshot read costs ONE manifest instead of
-    // O(dirs) footers). Legacy manifests fall back to mergeSchema, whose
-    // footer union enforces the same additive discipline. Deletion
-    // vectors (merge-on-read DML) fold in as one anti-join; a dv-free
-    // snapshot pays nothing.
-    snap.schemaJson match {
-      case Some(_) =>
-        val anchor = snapshotSchema(spark, root, snap)
-        // column-mapped snapshot: files carry PHYSICAL names — read under
-        // them (dv fold first: it needs _metadata off the raw scan), then
-        // rename to the logical anchor. Unmapped: one schema-pinned read.
+    val (index, anchor) = scanIndex(spark, root, v, snap)
+    // merge-on-read: deletion vectors fold in ON TOP of the pruning frame
+    // — anchor-column predicates still push through the anti-join into
+    // the FileIndex, so planning-time skipping and dvs compose. A
+    // column-mapped snapshot scans under PHYSICAL names (the FileIndex
+    // translates pushed physical filters back to the manifest's logical
+    // stats — see scanIndex) and renames on top; pushdown crosses the
+    // rename Project because Catalyst rewrites through aliases.
+    val raw = applyDvs(spark, root, snap.dvs,
+      org.apache.spark.sql.graft.ManifestScan.frame(spark, index,
         if (VersionedTable.isMapped(anchor))
-          toLogical(applyDvs(spark, root, snap.dvs, spark.read
-            .schema(VersionedTable.physicalSchema(anchor)).parquet(dirs: _*)),
-            anchor)
-        else applyDvs(spark, root, snap.dvs,
-          spark.read.schema(anchor).parquet(dirs: _*))
-      case None =>
-        applyDvs(spark, root, snap.dvs,
-          spark.read.option("mergeSchema", "true").parquet(dirs: _*))
-    }
+          VersionedTable.physicalSchema(anchor)
+        else anchor))
+    toLogical(raw, anchor)
   }
 
-  /** Manifest-level data skipping: read snapshot `asOf` keeping only the
-    * dirs whose recorded `[min, max]` for `c` intersects `[lo, hi]`
-    * (bounds in the stats' numeric image: epoch micros for timestamps,
-    * double otherwise). Dirs without stats for `c` are always read —
-    * pruning is strictly conservative, so the result frame CONTAINS the
-    * range rows plus possibly other rows from surviving dirs; callers
-    * apply the row-level predicate on top, exactly as with parquet
-    * footer stats. A pruned scan costs one manifest read + the surviving
-    * dirs — skipped dirs are never listed, never footer-read.
-    */
-  def readPruned(spark: SparkSession, root: String, c: String,
-      lo: Double, hi: Double, asOf: Option[Int] = None): DataFrame =
-    readFiltered(spark, root, Seq(VersionedTable.RangeFilter(c, lo, hi)), asOf)
-
-  /** Bloom-pruned point read: read snapshot `asOf` keeping only the dirs
-    * whose bloom sidecar for `c` might contain `value` (integral or
-    * string, matching `DataFrameStatFunctions.bloomFilter`'s domain).
-    * Dirs without a sidecar are always read — strictly conservative, like
-    * [[readPruned]]: the frame CONTAINS the matching rows plus possibly
-    * bloom false positives and statless dirs, so callers apply the
-    * equality predicate on top. Cost: one manifest read + one tiny
-    * sidecar read per dir + the surviving dirs. This is the skipping tier
-    * min/max range stats cannot provide: a point key intersects almost
-    * every dir's [min, max], but a bloom answers "definitely absent".
-    */
-  def readPoint(spark: SparkSession, root: String, c: String,
-      value: Any, asOf: Option[Int] = None): DataFrame =
-    readFiltered(spark, root, Seq(VersionedTable.PointFilter(c, value)), asOf)
-
-  /** Composed skipping: read snapshot `asOf` keeping only the dirs EVERY
-    * filter admits — the conjunctive shape real PIT scans have (a time
-    * RANGE ∧ a symbol POINT, the reference's `(symbol, time DESC)` index,
-    * `sql/timescaledb_schema.sql:34-35`). Per dir, a [[VersionedTable.RangeFilter]]
-    * consults the manifest min/max, a [[VersionedTable.PointFilter]] consults
-    * BOTH tiers — min/max first (free — the manifest is already in hand;
-    * for numeric probes a point outside a dir's range is definitely absent)
-    * and the bloom sidecar only for dirs the range tier could not dismiss,
-    * so sidecars of range-skipped dirs are never even opened. Strictly
-    * conservative like its single-filter forms (missing stats/sidecar →
-    * read the dir; callers apply the row predicate on top).
-    *
-    * Cost: one manifest read + one sidecar probe per range-surviving dir +
-    * the surviving dirs. Skipped dirs are never listed or footer-read; the
-    * only footer touched besides the survivors is the NEWEST dir's, once,
-    * as the schema anchor (additive evolution makes the latest commit's
-    * schema the union), which also restores columns a skipped dir would
-    * have contributed under mergeSchema — the empty-keep and keep-only
-    * frames carry the same union schema a full read would.
-    */
-  def readFiltered(spark: SparkSession, root: String,
-      filters: Seq[VersionedTable.DirFilter], asOf: Option[Int] = None): DataFrame = {
-    import VersionedTable.{AnyOf, DirFilter, PointFilter, RangeFilter}
-    def validate(f: DirFilter): Unit = f match {
-      case RangeFilter(c, lo, hi) => require(lo <= hi, s"bad range [$lo, $hi] on $c")
-      case _: PointFilter         => ()
-      case AnyOf(branches)        => branches.foreach(_.foreach(validate))
-    }
-    filters.foreach(validate)
-    val v = asOf.orElse(latestVersion(root))
+  private def resolveVersion(root: String, asOf: Option[Int]): Int =
+    asOf.orElse(latestVersion(root))
       .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
-    val snap = snapshot(root, v)
-    require(snap.dataDirs.nonEmpty || snap.schemaJson.isDefined,
-      s"version $v has no data dirs")
-    val keep = admittedDirs(root, snap, filters)
-    // Schema anchor: the manifest's persisted union schema (exact even
-    // after DML dropped the newest dir); legacy fallback = ONE footer read
-    // of the newest dir — never a footer per skipped dir.
-    val anchor = snapshotSchema(spark, root, snap)
-    if (keep.isEmpty)
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        VersionedTable.logicalSchema(anchor))
-    else if (snap.schemaJson.isDefined) {
-      // schema-pinned keep read: anchor columns in anchor order, missing
-      // columns null-filled by the parquet reader itself — zero footer I/O.
-      // Deletion vectors fold in before the frame leaves (dv'd positions
-      // of SKIPPED dirs never match anything — their files aren't read —
-      // so pruning and merge-on-read compose for free). Column-mapped
-      // snapshots read under PHYSICAL names, then rename.
-      if (VersionedTable.isMapped(anchor))
-        toLogical(applyDvs(spark, root, snap.dvs,
-          spark.read.schema(VersionedTable.physicalSchema(anchor))
-            .parquet(keep.map(d => new File(root, d).getPath): _*)), anchor)
-      else applyDvs(spark, root, snap.dvs, spark.read.schema(anchor)
-        .parquet(keep.map(d => new File(root, d).getPath): _*))
-    }
-    else {
-      val kept = applyDvs(spark, root, snap.dvs,
-        spark.read.option("mergeSchema", "true")
-          .parquet(keep.map(d => new File(root, d).getPath): _*))
-      val missing = anchor.filterNot(f => kept.columns.contains(f.name))
-      if (missing.isEmpty) kept
-      else kept.select(kept.columns.map(col) ++ missing.map(f =>
-        lit(null).cast(f.dataType).as(f.name)): _*)
-    }
-  }
 
   /** Schema-pinned frame over a SUBSET of a snapshot's dirs — the keep-read
-    * primitive [[readFiltered]] and the scoped-maintenance verbs share:
+    * primitive [[readAdmitted]] and the scoped-maintenance verbs share:
     * anchor columns in anchor order (missing columns null-filled by the
     * reader, zero footer I/O), deletion vectors folded, column-mapped
     * snapshots read under physical names and renamed back.
@@ -892,8 +798,7 @@ class VersionedTableOps(val store: CommitStore,
   def readAdmitted(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column,
       asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.orElse(latestVersion(root))
-      .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
+    val v = resolveVersion(root, asOf)
     val snap = snapshot(root, v)
     val anchor = snapshotSchema(spark, root, snap)
     readDirs(spark, root, snap,
@@ -901,45 +806,7 @@ class VersionedTableOps(val store: CommitStore,
       anchor)
   }
 
-  /** Planning-time-skipping scan: a frame over snapshot `asOf` backed by a
-    * [[org.apache.spark.sql.graft.ManifestFileIndex]]. Where [[readFiltered]]
-    * asks the caller to NAME the dir filters, this frame derives them from
-    * whatever predicates Catalyst pushes at the scan — `scan(...).filter(...)`
-    * or a SQL `WHERE` over `graft_versioned(root)` dismisses dirs from the
-    * manifest's min/max stats and bloom sidecars with zero engine-specific
-    * API at the call site, and the surviving predicates still reach the
-    * parquet reader as row-group filters (the tiers compose). Nothing
-    * moves to the executors but the surviving files.
-    *
-    * Schema anchor: the newest dir's footer (additive evolution makes the
-    * latest commit's schema the union); older dirs missing a column serve
-    * nulls for it, exactly like [[readFiltered]]'s keep-path.
-    */
-  def scan(spark: SparkSession, root: String, asOf: Option[Int] = None): DataFrame = {
-    // Resolve the version ONCE and pin it for BOTH the dv set and the
-    // FileIndex: resolving twice (here and inside scanIndex) lets a
-    // commit land in between and pair version v's dvs with v+N's dirs —
-    // a read corresponding to no committed snapshot.
-    val v = asOf.orElse(latestVersion(root))
-      .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
-    val snap = snapshot(root, v)
-    val (index, anchor) = scanIndex(spark, root, Some(v))
-    // merge-on-read: deletion vectors fold in ON TOP of the pruning frame
-    // — anchor-column predicates still push through the anti-join into
-    // the FileIndex, so planning-time skipping and dvs compose. A
-    // column-mapped snapshot scans under PHYSICAL names (the FileIndex
-    // translates pushed physical filters back to the manifest's logical
-    // stats — see scanIndex) and renames on top; pushdown crosses the
-    // rename Project because Catalyst rewrites through aliases.
-    val raw = applyDvs(spark, root, snap.dvs,
-      org.apache.spark.sql.graft.ManifestScan.frame(spark, index,
-        if (VersionedTable.isMapped(anchor))
-          VersionedTable.physicalSchema(anchor)
-        else anchor))
-    toLogical(raw, anchor)
-  }
-
-  /** The manifest-governed FileIndex + union schema behind [[scan]] —
+  /** The manifest-governed FileIndex + union schema behind [[read]] —
     * shared with the `format("graft")` batch DataSource
     * ([[GraftTableProvider]]), which wraps the same index in a
     * `HadoopFsRelation` so `spark.read.format("graft").load(root)` prunes
@@ -948,9 +815,13 @@ class VersionedTableOps(val store: CommitStore,
   def scanIndex(spark: SparkSession, root: String, asOf: Option[Int] = None):
       (org.apache.spark.sql.graft.ManifestFileIndex,
         org.apache.spark.sql.types.StructType) = {
-    val v = asOf.orElse(latestVersion(root))
-      .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
-    val snap = snapshot(root, v)
+    val v = resolveVersion(root, asOf)
+    scanIndex(spark, root, v, snapshot(root, v))
+  }
+
+  private def scanIndex(spark: SparkSession, root: String, v: Int, snap: Snapshot):
+      (org.apache.spark.sql.graft.ManifestFileIndex,
+        org.apache.spark.sql.types.StructType) = {
     require(snap.dataDirs.nonEmpty || snap.schemaJson.isDefined,
       s"version $v has no data dirs")
     val anchor = snapshotSchema(spark, root, snap)
@@ -982,8 +853,8 @@ class VersionedTableOps(val store: CommitStore,
     (index, anchor)
   }
 
-  /** The skipping kernel shared by [[readFiltered]] and the planning-time
-    * [[org.apache.spark.sql.graft.ManifestFileIndex]]: the subset of a
+  /** The skipping kernel shared by [[readAdmitted]], the DML verbs and the
+    * planning-time [[org.apache.spark.sql.graft.ManifestFileIndex]]: the subset of a
     * snapshot's data dirs at least one row of which MIGHT satisfy every
     * filter. Per dir, a [[VersionedTable.RangeFilter]] consults the
     * manifest min/max; a [[VersionedTable.PointFilter]] consults min/max
@@ -1481,7 +1352,7 @@ class VersionedTableOps(val store: CommitStore,
     * the CURRENT snapshot's existing dirs, publishing a new manifest that
     * references the SAME data (operation `analyze`, zero rows moved). The
     * retrofit path for a table whose history predates its skipping needs:
-    * [[readPruned]]/[[readPoint]]/[[readFiltered]] start biting immediately,
+    * filters over [[read]] start pruning immediately,
     * with no rewrite — where [[optimize]] re-clusters the physical layout,
     * `analyze` only measures it. Change-feed consumers skip analyze
     * versions as additive no-ops (nothing was added), so a subscription is
@@ -1612,7 +1483,7 @@ class VersionedTableOps(val store: CommitStore,
     * dimensions ([[graft.operators.ZOrder]]), each dir covering one
     * contiguous z-range, published atomically as ONE overwrite manifest
     * carrying per-dir min/max for `statsCols` (and optional bloom sidecars).
-    * A single-dir [[compact]] gives [[readPruned]]/[[readFiltered]] nothing
+    * A single-dir [[compact]] gives a filtered [[read]] nothing
     * to skip, and a linear sort clusters one dimension at the cost of the
     * other; after a Z rewrite BOTH dimensions' stats are tight in every dir,
     * so point/range probes on either — or both, the PIT shape — prune to
@@ -1697,7 +1568,7 @@ class VersionedTableOps(val store: CommitStore,
     val scoped = where.isDefined || scopeDirs.isDefined
     if (scoped && scopeSet.isEmpty) return parent // proven no-op
     val current =
-      if (!scoped) read(spark, root)
+      if (!scoped) read(spark, root, Some(parent))
       else readDirs(spark, root, snapP, snapP.dataDirs.filter(scopeSet), anchorP)
     val shift = codeBits - java.lang.Integer.numberOfTrailingZeros(nDirs)
     val zcode = ZOrder.mortonN(dims.map { case (c, mx) => ZOrder.scaleTo16(c, mx) })
@@ -3546,8 +3417,10 @@ object VersionedTable extends VersionedTableOps(CommitStore.local) {
   final case class DirBloom(dir: String, col: String, path: String)
 
   /** One conjunct of a composed-skipping read (see
-    * [[VersionedTableOps.readFiltered]]): each admits or dismisses a whole
-    * data dir from the manifest's stats/sidecars before any data I/O.
+    * [[VersionedTableOps.admittedDirs]]; [[VersionedTableOps.read]] derives
+    * them from the filters Catalyst pushes at its scan): each admits or
+    * dismisses a whole data dir from the manifest's stats/sidecars before
+    * any data I/O.
     */
   sealed trait DirFilter
 

@@ -215,7 +215,7 @@ class GraftCatalog extends DelegatingCatalogExtension {
   * never plan through a DSv2 scan: [[GraftDmlRule]] swaps the relation for
   * the manifest-`FileIndex` `HadoopFsRelation` ([[ManifestScan.relation]])
   * during analysis, so catalog reads prune identically to
-  * `VersionedTable.scan` — the BATCH_READ capability is advertised for the
+  * `VersionedTable.read` — the BATCH_READ capability is advertised for the
   * analyzer's benefit and [[GraftTableV2.unsupportedScan]] guards the path
   * that must never execute. Writes ride the V1 fallback seam
   * ([[org.apache.spark.sql.connector.write.V1Write]]): `INSERT INTO` is an

@@ -215,7 +215,7 @@ class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
             // onto the relation's output ids so the surrounding plan
             // stays resolved; anchor-column predicates keep pushing
             // through the anti-join into the FileIndex
-            val lp = VersionedTable.scan(spark, gt.root, Some(v))
+            val lp = VersionedTable.read(spark, gt.root, Some(v))
               .queryExecution.analyzed
             require(lp.output.size == r.output.size,
               s"scan/relation schema width mismatch on ${gt.name()}")

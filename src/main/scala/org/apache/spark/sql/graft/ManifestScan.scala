@@ -16,11 +16,11 @@ import graft.sources.VersionedTable.{DirFilter, PointFilter, RangeFilter}
   * `TahoeFileIndex` shape: a [[FileIndex]] whose `listFiles` receives the
   * data filters Catalyst already pushed toward the scan, translates them
   * into manifest [[DirFilter]]s, and returns only the files of the dirs
-  * the manifest's min/max stats and bloom sidecars admit. The library
-  * `readFiltered` path asks the caller to name the filters; a frame built
-  * over this index prunes from ordinary `.filter(...)` / SQL `WHERE`
-  * clauses with no API beyond vanilla Spark — `graft_versioned(root)` in
-  * pure SQL skips dirs the same way.
+  * the manifest's min/max stats and bloom sidecars admit. Every frame
+  * `VersionedTable.read` returns is built over this index, so it prunes
+  * from ordinary `.filter(...)` / SQL `WHERE` clauses with no API beyond
+  * vanilla Spark — `graft_versioned(root)` in pure SQL skips dirs the
+  * same way.
   *
   * Hosted under `org.apache.spark.sql` because the construction surface
   * (`HadoopFsRelation`/`LogicalRelation`/`Dataset.ofRows`) is

@@ -59,18 +59,14 @@ class ColumnMappingSpec extends SparkTestBase {
     // manifest stats lines were rewritten to the new logical name
     val snap = VersionedTable.snapshot(root, 4)
     assert(snap.dirStats.nonEmpty && snap.dirStats.forall(_.col == "key"))
-    // readFiltered prunes on the NEW name (1 of 3 dirs admitted) and is
-    // value-exact
-    val pruned = VersionedTable.readPruned(spark, root, "key", 120.0, 150.0)
-    assert(pruned.inputFiles.length <
-      VersionedTable.read(spark, root).inputFiles.length)
-    assert(rows(pruned.filter(col("key") >= 120 && col("key") <= 150), "key")
-      === (120L to 150L))
-    // scan(): the pushed filter prunes through the FileIndex (physical
-    // name remapped back to the manifest's logical stats)
-    val scanned = VersionedTable.scan(spark, root)
-      .filter(col("key") >= 120 && col("key") < 150)
-    assert(scanned.count() === 30L)
+    // the pushed filter prunes on the NEW name through the FileIndex
+    // (physical name remapped back to the manifest's logical stats) and
+    // is value-exact
+    val pruned = VersionedTable.read(spark, root)
+      .filter(col("key") >= 120 && col("key") <= 150)
+    assert(runAndCount(pruned)._2 < runAndCount(VersionedTable.read(spark, root))._2)
+    assert(rows(pruned, "key") === (120L to 150L))
+    assert(pruned.filter(col("key") < 150).count() === 30L)
   }
 
   test("analyze() backfills skipping metadata under renamed names") {
@@ -86,11 +82,10 @@ class ColumnMappingSpec extends SparkTestBase {
     assert(snap.dirStats.exists(_.col == "v"))
     // prior key-stats (rewritten by the rename) survived the backfill
     assert(snap.dirStats.exists(_.col == "key"))
-    val pruned = VersionedTable.readPruned(spark, root, "v", 250.0, 280.0)
-    assert(pruned.inputFiles.length <
-      VersionedTable.read(spark, root).inputFiles.length)
-    assert(rows(pruned.filter(col("v") >= 250 && col("v") <= 280), "v")
-      === (125L to 140L).map(_ * 2))
+    val pruned = VersionedTable.read(spark, root)
+      .filter(col("v") >= 250 && col("v") <= 280)
+    assert(runAndCount(pruned)._2 < runAndCount(VersionedTable.read(spark, root))._2)
+    assert(rows(pruned, "v") === (125L to 140L).map(_ * 2))
   }
 
   test("DML after a rename: predicates and assignments speak the new name") {

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * in `_dv/` parquet sidecars (`dv=` manifest lines) and every read path
   * folds them in as one anti-join. Contracts under test: value-exactness
   * vs the copy-on-write twins, zero-rewrite manifests, per-version time
-  * travel, composition with every read surface (read / readFiltered /
-  * scan / format("graft") / SQL catalog), DV carry rules (append, evolve,
+  * travel, composition with every read surface (filtered read /
+  * format("graft") / SQL catalog), DV carry rules (append, evolve,
   * restore, clone), purge-as-optimize transparency to subscribers, and
   * vacuum's reference-based dv lifecycle.
   *
@@ -95,32 +95,23 @@ class DeletionVectorSpec extends SparkTestBase
     assert(VersionedTable.latestVersion(root) === Some(3))
   }
 
-  test("every read surface folds dvs in: readFiltered, scan, format(graft), SQL WHERE") {
+  test("every read surface folds dvs in: filtered read, format(graft), SQL WHERE") {
     val root = freshRoot()
     rangedTable(root)
     VersionedTable.deleteMor(spark, root, col("id") >= 150L && col("id") < 250L)
     val expect = (0L until 150L) ++ (250L until 300L)
     // library pruned read (range tier admits dirs 2 and 3; dv applies)
-    val pruned = VersionedTable.readPruned(spark, root, "id", 140.0, 260.0)
-      .filter(col("id").between(140, 260))
+    val pruned = VersionedTable.read(spark, root).filter(col("id").between(140, 260))
     assert(ids(pruned) === expect.filter(i => i >= 140 && i <= 260))
-    // planning-time scan with a pushed predicate
-    val scanned = VersionedTable.scan(spark, root).filter(col("id") >= 100L)
+    assert(scannedFiles(pruned).forall(f =>
+      f.contains("data/v00002") || f.contains("data/v00003")))
+    val scanned = VersionedTable.read(spark, root).filter(col("id") >= 100L)
     assert(ids(scanned) === expect.filter(_ >= 100))
     // pruning still bites THROUGH the dv anti-join: the id<100 probe must
-    // scan strictly fewer data files than the full read (AQE-aware walk)
-    def dataFiles(df: DataFrame): Long = {
-      df.collect()
-      collect(df.queryExecution.executedPlan) {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-            if f.relation.location
-              .isInstanceOf[org.apache.spark.sql.graft.ManifestFileIndex] =>
-          f.metrics("numFiles").value
-      }.sum
-    }
-    val prunedFiles = dataFiles(VersionedTable.scan(spark, root)
-      .filter(col("id") < 100L))
-    val allFiles = dataFiles(VersionedTable.scan(spark, root))
+    // scan strictly fewer data files than the full read
+    val prunedFiles = runAndCount(VersionedTable.read(spark, root)
+      .filter(col("id") < 100L))._2
+    val allFiles = runAndCount(VersionedTable.read(spark, root))._2
     assert(prunedFiles > 0 && prunedFiles < allFiles,
       s"dir skipping must survive the dv anti-join ($prunedFiles vs $allFiles)")
     // DSv1 generic reader
@@ -301,7 +292,6 @@ class DeletionVectorSpec extends SparkTestBase
     VersionedTable.commit(spark.range(0L, 100L).toDF("id"), root, "append")
     assert(VersionedTable.deleteMor(spark, root, lit(true)) === 100L)
     assert(VersionedTable.read(spark, root).count() === 0L)
-    assert(VersionedTable.scan(spark, root).count() === 0L)
     // the anti-join must broadcast below the threshold (AQE-aware walk)
     val probe = VersionedTable.read(spark, root)
     probe.collect()

@@ -93,11 +93,10 @@ class FooterStatsSpec extends SparkTestBase {
     VersionedTable.commit(corpus().repartition(2), root,
       statsCols = Seq("id"), bloomCols = Seq("id", "symbol"))
     // a point read on an absent key prunes everything; a present key hits
-    val hit = VersionedTable.readPoint(spark, root, "symbol", "sym_3")
-    assert(hit.filter(col("symbol") === "sym_3").count() > 0)
-    val miss = VersionedTable.readPoint(spark, root, "symbol", "sym_nope")
-    assert(miss.count() === 0)
-    val hitL = VersionedTable.readPoint(spark, root, "id", 123L)
-    assert(hitL.filter(col("id") === 123L).count() === 1)
+    val read = VersionedTable.read(spark, root)
+    assert(read.filter(col("symbol") === "sym_3").count() > 0)
+    val miss = read.filter(col("symbol") === "sym_nope")
+    assert(runAndCount(miss) === ((Seq.empty, 0L)))
+    assert(read.filter(col("id") === 123L).count() === 1)
   }
 }

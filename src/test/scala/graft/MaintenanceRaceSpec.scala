@@ -97,8 +97,8 @@ class MaintenanceRaceSpec extends SparkTestBase {
     assert(ids(VersionedTable.read(spark, root)) ===
       ((0L until 300L) ++ (30L until 50L) ++ (500L until 520L)).sorted)
     // stats for the carried + new dirs survive: the low range still prunes
-    val pruned = VersionedTable.readPruned(spark, root, "id", 250.0, 260.0)
-    assert(pruned.inputFiles.forall(_.contains(new File(d3).getName)))
+    val pruned = VersionedTable.read(spark, root).filter(col("id").between(250, 260))
+    assert(scannedFiles(pruned).forall(_.contains(new File(d3).getName)))
     // no staged leftovers beyond the referenced dirs
     assert(diskDirs(root) === snap.dataDirs.toSet ++
       Seq(d1, frag).toSet, // old dirs still on disk for time travel

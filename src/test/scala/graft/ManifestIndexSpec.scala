@@ -5,31 +5,21 @@ import java.nio.file.Files
 import graft.sources.VersionedTable
 import graft.sources.VersionedTable.{PointFilter, RangeFilter}
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Abs, And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, Literal, Or}
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestScan
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
-/** Planning-time data skipping: `VersionedTable.scan`'s ManifestFileIndex
+/** Planning-time data skipping: `VersionedTable.read`'s ManifestFileIndex
   * must dismiss dirs from ordinary Catalyst-pushed `.filter`/`WHERE`
-  * predicates — same verdicts as the named-DirFilter `readFiltered` path,
-  * asserted at the physical-plan level via the scan's `numFiles` metric.
+  * predicates — the same [[VersionedTable.admittedDirs]] verdicts the DML
+  * verbs use, asserted at the physical-plan level via the scan's
+  * `numFiles` metric.
   */
 class ManifestIndexSpec extends SparkTestBase {
 
   private def freshRoot(): String =
     Files.createTempDirectory("graft_mfi_").toString
-
-  /** Execute and return (rows, files actually scanned). */
-  private def runAndCount(df: DataFrame): (Seq[org.apache.spark.sql.Row], Long) = {
-    val rows = df.collect().toSeq
-    val files = df.queryExecution.executedPlan
-      .collect { case f: FileSourceScanExec => f.metrics("numFiles").value }
-    assert(files.nonEmpty, "expected a FileSourceScanExec in the plan")
-    (rows, files.sum)
-  }
 
   /** Three disjoint id-range dirs, two files each, min/max stats on id. */
   private def rangedTable(): String = {
@@ -44,9 +34,9 @@ class ManifestIndexSpec extends SparkTestBase {
 
   test("a plain .filter range probe prunes dirs at planning time, value-exact") {
     val root = rangedTable()
-    val all = runAndCount(VersionedTable.scan(spark, root))
+    val all = runAndCount(VersionedTable.read(spark, root))
     assert(all._2 === 6, "three dirs x two files with no filters")
-    val probe = VersionedTable.scan(spark, root)
+    val probe = VersionedTable.read(spark, root)
       .filter(col("id") >= 120L && col("id") < 180L)
     val (rows, files) = runAndCount(probe)
     assert(files === 2, s"only the middle dir's files may be scanned, got $files")
@@ -67,9 +57,9 @@ class ManifestIndexSpec extends SparkTestBase {
       "commit must record one fstats hull per file (sidecar-referenced)")
     assert(snap.dirStats.exists(s => s.file.isEmpty && s.col == "id"),
       "the dir-grain hull must still be recorded (dir admission needs it)")
-    val all = runAndCount(VersionedTable.scan(spark, root))
+    val all = runAndCount(VersionedTable.read(spark, root))
     assert(all._2 === 4, "one dir, four files unfiltered")
-    val probe = VersionedTable.scan(spark, root)
+    val probe = VersionedTable.read(spark, root)
       .filter(col("id") >= 150L && col("id") < 180L)
     val (rows, files) = runAndCount(probe)
     assert(files >= 1 && files < 4,
@@ -99,7 +89,7 @@ class ManifestIndexSpec extends SparkTestBase {
     val fat = snap.dataDirs.head
     assert(VersionedTable.fileGrainStats(root, snap, fat).size === 4)
     // and file-grain pruning still works through the pointers
-    val probe = VersionedTable.scan(spark, root)
+    val probe = VersionedTable.read(spark, root)
       .filter(col("id") >= 150L && col("id") < 180L)
     val (rows, files) = runAndCount(probe)
     assert(files >= 1 && files < 4, s"expected file-tier pruning, got $files")
@@ -127,7 +117,7 @@ class ManifestIndexSpec extends SparkTestBase {
     assert(snap.dirStats.count(_.file.isDefined) === 4, "inline entries parse")
     assert(VersionedTable
       .fileGrainStats(root, snap, snap.dataDirs.head).size === 4)
-    val probe = VersionedTable.scan(spark, root)
+    val probe = VersionedTable.read(spark, root)
       .filter(col("id") >= 150L && col("id") < 180L)
     val (rows, files) = runAndCount(probe)
     assert(files >= 1 && files < 4, s"legacy inline must still prune, got $files")
@@ -139,12 +129,12 @@ class ManifestIndexSpec extends SparkTestBase {
     // committed with NO stats at all — the legacy-table shape
     VersionedTable.commit(
       spark.range(0, 400).toDF("id").repartitionByRange(4, col("id")), root)
-    val before = runAndCount(VersionedTable.scan(spark, root)
+    val before = runAndCount(VersionedTable.read(spark, root)
       .filter(col("id") >= 150L && col("id") < 180L))
     assert(before._2 === 4, "no stats: every file must be scanned")
     // one metadata-only commit measures the layout, down to file grain
     VersionedTable.analyze(spark, root, statsCols = Seq("id"))
-    val (rows, files) = runAndCount(VersionedTable.scan(spark, root)
+    val (rows, files) = runAndCount(VersionedTable.read(spark, root)
       .filter(col("id") >= 150L && col("id") < 180L))
     assert(files >= 1 && files < 4,
       s"post-analyze the probe must prune at the file tier, got $files")
@@ -158,7 +148,7 @@ class ManifestIndexSpec extends SparkTestBase {
         spark.range(0, 50).toDF("id").withColumn("sym", lit(sym)).repartition(2),
         root, "append", bloomCols = Seq("sym"))
     }
-    val probe = VersionedTable.scan(spark, root).filter(col("sym") === "BBB")
+    val probe = VersionedTable.read(spark, root).filter(col("sym") === "BBB")
     val (rows, files) = runAndCount(probe)
     assert(files === 2, s"blooms must dismiss the AAA and CCC dirs, got $files")
     assert(rows.size === 50 && rows.forall(_.getString(1) == "BBB"))
@@ -167,7 +157,7 @@ class ManifestIndexSpec extends SparkTestBase {
   test("untranslatable predicates are conservative: full scan, right answer") {
     val root = rangedTable()
     // abs(id) = 150 is not a dir-dismissible shape — every dir must survive
-    val probe = VersionedTable.scan(spark, root).filter(abs(col("id")) === 150L)
+    val probe = VersionedTable.read(spark, root).filter(abs(col("id")) === 150L)
     val (rows, files) = runAndCount(probe)
     assert(files === 6, "no translation -> no pruning")
     assert(rows.map(_.getLong(0)) === Seq(150L))
@@ -196,7 +186,7 @@ class ManifestIndexSpec extends SparkTestBase {
 
   test("catalog-table WHERE prunes through the same FileIndex (numFiles)") {
     // the SQL-catalog read path must plan through the SAME
-    // ManifestFileIndex as scan(): 2 of 6 files for the middle range
+    // ManifestFileIndex as read(): 2 of 6 files for the middle range
     val root = rangedTable()
     val sql = SqlCatalogSpec.session(spark)
     sql.sql(s"CREATE TABLE mfi_cat USING graft LOCATION '$root'")
@@ -214,13 +204,33 @@ class ManifestIndexSpec extends SparkTestBase {
       s"time-travel scan must carry v1's 2-file index, scanned $v1Files")
   }
 
-  test("scan with no filters equals the library read, same schema") {
+  test("read with no filters equals a plain parquet read of the snapshot dirs") {
     val root = rangedTable()
-    val viaScan = VersionedTable.scan(spark, root)
     val viaRead = VersionedTable.read(spark, root)
-    assert(viaScan.schema === viaRead.schema)
-    assert(viaScan.collect().map(_.getLong(0)).sorted
-      === viaRead.collect().map(_.getLong(0)).sorted)
+    val plain = spark.read.parquet(VersionedTable.snapshot(root, 3).dataDirs
+      .map(d => new java.io.File(root, d).getPath): _*)
+    assert(viaRead.schema === plain.schema)
+    assert(viaRead.collect().map(_.getLong(0)).sorted
+      === plain.collect().map(_.getLong(0)).sorted)
+  }
+
+  test("registry skipping queries scan as few files as the named dir filters did") {
+    // files each query's table scan read at sf0.001 when it named its dir
+    // filters by hand (q_versioned_filegrain: when its unix_micros filter
+    // translated to nothing); filters over read() must not widen that
+    val before = Seq("q_versioned_prune" -> 1, "q_versioned_point" -> 1,
+      "q_versioned_combo" -> 1, "q_versioned_analyze" -> 1,
+      "q_zorder_optimize" -> 2, "q_zorder_multi" -> 2,
+      "q_versioned_filegrain" -> 8)
+    for ((q, expected) <- before) {
+      val df = SparkEntry.queries(q)(spark, sf0001)
+      val files = scannedFiles(df)
+      assert(files.size <= expected, s"$q scanned ${files.size} files, $expected before")
+      assert(df.count() > 0, s"$q returned no rows")
+      val root = new org.apache.hadoop.fs.Path(files.head).getParent.getParent.getParent
+      val all = runAndCount(VersionedTable.read(spark, root.toUri.getPath))._2
+      assert(files.size < all, s"$q pruned nothing: ${files.size} of $all files")
+    }
   }
 
   // --- translation unit tests -------------------------------------------
@@ -278,7 +288,7 @@ class ManifestIndexSpec extends SparkTestBase {
 
   test("an OR of two ranges prunes to exactly the two matching dirs") {
     val root = rangedTable()
-    val probe = VersionedTable.scan(spark, root)
+    val probe = VersionedTable.read(spark, root)
       .filter(col("id") < 50L || col("id") >= 250L)
     val (rows, files) = runAndCount(probe)
     assert(files === 4, s"first and third dirs only, got $files")
@@ -292,7 +302,7 @@ class ManifestIndexSpec extends SparkTestBase {
         spark.range(0, 50).toDF("id").withColumn("sym", lit(sym)).repartition(2),
         root, "append", bloomCols = Seq("sym"))
     }
-    val probe = VersionedTable.scan(spark, root)
+    val probe = VersionedTable.read(spark, root)
       .filter(col("sym").isin("AAA", "CCC"))
     val (rows, files) = runAndCount(probe)
     assert(files === 4, s"the BBB dir must be dismissed, got $files")
@@ -326,12 +336,12 @@ class ManifestIndexSpec extends SparkTestBase {
         spark.range(0, 50).toDF("id").withColumn("sym", lit(sym)).repartition(2),
         root, "append", statsCols = Seq("sym")) // stats only — no sidecars
     }
-    val range = VersionedTable.scan(spark, root)
+    val range = VersionedTable.read(spark, root)
       .filter(col("sym") >= "B" && col("sym") <= "N")
     val (rRows, rFiles) = runAndCount(range)
     assert(rFiles === 2, s"only the MMM dir may be scanned, got $rFiles")
     assert(rRows.size === 50 && rRows.forall(_.getString(1) == "MMM"))
-    val point = VersionedTable.scan(spark, root).filter(col("sym") === "ZZZ")
+    val point = VersionedTable.read(spark, root).filter(col("sym") === "ZZZ")
     val (pRows, pFiles) = runAndCount(point)
     assert(pFiles === 2, s"image stats must dismiss AAA and MMM, got $pFiles")
     assert(pRows.size === 50 && pRows.forall(_.getString(1) == "ZZZ"))
@@ -360,7 +370,7 @@ class ManifestIndexSpec extends SparkTestBase {
         spark.range(0, 30).toDF("id").withColumn("sym", lit(sym)).repartition(2),
         root, "append", statsCols = Seq("sym"))
     }
-    val probe = VersionedTable.scan(spark, root).filter(col("sym").startsWith("MM"))
+    val probe = VersionedTable.read(spark, root).filter(col("sym").startsWith("MM"))
     val (rows, files) = runAndCount(probe)
     assert(files === 2, s"only the MMM dir may be scanned, got $files")
     assert(rows.size === 30 && rows.forall(_.getString(1) == "MMM"))
@@ -374,7 +384,7 @@ class ManifestIndexSpec extends SparkTestBase {
         spark.range(0, 20).toDF("id").withColumn("sym", lit(sym)).repartition(1),
         root, "append", statsCols = Seq("sym"))
     }
-    val probe = VersionedTable.scan(spark, root).filter(col("sym") === "PREFIX_B")
+    val probe = VersionedTable.read(spark, root).filter(col("sym") === "PREFIX_B")
     val (rows, files) = runAndCount(probe)
     assert(files === 2, "tied prefixes must both survive (conservative)")
     assert(rows.size === 20 && rows.forall(_.getString(1) == "PREFIX_B"))

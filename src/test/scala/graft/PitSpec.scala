@@ -32,7 +32,6 @@ class PitSpec extends SparkTestBase {
 
   test("versioned-table snapshot through the skipping tiers equals the full snapshot") {
     import graft.sources.VersionedTable
-    import graft.sources.VersionedTable.{PointFilter, RangeFilter}
     import org.apache.spark.sql.functions.unix_micros
     val root = java.nio.file.Files.createTempDirectory("graft_pitvt_").toString
     val t = trades.select(col("time"), col("symbol"), col("price"),
@@ -56,13 +55,28 @@ class PitSpec extends SparkTestBase {
       spark, VersionedTable.read(spark, root), "3", asOf).collect()(0)
     assert(viaVersioned === full,
       "skipping-tier snapshot must equal the full-table snapshot")
-    // and the access path really skips: the pruned frame touches only dir 1
-    val probe = VersionedTable.readFiltered(spark, root,
-      Seq(PointFilter("symbol", "3"),
-        RangeFilter("time", Double.NegativeInfinity, (t1 - 1).toDouble)))
-    val files = probe.inputFiles
+    // and the access path really skips: the PIT guard over the read
+    // touches only dir 1
+    val probe = VersionedTable.read(spark, root)
+      .filter(col("symbol") === "3" && col("time") <= lit(asOf))
+    val files = scannedFiles(probe)
     assert(files.nonEmpty && files.forall(_.contains("data/v00001")),
       s"PIT probe touched out-of-horizon dirs: ${files.mkString(",")}")
+  }
+
+  test("a symbol with no tick at or before as_of snapshots to one all-null row") {
+    // the q_pit_snapshot oracle's shape for an empty base: every aggregate
+    // CTE yields one NULL row, so the cross join is a single row carrying
+    // only the requested symbol and as-of time
+    val asOf = Timestamp.valueOf("2000-01-01 00:00:00")
+    val rows = PitSnapshot.snapshot(spark, trades, "3", asOf).collect()
+    assert(rows.length === 1)
+    val row = rows(0)
+    assert(row.getAs[String]("symbol") === "3")
+    assert(row.getAs[Timestamp]("as_of_ts") === asOf)
+    val features = row.schema.fieldNames.filterNot(Set("symbol", "as_of_ts"))
+    assert(features.filterNot(f => row.isNullAt(row.fieldIndex(f))).isEmpty,
+      s"non-null features on an empty history: ${row.mkString(",")}")
   }
 
   test("future as_of is rejected") {

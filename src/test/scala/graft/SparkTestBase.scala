@@ -13,6 +13,42 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = () // session shared; stopped by JVM exit
 
+  /** The versioned-table data scans in `df`'s executed plan, adaptive
+    * query stages included (deletion-vector sidecar scans excluded).
+    */
+  private def tableScans(df: DataFrame) =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+            if f.relation.location
+              .isInstanceOf[org.apache.spark.sql.graft.ManifestFileIndex] => f
+      }
+
+  /** Execute `df`; return its rows and the number of data files its table
+    * scans actually read (their `numFiles` metric). `inputFiles` cannot
+    * answer this for a `VersionedTable.read` frame: its index reports the
+    * unpruned universe.
+    */
+  def runAndCount(df: DataFrame): (Seq[org.apache.spark.sql.Row], Long) = {
+    val rows = df.collect().toSeq
+    val files = tableScans(df).map(_.metrics("numFiles").value)
+    assert(files.nonEmpty, "expected a versioned-table scan in the plan")
+    (rows, files.sum)
+  }
+
+  /** Execute `df` and return the data files its table scans read: each
+    * scan's index listed under the data filters Catalyst pushed at it,
+    * checked against the executed scans' file count.
+    */
+  def scannedFiles(df: DataFrame): Seq[String] = {
+    val (_, n) = runAndCount(df)
+    val paths = tableScans(df).flatMap(s =>
+      s.relation.location.listFiles(s.partitionFilters, s.dataFilters)
+        .flatMap(_.files.map(_.getPath.toString)))
+    assert(paths.size.toLong === n, s"listing disagrees with the executed scans: $paths")
+    paths
+  }
+
   /** The deterministic ramp fixture from the reference's correctness suite
     * (`tests/test_smartdb_correctness.py:50-62`): `n` ticks, one per minute,
     * price = 150 + 0.1·i.

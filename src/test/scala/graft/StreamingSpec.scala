@@ -528,6 +528,23 @@ class StreamingSpec extends SparkTestBase {
     assert(nFolded === subsetObsCount(fA) + subsetObsCount(fB))
   }
 
+  test("replayWidth sizes a plain path and a file: URI of one corpus alike") {
+    // a sparse 100 MB corpus: wide enough that a probe reading 0 bytes
+    // (the floor width 2) cannot pass for the real width
+    val dir = Files.createTempDirectory("graft_replay_width_")
+    val raf = new java.io.RandomAccessFile(dir.resolve("part-0.parquet").toFile, "rw")
+    try raf.setLength(100L * 1024 * 1024) finally raf.close()
+    val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val plain = registry.StreamQueries.replayWidth(spark, dir.toString)
+    assert(plain === math.max(2, math.min(sessionWidth, 4)))
+    assert(registry.StreamQueries.replayWidth(spark, dir.toUri.toString) === plain)
+    assert(registry.StreamQueries.replayWidth(spark, s"file:$dir") === plain)
+    // a probe that reads nothing fails instead of defaulting to the floor
+    val empty = Files.createTempDirectory("graft_replay_empty_")
+    intercept[IllegalArgumentException](
+      registry.StreamQueries.replayWidth(spark, empty.toUri.toString))
+  }
+
   // ---- transformWithState chaos: kill between batches, restore state ----
 
   /** RocksDB provider + replay conf around `body`, session conf restored. */

@@ -18,6 +18,10 @@ class VersionedTableSpec extends SparkTestBase {
     VersionedTable.read(spark, root, asOf)
       .select("id").collect().map(_.getLong(0)).toSet
 
+  /** Distinct data dirs the executed scans of `df` read. */
+  private def dirsScanned(df: org.apache.spark.sql.DataFrame): Int =
+    scannedFiles(df).map(_.replaceAll("/[^/]*$", "")).distinct.length
+
   test("append accumulates; every historical version stays exactly readable") {
     val root = freshRoot()
     val v1 = VersionedTable.commit(spark.range(0, 5).toDF("id"), root)
@@ -479,19 +483,17 @@ class VersionedTableSpec extends SparkTestBase {
       VersionedTable.fileGrainStats(root, snap, d).nonEmpty),
       "commits must also record per-file hulls (sidecar-referenced)")
     // a range inside the middle dir scans ONLY that dir
-    val pruned = VersionedTable.readPruned(spark, root, "id", 120.0, 180.0)
-    val files = pruned.inputFiles
+    val pruned = VersionedTable.read(spark, root).filter(col("id").between(120, 180))
+    val files = scannedFiles(pruned)
     assert(files.nonEmpty && files.forall(_.contains("data/v00002")),
       s"pruned scan touched non-matching dirs: ${files.mkString(",")}")
-    // and the pruned frame + predicate equals the plain filtered read
-    val got = pruned.filter(col("id").between(120, 180))
-      .collect().map(_.getLong(0)).toSet
-    assert(got === (120L to 180L).toSet)
+    // and the pruned frame equals the plain filtered read
+    assert(pruned.collect().map(_.getLong(0)).toSet === (120L to 180L).toSet)
     // a range touching two dirs keeps both, skips the third
-    val two = VersionedTable.readPruned(spark, root, "id", 90.0, 110.0).inputFiles
+    val two = scannedFiles(VersionedTable.read(spark, root).filter(col("id").between(90, 110)))
     assert(two.forall(f => f.contains("data/v00001") || f.contains("data/v00002")))
     // a range outside every dir yields an empty frame with the schema
-    val none = VersionedTable.readPruned(spark, root, "id", 1000.0, 2000.0)
+    val none = VersionedTable.read(spark, root).filter(col("id").between(1000, 2000))
     assert(none.columns.toSeq === Seq("id") && none.count() === 0L)
   }
 
@@ -500,10 +502,11 @@ class VersionedTableSpec extends SparkTestBase {
     VersionedTable.commit(spark.range(0, 100).toDF("id"), root) // NO stats
     VersionedTable.commit(spark.range(100, 200).toDF("id"), root, "append",
       statsCols = Seq("id"))
-    val pruned = VersionedTable.readPruned(spark, root, "id", 150.0, 160.0)
+    val pruned = VersionedTable.read(spark, root).filter(col("id").between(150, 160))
     // v2 intersects; v1 has no stats for id -> must be read anyway
-    assert(pruned.count() === 200L,
+    assert(scannedFiles(pruned).exists(_.contains("data/v00001")),
       "a statless dir was skipped — pruning must be conservative")
+    assert(pruned.count() === 11L)
     // timestamps record micros images
     val tsRoot = freshRoot()
     VersionedTable.commit(
@@ -526,16 +529,15 @@ class VersionedTableSpec extends SparkTestBase {
     // a point key in the middle dir: its dir survives; at least one
     // definitely-absent dir is skipped (bloom answers are deterministic
     // for a fixed corpus, and false positives only ever ADD dirs)
-    val pointed = VersionedTable.readPoint(spark, root, "id", 150L)
-    val files = pointed.inputFiles
+    val pointed = VersionedTable.read(spark, root).filter(col("id") === 150L)
+    val files = scannedFiles(pointed)
     assert(files.exists(_.contains("data/v00002")), "the containing dir must survive")
-    assert(files.length < VersionedTable.read(spark, root).inputFiles.length,
+    assert(files.length < scannedFiles(VersionedTable.read(spark, root)).length,
       s"no dir was bloom-skipped: ${files.mkString(",")}")
     // value-transparent: pruned + predicate == plain filter
-    assert(pointed.filter(col("id") === 150L).count() === 1L)
+    assert(pointed.count() === 1L)
     // an absent key prunes to an empty-or-small frame but NEVER loses rows
-    val absent = VersionedTable.readPoint(spark, root, "id", 99999L)
-    assert(absent.filter(col("id") === 99999L).count() === 0L)
+    assert(VersionedTable.read(spark, root).filter(col("id") === 99999L).count() === 0L)
     // string keys probe through mightContainString
     val sRoot = freshRoot()
     VersionedTable.commit(
@@ -544,8 +546,10 @@ class VersionedTableSpec extends SparkTestBase {
     VersionedTable.commit(
       spark.range(50, 100).selectExpr("concat('k', id) AS k"), sRoot,
       "append", bloomCols = Seq("k"))
-    val sPoint = VersionedTable.readPoint(spark, sRoot, "k", "k75")
-    assert(sPoint.filter(col("k") === "k75").count() === 1L)
+    val sPoint = VersionedTable.read(spark, sRoot).filter(col("k") === "k75")
+    assert(scannedFiles(sPoint).forall(_.contains("data/v00002")),
+      "the string probe must bloom-skip the dir without k75")
+    assert(sPoint.count() === 1L)
   }
 
   test("point reads are conservative: bloomless dirs always read; vacuum reaps sidecars") {
@@ -554,8 +558,8 @@ class VersionedTableSpec extends SparkTestBase {
     VersionedTable.commit(spark.range(100, 200).toDF("id"), root, "append",
       bloomCols = Seq("id"))
     // key lives in the bloomless dir: it must be read regardless
-    val pointed = VersionedTable.readPoint(spark, root, "id", 50L)
-    assert(pointed.filter(col("id") === 50L).count() === 1L,
+    val pointed = VersionedTable.read(spark, root).filter(col("id") === 50L)
+    assert(pointed.count() === 1L,
       "a bloomless dir was skipped — point reads must be conservative")
     // overwrite + vacuum: the dead dirs' sidecars die with them
     VersionedTable.commit(spark.range(200, 300).toDF("id"), root, "overwrite",
@@ -610,7 +614,6 @@ class VersionedTableSpec extends SparkTestBase {
   }
 
   test("composed skipping: a range∧point probe touches only dirs both tiers admit") {
-    import graft.sources.VersionedTable.{PointFilter, RangeFilter}
     val root = freshRoot()
     // 3 time-thirds x 2 key-halves = 6 dirs; id carries range stats, key a bloom
     def slice(lo: Long, hi: Long, half: Int) =
@@ -621,9 +624,9 @@ class VersionedTableSpec extends SparkTestBase {
       VersionedTable.commit(slice(third * 100, third * 100 + 100, half), root,
         "append", statsCols = Seq("id"), bloomCols = Seq("key"))
     // probe: middle third AND key 'g0' (only even ids carry g0)
-    val probed = VersionedTable.readFiltered(spark, root,
-      Seq(RangeFilter("id", 120.0, 180.0), PointFilter("key", "g0")))
-    val files = probed.inputFiles
+    val probed = VersionedTable.read(spark, root)
+      .filter(col("id").between(120, 180) && col("key") === "g0")
+    val files = scannedFiles(probed)
     // the range tier must dismiss the four off-third dirs...
     assert(files.nonEmpty && files.forall(f =>
       f.contains("data/v00003") || f.contains("data/v00004")),
@@ -631,31 +634,29 @@ class VersionedTableSpec extends SparkTestBase {
     // ...and the bloom tier the odd half (false positives only ever ADD dirs,
     // but a 100-key 1% bloom asked for a key it never saw is deterministic
     // for this fixed corpus and distinguishes the halves here)
-    assert(files.length < VersionedTable.read(spark, root).inputFiles.length / 2,
+    assert(files.length < scannedFiles(VersionedTable.read(spark, root)).length / 2,
       s"bloom tier skipped nothing: ${files.mkString(",")}")
-    // value-transparent: probed + exact predicates == plain filter
-    val got = probed.filter(col("id").between(120, 180) && col("key") === "g0")
-      .select("id").collect().map(_.getLong(0)).toSet
+    // value-transparent: probed == plain filter
+    val got = probed.select("id").collect().map(_.getLong(0)).toSet
     assert(got === (120L to 180L by 2).toSet)
-    // an impossible conjunction yields an empty frame with the full schema
-    val none = VersionedTable.readFiltered(spark, root,
-      Seq(RangeFilter("id", 5000.0, 6000.0), PointFilter("key", "g0")))
-    assert(none.columns.toSeq === Seq("id", "key") && none.count() === 0L)
+    // an impossible conjunction yields an empty frame with the full schema,
+    // scanning nothing
+    val none = VersionedTable.read(spark, root)
+      .filter(col("id").between(5000, 6000) && col("key") === "g0")
+    assert(none.columns.toSeq === Seq("id", "key") && scannedFiles(none).isEmpty)
   }
 
   test("a numeric point probe uses the min/max tier even without a bloom") {
-    import graft.sources.VersionedTable.PointFilter
     val root = freshRoot()
     VersionedTable.commit(spark.range(0, 100).toDF("id"), root, "append",
       statsCols = Seq("id"))
     VersionedTable.commit(spark.range(100, 200).toDF("id"), root, "append",
       statsCols = Seq("id"))
-    val probed = VersionedTable.readFiltered(spark, root,
-      Seq(PointFilter("id", 150L)))
-    val files = probed.inputFiles
+    val probed = VersionedTable.read(spark, root).filter(col("id") === 150L)
+    val files = scannedFiles(probed)
     assert(files.nonEmpty && files.forall(_.contains("data/v00002")),
       s"stats tier did not dismiss the off-range dir for a point: ${files.mkString(",")}")
-    assert(probed.filter(col("id") === 150L).count() === 1L)
+    assert(probed.count() === 1L)
   }
 
   test("keep-only pruned reads carry the union schema; empty keep reads no pruned dir") {
@@ -666,15 +667,16 @@ class VersionedTableSpec extends SparkTestBase {
       spark.range(100, 200).select(col("id"), (col("id") * 10).as("extra")),
       root, "append", statsCols = Seq("id"))
     // keep = v1 only; the widened column must still appear (null), not vanish
-    val kept = VersionedTable.readPruned(spark, root, "id", 10.0, 20.0)
+    val kept = VersionedTable.read(spark, root).filter(col("id").between(10, 20))
+    assert(scannedFiles(kept).forall(_.contains("data/v00001")))
     assert(kept.columns.toSeq === Seq("id", "extra"),
       "keep-only read dropped a column present only in a skipped dir")
     assert(kept.filter(col("id") === 15L).select("extra").head().isNullAt(0))
-    // empty keep: schema from ONE anchor footer, never a scan of every dir
-    val none = VersionedTable.readPruned(spark, root, "id", 9999.0, 99999.0)
+    // empty keep: schema from the manifest anchor, no file of any dir read
+    val none = VersionedTable.read(spark, root).filter(col("id").between(9999, 99999))
     assert(none.columns.toSeq === Seq("id", "extra") && none.count() === 0L)
-    assert(none.inputFiles.isEmpty,
-      "the empty-keep frame must not plan a scan over pruned dirs")
+    assert(scannedFiles(none).isEmpty,
+      "the empty-keep frame must not scan the pruned dirs")
   }
 
   test("idempotentCommit and compact thread bloom/stats sidecars through") {
@@ -1040,7 +1042,6 @@ class VersionedTableSpec extends SparkTestBase {
   }
 
   test("optimize: z-clustered rewrite is value-exact and prunes on BOTH dimensions") {
-    import graft.sources.VersionedTable.RangeFilter
     val root = freshRoot()
     // a 32x32 grid: clustering one dim linearly would leave the other
     // full-range in every dir
@@ -1060,24 +1061,20 @@ class VersionedTableSpec extends SparkTestBase {
     val snap = VersionedTable.history(root).last
     assert(snap.operation === "optimize" && snap.dataDirs.size === 16)
     // a small box probe on BOTH dims touches a small minority of dirs
-    val probe = VersionedTable.readFiltered(spark, root,
-      Seq(RangeFilter("x", 0, 7), RangeFilter("y", 0, 7)))
-    val touched = probe.inputFiles.map(_.replaceAll("/[^/]*$", "")).distinct
-    assert(touched.length <= 4,
-      s"z-layout should bound a both-dims box probe to <=4/16 dirs, touched ${touched.length}")
-    assert(probe.filter(col("x") <= 7 && col("y") <= 7)
-      .select("id").collect().map(_.getLong(0)).toSet ===
+    val probe = VersionedTable.read(spark, root).filter(col("x") <= 7 && col("y") <= 7)
+    val touched = dirsScanned(probe)
+    assert(touched <= 4,
+      s"z-layout should bound a both-dims box probe to <=4/16 dirs, touched $touched")
+    assert(probe.select("id").collect().map(_.getLong(0)).toSet ===
       (0L until 1024L).filter(i => i % 32 <= 7 && i / 32 <= 7).toSet)
     // and EACH single dimension alone still skips (the whole point vs a sort)
     for (dim <- Seq("x", "y")) {
-      val one = VersionedTable.readFiltered(spark, root, Seq(RangeFilter(dim, 0, 7)))
-      val t = one.inputFiles.map(_.replaceAll("/[^/]*$", "")).distinct.length
+      val t = dirsScanned(VersionedTable.read(spark, root).filter(col(dim).between(0, 7)))
       assert(t <= 8, s"single-dim probe on $dim touched $t/16 dirs — no clustering")
     }
   }
 
   test("optimizeZorder: THREE dims interleave; probes on any dim (and all) prune") {
-    import graft.sources.VersionedTable.RangeFilter
     val root = freshRoot()
     // a 16x16x16 grid — a 2-dim layout would leave the third dim
     // full-range in every dir
@@ -1097,16 +1094,14 @@ class VersionedTableSpec extends SparkTestBase {
     // 8 dirs = the top bit of EACH dim: a half-range probe on ANY single
     // dim dismisses half the dirs
     for (dim <- Seq("a", "b", "c")) {
-      val one = VersionedTable.readFiltered(spark, root, Seq(RangeFilter(dim, 0, 7)))
-      val t = one.inputFiles.map(_.replaceAll("/[^/]*$", "")).distinct.length
+      val t = dirsScanned(VersionedTable.read(spark, root).filter(col(dim).between(0, 7)))
       assert(t <= 4, s"single-dim probe on $dim touched $t/8 dirs — no 3-dim clustering")
     }
     // and the all-dims box probe pins exactly one dir
-    val box = VersionedTable.readFiltered(spark, root,
-      Seq(RangeFilter("a", 0, 7), RangeFilter("b", 0, 7), RangeFilter("c", 0, 7)))
-    assert(box.inputFiles.map(_.replaceAll("/[^/]*$", "")).distinct.length === 1,
-      "the 3-dim box probe must pin a single dir")
-    assert(box.filter(col("a") <= 7 && col("b") <= 7 && col("c") <= 7).count() === 512L)
+    val box = VersionedTable.read(spark, root)
+      .filter(col("a") <= 7 && col("b") <= 7 && col("c") <= 7)
+    assert(dirsScanned(box) === 1, "the 3-dim box probe must pin a single dir")
+    assert(box.count() === 512L)
     // 2-dim calls through the generalized path stay bit-identical to
     // morton16 (the layout contract q_zorder_optimize hashes against)
     import graft.operators.ZOrder
@@ -1122,13 +1117,11 @@ class VersionedTableSpec extends SparkTestBase {
   }
 
   test("analyze backfills skipping metadata in place; subscriptions cross it as a no-op") {
-    import graft.sources.VersionedTable.RangeFilter
     val root = freshRoot()
     VersionedTable.commit(spark.range(0, 50).toDF("id"), root)   // v1, no stats
     VersionedTable.commit(spark.range(50, 100).toDF("id"), root) // v2, no stats
     def dirsTouched(lo: Int, hi: Int): Int =
-      VersionedTable.readFiltered(spark, root, Seq(RangeFilter("id", lo, hi)))
-        .inputFiles.map(_.replaceAll("/[^/]*$", "")).distinct.length
+      dirsScanned(VersionedTable.read(spark, root).filter(col("id").between(lo, hi)))
     assert(dirsTouched(0, 9) === 2, "without stats every dir must be read (conservative)")
     val v = VersionedTable.analyze(spark, root, Seq("id"), Seq("id"))
     assert(v === 3)
@@ -1137,8 +1130,7 @@ class VersionedTableSpec extends SparkTestBase {
     assert(snap.dataDirs === VersionedTable.snapshot(root, 2).dataDirs,
       "analyze must reference the SAME dirs — zero data movement")
     assert(dirsTouched(0, 9) === 1, "backfilled min/max should prune the other dir")
-    assert(VersionedTable.readPoint(spark, root, "id", 5L)
-      .inputFiles.map(_.replaceAll("/[^/]*$", "")).distinct.length === 1,
+    assert(dirsScanned(VersionedTable.read(spark, root).filter(col("id") === 5L)) === 1,
       "backfilled bloom should prune the other dir on a point probe")
     // content identical at every version; the analyze version reads like v2
     assert(ids(root, Some(3)) === (0L until 100L).toSet)
@@ -1156,15 +1148,13 @@ class VersionedTableSpec extends SparkTestBase {
   }
 
   test("a second analyze is ADDITIVE: earlier columns' skipping metadata survives") {
-    import graft.sources.VersionedTable.RangeFilter
     val root = freshRoot()
     (0 to 1).foreach(i => VersionedTable.commit(
       spark.range(i * 50L, (i + 1) * 50L).toDF("a")
         .withColumn("b", col("a") + 1000L), root))
     VersionedTable.analyze(spark, root, Seq("a"), Seq("a"))
     def dirsTouched(c: String, lo: Int, hi: Int): Int =
-      VersionedTable.readFiltered(spark, root, Seq(RangeFilter(c, lo, hi)))
-        .inputFiles.map(_.replaceAll("/[^/]*$", "")).distinct.length
+      dirsScanned(VersionedTable.read(spark, root).filter(col(c).between(lo, hi)))
     assert(dirsTouched("a", 0, 9) === 1)
     // the r12 gap: analyzing b REPLACED the manifest's metadata wholesale,
     // silently degrading a's pruning — the retrofit must merge instead
@@ -1172,8 +1162,7 @@ class VersionedTableSpec extends SparkTestBase {
     assert(dirsTouched("b", 1000, 1009) === 1, "the new column prunes")
     assert(dirsTouched("a", 0, 9) === 1,
       "a retrofit for one column must not degrade previously-indexed columns")
-    assert(VersionedTable.readPoint(spark, root, "a", 5L)
-      .inputFiles.map(_.replaceAll("/[^/]*$", "")).distinct.length === 1,
+    assert(dirsScanned(VersionedTable.read(spark, root).filter(col("a") === 5L)) === 1,
       "earlier bloom sidecars must survive a later analyze")
   }
 
