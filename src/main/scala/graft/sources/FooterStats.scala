@@ -14,18 +14,18 @@ import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.types._
 
-/** Commit-time stats from parquet FOOTERS instead of a data re-scan.
+/** Data-dir stats from parquet FOOTERS instead of a data re-scan — the
+  * fast path of every dir measurement ([[VersionedTableOps]]'
+  * `measureDirs`: commits, DML rewrites, OPTIMIZE, ANALYZE).
   *
-  * After a commit writes its data dir, the manifest needs the batch row
-  * count and each indexed column's per-file min/max hull. The files just
-  * written already carry exactly those numbers in their row-group metadata:
-  * reading footers is O(files) small metadata reads, where the previous
-  * path paid a full second Spark job over the freshly written batch (the
-  * bench's `vt.commit.stats` phase — the single largest attributable kernel
-  * after the data write itself). This is the optimization guide's "remove
-  * passes" (§1.2) applied to the commit path; it is also exactly where
-  * Delta gets its per-file stats (collected at write time, never by
-  * re-scanning).
+  * A measured dir's manifest entry needs its row count and each indexed
+  * column's per-file min/max hull. The files already carry exactly those
+  * numbers in their row-group metadata: reading footers is O(files) small
+  * metadata reads, where the scan path pays a full Spark job over the dir
+  * (the bench's `vt.commit.stats` phase — the single largest attributable
+  * kernel after the data write itself). This is the optimization guide's
+  * "remove passes" (§1.2); it is also exactly where Delta gets its
+  * per-file stats (collected at write time, never by re-scanning).
   *
   * Exactness contract: a footer bound is used ONLY when it provably equals
   * what the scan-path aggregate would have computed under the manifest

@@ -47,15 +47,6 @@ class VersionedTableOps(val store: CommitStore,
 
   private def dataDir(root: String) = new File(root, "data")
 
-  /** Opt-in io/compute split of `vt.commit.write` (guide §1.4): when
-    * GRAFT_COMMIT_IO_DEBUG=1, every commit/stage write is preceded by a
-    * noop-sink execution of the same plan, recorded as
-    * `vt.commit.write.noop` — compute-only, so write − noop ≈ the
-    * FileFormatWriter/filesystem share. Doubles commit compute; never on
-    * in an official bench run.
-    */
-  private val commitIoDebug = sys.env.contains("GRAFT_COMMIT_IO_DEBUG")
-
   /** Wall clock for commit stamps and retention decisions — a seam so
     * tests drive time-based behavior (wall-clock VACUUM retention) with
     * controlled timestamps instead of sleeping.
@@ -468,8 +459,12 @@ class VersionedTableOps(val store: CommitStore,
     * They power [[read]]'s pruning: manifest-level data skipping, the Delta
     * data-skipping analogue with the stats in the commit log instead of a
     * sidecar — a pruned scan reads the manifest and the SURVIVING files
-    * only, never a footer of a skipped dir. Cost at commit:
-    * one small agg over the batch being written (it is in cache anyway).
+    * only, never a footer of a skipped dir. `commit` is [[stageDir]] (the
+    * write plus the one measurement kernel, [[measureDirs]]) followed by
+    * [[publish]]. Cost at commit: the write, O(files) footer reads for the
+    * row count and per-file hulls (one small agg over the fresh dir only
+    * when footers cannot prove them exact), and one bloom agg per
+    * `bloomCols` column.
     */
   def commit(df: DataFrame, root: String, mode: String = "append",
       expectedVersion: Option[Int] = None,
@@ -483,7 +478,6 @@ class VersionedTableOps(val store: CommitStore,
     val version = parent.getOrElse(0) + 1
     expectedVersion.filter(_ != version)
       .foreach(e => throw new CommitConflictException(e))
-    dataDir(root).mkdirs()
 
     // The snapshot's UNION schema is resolved BEFORE the data write: an
     // append on a column-mapped table must land its files under the
@@ -501,100 +495,11 @@ class VersionedTableOps(val store: CommitStore,
       .getOrElse(df.schema))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
 
-    // (1) data: an immutable dir unique to this ATTEMPT. Racing writers and
-    // crashed retries each write their own dir; only the manifest decides
-    // which one readers ever see.
-    val newDir = f"data/v$version%05d-${UUID.randomUUID().toString.take(8)}"
-    val dfPhys = toPhysical(df, snapSchema)
-    if (commitIoDebug) graft.BenchProbe.time("vt.commit.write.noop") {
-      // io/compute split for vt.commit.write: the noop sink executes the
-      // batch's full compute plan with zero filesystem work (guide §1.4),
-      // so `write - noop ≈ FileFormatWriter + fs`. Doubles the batch's
-      // compute, so OFF unless asked for (GRAFT_COMMIT_IO_DEBUG=1), like
-      // GRAFT_STREAM_DEBUG.
-      dfPhys.write.format("noop").mode("overwrite").save()
-    }
-    graft.BenchProbe.time("vt.commit.write") {
-      dfPhys.write.parquet(new File(root, newDir).getPath)
-    }
-    // Row count and per-file min/max hulls come from the parquet FOOTERS of
-    // the files just written — O(files) metadata reads instead of a second
-    // Spark job over the batch ([[FooterStats]], guide §1.2 "remove
-    // passes"). FooterStats' exactness contract makes this a pure fast
-    // path: anything it cannot prove exact (INT96 timestamps, NaN hulls,
-    // dropped chunk stats, exotic types) returns None and the original
-    // one-agg scan below runs instead. File-grain `fstats=` entries are
-    // what keep pruning tight on a FAT append (one dir, many files) — a
-    // 100 TB table's commit hulls never coarsen to the dir.
-    val dataFiles = data.list(root, newDir).filter(e => e.isFile &&
-      e.name.endsWith(".parquet") && !e.name.startsWith(".") &&
-      !e.name.startsWith("_")).map(_.name)
-    val physFor = snapSchema.fields
-      .map(f => f.name -> VersionedTable.physicalName(f)).toMap
-    val typeFor = snapSchema.fields.map(f => f.name -> f.dataType).toMap
-    val footer = graft.BenchProbe.time("vt.commit.stats") {
-      // the context's live conf, NOT newHadoopConf(): footer reads only
-      // READ the conf, and copying the full session conf per commit is
-      // measurable at streaming-sink commit rates
-      FooterStats.read(df.sparkSession.sparkContext.hadoopConfiguration,
-        new File(root, newDir), dataFiles, statsCols, physFor, typeFor)
-    }
-    // Scan-path read-back (bloom builder + stats fallback). Pins the
-    // writer's schema: no footer inference, and a zero-partition batch —
-    // which writes no part files at all — still reads as a schema-correct
-    // empty frame. Stats/bloom aggregates speak LOGICAL names (the
-    // manifest's space).
-    lazy val committed = toLogical(df.sparkSession.read.schema(dfPhys.schema)
-      .parquet(new File(root, newDir).getPath)
-      .withColumn("__file", col("_metadata.file_name")), snapSchema)
-    val (rows, fileStats) = footer match {
-      case Some((n, fs)) =>
-        (n, fs.map(s => DirStat(newDir, s.col, s.min, s.max, Some(s.file))))
-      case None =>
-        val statAggs = statsCols.flatMap { c =>
-          val probe = committed.schema(c).dataType match {
-            case TimestampType => unix_micros(col(c)) // micros < 2^53: double-exact
-            case StringType    => col(c) // min/max string; image computed driver-side
-            case _             => col(c).cast("double")
-          }
-          Seq(min(probe).as(s"__mn_$c"), max(probe).as(s"__mx_$c"))
-        }
-        val perFile = graft.BenchProbe.time("vt.commit.stats") { committed
-          .groupBy(col("__file")).agg(count(lit(1)).as("__n"), statAggs: _*)
-          .collect() }
-        (perFile.map(_.getAs[Long]("__n")).sum,
-          perFile.toSeq.flatMap { r =>
-            statsCols.flatMap { c =>
-              if (r.isNullAt(r.fieldIndex(s"__mn_$c"))) None // all-null file
-              else Some(DirStat(newDir, c, toDouble(r.getAs[Any](s"__mn_$c")),
-                toDouble(r.getAs[Any](s"__mx_$c")), Some(r.getAs[String]("__file"))))
-            }
-          })
-    }
-    val newStats = statsCols.flatMap { c =>
-      val fs = fileStats.filter(_.col == c)
-      if (fs.isEmpty) None // all-null or empty batch: no stats
-      else Some(DirStat(newDir, c, fs.map(_.min).min, fs.map(_.max).max))
-    } ++ fileStats
-
-    // Per-dir bloom sidecars: equality-predicate skipping where min/max
-    // stats can't help (a point key intersects every dir's range). Sidecars
-    // are DATA-plane files named by the attempt-unique dir — racing writers
-    // cannot collide, and nothing references a sidecar until the manifest
-    // publishes the `bloom=` line, so the same commit protocol covers them.
-    // Cost: one distributed bloom agg per column over the fresh dir. (r17
-    // measured a single-pass all-columns Catalyst aggregate here: its
-    // per-row interpreted update was ~2x stat.bloomFilter's tight RDD
-    // fold, eating the saved scan even at two columns — kept as-is.)
-    val newBlooms = bloomCols.map { c =>
-      val bf = graft.BenchProbe.time("vt.commit.bloom") {
-        committed.stat.bloomFilter(c, math.max(rows, 1L), bloomFpp)
-      }
-      val rel = s"_blooms/${new File(newDir).getName}_$c.bloom"
-      val os = data.create(root, rel)
-      try bf.writeTo(os) finally os.close()
-      DirBloom(newDir, c, rel)
-    }
+    // (1) data: an immutable dir unique to this ATTEMPT, measured by the
+    // one skipping-metadata kernel. Racing writers and crashed retries each
+    // write their own dir; only the manifest decides which one readers see.
+    val (newDir, rows, newStats, newBlooms) = stageDir(df, root, version,
+      statsCols, bloomCols, bloomFpp, snapSchema)
 
     val parentDirs = parentSnap.map(_.dataDirs).getOrElse(Seq.empty)
     val dirs = parentDirs :+ newDir
@@ -1358,9 +1263,10 @@ class VersionedTableOps(val store: CommitStore,
     * versions as additive no-ops (nothing was added), so a subscription is
     * never broken by a metadata backfill.
     *
-    * Cost: ONE union-tagged agg job over the snapshot for all dirs' stats
-    * (each dir's files scanned once, stats columns only) + one bloom agg
-    * per (dir, bloomCol). Metadata-plane throughout: no data is copied.
+    * Measured by [[measureDirs]], like every fresh dir. Cost: O(files)
+    * footer reads (plus ONE union-tagged agg job over the dirs whose
+    * footers cannot prove exact, stats columns only) + one bloom agg per
+    * (dir, bloomCol). Metadata-plane throughout: no data is copied.
     */
   def analyze(spark: SparkSession, root: String,
       statsCols: Seq[String],
@@ -1370,90 +1276,14 @@ class VersionedTableOps(val store: CommitStore,
       .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
     val version = parent + 1
     val snap = snapshot(root, parent)
-    // One job: every dir's rows tagged with their dir, grouped once.
-    // Mapped tables read under PHYSICAL names and rename (analyze's
-    // statsCols/bloomCols arrive logical, like every caller-facing name).
-    val anchorA = snapshotSchema(spark, root, snap)
-    def dirRead(d: String): DataFrame = {
-      val raw = (if (VersionedTable.isMapped(anchorA))
-        spark.read.schema(VersionedTable.physicalSchema(anchorA))
-          .parquet(new File(root, d).getPath)
-      else spark.read.parquet(new File(root, d).getPath))
-        .withColumn("__file", col("_metadata.file_name"))
-      if (VersionedTable.isMapped(anchorA)) toLogical(raw, anchorA) else raw
-    }
-    // FOOTER fast path first, per dir (same exactness contract as commit's
-    // — see [[FooterStats]]): stats + per-dir row counts come from O(files)
-    // metadata reads instead of the union-tagged agg job; any dir footers
-    // cannot prove exact drops the WHOLE call back to the scan below.
-    val physFor = anchorA.fields
-      .map(f => f.name -> VersionedTable.physicalName(f)).toMap
-    val typeFor = anchorA.fields.map(f => f.name -> f.dataType).toMap
-    val footerByDir: Option[Map[String, (Long, Seq[FooterStats.FileStat])]] =
-      snap.dataDirs.foldLeft(
-        Option(Map.empty[String, (Long, Seq[FooterStats.FileStat])])) { (acc, d) =>
-        acc.flatMap { m =>
-          val files = data.list(root, d).filter(e => e.isFile &&
-            e.name.endsWith(".parquet") && !e.name.startsWith(".") &&
-            !e.name.startsWith("_")).map(_.name)
-          FooterStats.read(spark.sparkContext.hadoopConfiguration,
-            new File(root, d), files, statsCols, physFor, typeFor)
-            .map(r => m + (d -> r))
-        }
-      }
-    // (fileStats, per-dir row counts) — footer-derived, or the original
-    // union-tagged agg at FILE grain (the ANALYZE retrofit gives an
-    // existing fat-dir table file-grain pruning with no rewrite, same
-    // fstats= discipline as fresh commits)
-    val (fileStats, rowsByDir) = footerByDir match {
-      case Some(byDir) =>
-        (snap.dataDirs.flatMap(d => byDir(d)._2.map(s =>
-          DirStat(d, s.col, s.min, s.max, Some(s.file)))),
-          byDir.map { case (d, (n, _)) => d -> n })
-      case None =>
-        val tagged = snap.dataDirs.map { d =>
-          dirRead(d)
-            .select((statsCols ++ bloomCols).distinct.map(col) :+ col("__file"): _*)
-            .withColumn("__dir", lit(d))
-        }.reduce(_ unionByName _)
-        val statAggs = statsCols.flatMap { c =>
-          val probe = tagged.schema(c).dataType match {
-            case TimestampType => unix_micros(col(c))
-            case StringType    => col(c) // min/max string; image computed driver-side
-            case _             => col(c).cast("double")
-          }
-          Seq(min(probe).as(s"__mn_$c"), max(probe).as(s"__mx_$c"))
-        }
-        val grouped = tagged.groupBy(col("__dir"), col("__file"))
-          .agg(count(lit(1)).as("__n"), statAggs: _*).collect()
-        (grouped.toSeq.flatMap { r =>
-          val d = r.getAs[String]("__dir")
-          statsCols.flatMap { c =>
-            if (r.isNullAt(r.fieldIndex(s"__mn_$c"))) None
-            else Some(DirStat(d, c, toDouble(r.getAs[Any](s"__mn_$c")),
-              toDouble(r.getAs[Any](s"__mx_$c")), Some(r.getAs[String]("__file"))))
-          }
-        }, grouped.toSeq.groupBy(_.getAs[String]("__dir"))
-          .map { case (d, rs) => d -> rs.map(_.getAs[Long]("__n")).sum })
-    }
-    val stats = fileStats.groupBy(s => (s.dir, s.col)).map { case ((d, c), fs) =>
-      DirStat(d, c, fs.map(_.min).min, fs.map(_.max).max)
-    }.toSeq ++ fileStats
-    val token = UUID.randomUUID().toString.take(8)
-    val blooms = snap.dataDirs.flatMap { d =>
-      val n = rowsByDir.getOrElse(d, 0L).max(1L)
-      lazy val dirDf = dirRead(d) // bloom-only; a stats-only analyze never scans
-      bloomCols.map { c =>
-        val bf = dirDf.stat.bloomFilter(c, math.max(n, 1L), bloomFpp)
-        // attempt-unique sidecar name: an analyze losing its race must not
-        // clobber a winner's sidecars (they are keyed dir+col in the
-        // manifest, so the fresh name is invisible until publish)
-        val rel = s"_blooms/${new File(d).getName}-$token-_$c.bloom"
-        val os = data.create(root, rel)
-        try bf.writeTo(os) finally os.close()
-        DirBloom(d, c, rel)
-      }
-    }
+    // the shared kernel over every live dir, pinned to the snapshot's
+    // anchor (statsCols/bloomCols arrive logical, like every caller-facing
+    // name); file-grain hulls give an existing fat-dir table file-grain
+    // pruning with no rewrite
+    val (_, stats, blooms) = measureDirs(spark, root,
+      snap.dataDirs.map(d => (d, statsCols, bloomCols)),
+      snapshotSchema(spark, root, snap), bloomFpp,
+      UUID.randomUUID().toString.take(8))
     try {
       // ADDITIVE backfill: the parent's skipping metadata for columns NOT
       // named in this call is carried forward — an analyze("b") on a table
@@ -1498,8 +1328,8 @@ class VersionedTableOps(val store: CommitStore,
     * sampled quantiles (see [[graft.operators.ZOrder.scaleTo16]]); they
     * drive the layout only and are not materialized. Cost: ONE shuffle of
     * the snapshot (hash on the dir assignment — the code's top bits — so no
-    * sampling pass) + a local sort per dir + one small grouped agg for the
-    * stats; the standard OPTIMIZE shape at 100 TB.
+    * sampling pass) + a local sort per dir + the new dirs' stats from
+    * their footers ([[measureDirs]]); the standard OPTIMIZE shape at 100 TB.
     */
   def optimize(spark: SparkSession, root: String,
       dimA: org.apache.spark.sql.Column, maxA: Long,
@@ -1605,92 +1435,31 @@ class VersionedTableOps(val store: CommitStore,
       data.promoteDir(root, s"$stagingRel/$srcName", rel)
       k -> rel
     }.toMap
-    def cleanup(): Unit = {
-      dirOf.values.foreach(d => data.deleteTree(root, d))
-      data.deleteTree(root, stagingRel)
-    }
     data.deleteTree(root, stagingRel)
-
+    val newDirs = dirOf.toSeq.sortBy(_._1).map(_._2)
+    // (2) stats and bloom sidecars from the shared kernel, which reads the
+    // promoted dirs (footers first) — never a second run of the z-code
+    // pipeline. The scoped rewrite's files carry the snapshot anchor's
+    // physical names; the full rewrite's carry the logical frame's.
+    val anchorZ =
+      if (scoped) anchorP
+      else VersionedTable.asNullable(current.schema)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val (rowsOf, stats, blooms) =
+      try measureDirs(spark, root, newDirs.map(d => (d, statsCols, bloomCols)),
+        anchorZ, bloomFpp, token)
+      catch { case e: Throwable =>
+        newDirs.foreach(d => data.deleteTree(root, d))
+        throw e
+      }
     try {
-      // (2) stats: from the promoted dirs' parquet FOOTERS when provably
-      // exact ([[FooterStats]]' contract), folding file hulls to the dir
-      // grain — which also skips a SECOND execution of the z-code pipeline
-      // (the fallback agg re-scans the scoped data to recompute __zdir per
-      // row). Fallback: the original ONE grouped agg over the laid frame.
-      val physForZ =
-        if (scoped) anchorP.fields
-          .map(f => f.name -> VersionedTable.physicalName(f)).toMap
-        else Map.empty[String, String]
-      val typeForZ = current.schema.fields.map(f => f.name -> f.dataType).toMap
-      val footerByDir: Option[Map[String, (Long, Seq[FooterStats.FileStat])]] =
-        dirOf.values.toSeq.sorted.foldLeft(
-          Option(Map.empty[String, (Long, Seq[FooterStats.FileStat])])) { (acc, d) =>
-          acc.flatMap { m =>
-            val files = data.list(root, d).filter(e => e.isFile &&
-              e.name.endsWith(".parquet") && !e.name.startsWith(".") &&
-              !e.name.startsWith("_")).map(_.name)
-            FooterStats.read(spark.sparkContext.hadoopConfiguration,
-              new File(root, d), files, statsCols, physForZ, typeForZ)
-              .map(r => m + (d -> r))
-          }
-        }
-      val (rows, stats, nOf) = footerByDir match {
-        case Some(byDir) =>
-          (byDir.values.map(_._1).sum,
-            byDir.toSeq.sortBy(_._1).flatMap { case (d, (_, fs)) =>
-              statsCols.flatMap { c =>
-                val cs = fs.filter(_.col == c)
-                if (cs.isEmpty) None
-                else Some(DirStat(d, c, cs.map(_.min).min, cs.map(_.max).max))
-              }
-            },
-            (d: String) => byDir.get(d).map(_._1).getOrElse(1L))
-        case None =>
-          val statAggs = statsCols.flatMap { c =>
-            val probe = current.schema(c).dataType match {
-              case TimestampType => unix_micros(col(c))
-              case StringType    => col(c) // min/max string; image computed driver-side
-              case _             => col(c).cast("double")
-            }
-            Seq(min(probe).as(s"__mn_$c"), max(probe).as(s"__mx_$c"))
-          }
-          val grouped = laid.groupBy(col("__zdir"))
-            .agg(count(lit(1)).as("__n"), statAggs: _*).collect()
-          (grouped.map(_.getAs[Long]("__n")).sum,
-            grouped.toSeq.flatMap { r =>
-              val d = dirOf(r.getAs[Long]("__zdir"))
-              statsCols.flatMap { c =>
-                if (r.isNullAt(r.fieldIndex(s"__mn_$c"))) None
-                else Some(DirStat(d, c, toDouble(r.getAs[Any](s"__mn_$c")),
-                  toDouble(r.getAs[Any](s"__mx_$c"))))
-              }
-            },
-            (d: String) => grouped.find(r => dirOf(r.getAs[Long]("__zdir")) == d)
-              .map(_.getAs[Long]("__n")).getOrElse(1L))
-      }
-      // (3) bloom sidecars per promoted dir (data-plane, attempt-named).
-      val blooms = dirOf.toSeq.sortBy(_._1).flatMap { case (_, d) =>
-        val dirRaw = spark.read.parquet(new File(root, d).getPath)
-        val dirDf =
-          if (scoped && VersionedTable.isMapped(anchorP))
-            toLogical(dirRaw, anchorP)
-          else dirRaw
-        bloomCols.map { c =>
-          val bf = dirDf.stat.bloomFilter(c, math.max(nOf(d), 1L), bloomFpp)
-          val rel = s"_blooms/${new File(d).getName}_$c.bloom"
-          val os = data.create(root, rel)
-          try bf.writeTo(os) finally os.close()
-          DirBloom(d, c, rel)
-        }
-      }
-      // (4) the commit point. Operation `optimize` = content-preserving
+      // (3) the commit point. Operation `optimize` = content-preserving
       // re-layout (dataChange=false): subscriptions cross it untouched.
-      val newDirs = dirOf.toSeq.sortBy(_._1).map(_._2)
       if (!scoped) {
-        publish(root, version, parent, "optimize", rows, current.columns.toSeq,
-          newDirs, stats, blooms,
+        publish(root, version, parent, "optimize", rowsOf.values.sum,
+          current.columns.toSeq, newDirs, stats, blooms,
           snapP.txns, // layout ops never forget writer marks
-          Some(VersionedTable.asNullable(current.schema).json))
+          Some(anchorZ.json))
         version
       } else {
         // scoped: dismissed dirs carried by name with their stats/blooms
@@ -1708,8 +1477,8 @@ class VersionedTableOps(val store: CommitStore,
       }
     } catch {
       case e: Throwable =>
-        cleanup()
-        deleteAttemptBlooms(root, token)
+        newDirs.foreach(d => data.deleteTree(root, d))
+        blooms.foreach(b => data.deleteFile(root, b.path))
         throw e
     }
   }
@@ -1874,99 +1643,150 @@ class VersionedTableOps(val store: CommitStore,
     -1 // unreachable
   }
 
-  /** Delete this attempt's bloom sidecars (conflict cleanup). */
-  private def deleteAttemptBlooms(root: String, token: String): Unit =
-    data.list(root, "_blooms")
-      .filter(e => e.isFile && e.name.contains(s"-$token-"))
-      .foreach(e => data.deleteFile(root, s"_blooms/${e.name}"))
-
-  /** Write `df` as a fresh attempt-unique data dir with its manifest
-    * metadata (row count, min/max stats, bloom sidecars). Nothing
+  /** Write `df` as a fresh attempt-unique data dir under `anchor`'s
+    * physical names and measure it with [[measureDirs]]: returns (dir,
+    * row count, dir- and file-grain stats, bloom sidecars). Nothing
     * references the dir until the caller publishes; on a lost race the
-    * caller deletes it. The staging primitive of the DML paths.
+    * caller deletes it and its sidecars. The staging primitive of
+    * [[commit]], compaction and the DML paths.
     */
   private def stageDir(df: DataFrame, root: String, version: Int,
       statsCols: Seq[String], bloomCols: Seq[String], bloomFpp: Double,
-      anchor: org.apache.spark.sql.types.StructType = null):
+      anchor: org.apache.spark.sql.types.StructType):
       (String, Long, Seq[DirStat], Seq[DirBloom]) = {
     dataDir(root).mkdirs()
-    val dirRel = f"data/v$version%05d-${UUID.randomUUID().toString.take(8)}"
-    // column-mapped tables land files under PHYSICAL names (anchor =
-    // the snapshot schema whose mapping governs this dir)
-    val dfPhys = if (anchor == null) df else toPhysical(df, anchor)
-    if (commitIoDebug) graft.BenchProbe.time("vt.commit.write.noop") {
-      // see the identical block in [[commit]] — env-gated io/compute split
-      dfPhys.write.format("noop").mode("overwrite").save()
-    }
+    val token = UUID.randomUUID().toString.take(8)
+    val dirRel = f"data/v$version%05d-$token"
     graft.BenchProbe.time("vt.commit.write") {
-      dfPhys.write.parquet(new File(root, dirRel).getPath)
+      toPhysical(df, anchor).write.parquet(new File(root, dirRel).getPath)
     }
-    // Footer-derived stats first (exact or not at all — see FooterStats and
-    // the same block in [[commit]]); the scan below is the fallback.
-    val anchorSchema = if (anchor == null) df.schema else anchor
-    val physFor = anchorSchema.fields
+    val (rows, stats, blooms) =
+      try measureDirs(df.sparkSession, root, Seq((dirRel, statsCols, bloomCols)),
+        anchor, bloomFpp, token)
+      catch { case e: Throwable => data.deleteTree(root, dirRel); throw e }
+    (dirRel, rows(dirRel), stats, blooms)
+  }
+
+  /** The one skipping-metadata kernel: measure data dirs — freshly written
+    * by a commit, DML rewrite or OPTIMIZE, or existing ones an ANALYZE
+    * backfills — each as `(dir, statsCols, bloomCols)`, all under the
+    * schema `anchor` that governs their files. Returns per-dir row counts,
+    * stats at dir AND file grain (the file hulls feed `fstats` sidecars,
+    * the dir hull is their fold), and one bloom sidecar per (dir, bloom
+    * column).
+    *
+    *   - Part files are listed once per dir.
+    *   - Row counts and hulls come from the parquet FOOTERS first
+    *     ([[FooterStats]]: O(files) metadata reads, exact or not at all).
+    *   - Dirs whose footers cannot prove exact (INT96 timestamps, NaN
+    *     hulls, a column a file lacks, ...) share ONE union-tagged agg
+    *     grouped by (dir, file).
+    *   - Every read-back is pinned to the anchor's physical schema and
+    *     renamed to logical names: nothing infers a schema from footers,
+    *     a dir predating a column reads it null-filled, and a zero-file
+    *     dir reads as a schema-correct empty frame.
+    *   - Sidecars are named `_blooms/<dirBase>-<token>-_<col>.bloom`:
+    *     attempt-unique (a losing racer never clobbers a winner's sidecar,
+    *     even when both measure the same existing dir) and prefixed by the
+    *     dir name, which is how [[vacuum]] reaps them with their dir.
+    *
+    * Sidecars written before a failure are deleted before rethrowing;
+    * after a successful return the caller owns them.
+    */
+  private def measureDirs(spark: SparkSession, root: String,
+      dirs: Seq[(String, Seq[String], Seq[String])],
+      anchor: org.apache.spark.sql.types.StructType, bloomFpp: Double,
+      token: String): (Map[String, Long], Seq[DirStat], Seq[DirBloom]) = {
+    val readSchema =
+      if (VersionedTable.isMapped(anchor)) VersionedTable.physicalSchema(anchor)
+      else anchor
+    def readBack(d: String): DataFrame = toLogical(spark.read.schema(readSchema)
+      .parquet(new File(root, d).getPath)
+      .withColumn("__file", col("_metadata.file_name")), anchor)
+    val physFor = anchor.fields
       .map(f => f.name -> VersionedTable.physicalName(f)).toMap
-    val typeFor = anchorSchema.fields.map(f => f.name -> f.dataType).toMap
-    val dataFiles = data.list(root, dirRel).filter(e => e.isFile &&
-      e.name.endsWith(".parquet") && !e.name.startsWith(".") &&
-      !e.name.startsWith("_")).map(_.name)
-    val footer = graft.BenchProbe.time("vt.commit.stats") {
+    val typeFor = anchor.fields.map(f => f.name -> f.dataType).toMap
+    // bloom columns are hulled too: a column with no hull holds no
+    // non-null value, and its sidecar is the empty filter (no agg job)
+    val hullCols = dirs.map { case (d, sc, bc) => d -> (sc ++ bc).distinct }.toMap
+    // per dir: (rows, file-grain hulls)
+    val measured: Map[String, (Long, Seq[DirStat])] =
+        graft.BenchProbe.time("vt.commit.stats") {
       // the context's live conf, NOT newHadoopConf(): footer reads only
       // READ the conf, and copying the full session conf per commit is
       // measurable at streaming-sink commit rates
-      FooterStats.read(df.sparkSession.sparkContext.hadoopConfiguration,
-        new File(root, dirRel), dataFiles, statsCols, physFor, typeFor)
-    }
-    // schema-pinned read-back, like commit's: no footer inference, and a
-    // zero-partition write (no part files) reads as schema-correct empty;
-    // stats/bloom aggregates speak LOGICAL names
-    lazy val committed = {
-      val committedPhysF = df.sparkSession.read.schema(dfPhys.schema)
-        .parquet(new File(root, dirRel).getPath)
-        .withColumn("__file", col("_metadata.file_name"))
-      if (anchor == null) committedPhysF else toLogical(committedPhysF, anchor)
-    }
-    val (rows, fileStats) = footer match {
-      case Some((n, fs)) =>
-        (n, fs.map(s => DirStat(dirRel, s.col, s.min, s.max, Some(s.file))))
-      case None =>
-        val statAggs = statsCols.flatMap { c =>
-          val probe = committed.schema(c).dataType match {
-            case TimestampType => unix_micros(col(c))
-            case StringType    => col(c) // min/max string; image computed driver-side
-            case _             => col(c).cast("double")
-          }
-          Seq(min(probe).as(s"__mn_$c"), max(probe).as(s"__mx_$c"))
-        }
-        // grouped by file, folded to the dir hull driver-side — same
-        // per-file discipline as commit's (see the fstats= note there)
-        val perFile = graft.BenchProbe.time("vt.commit.stats") {
-          committed.groupBy(col("__file"))
-            .agg(count(lit(1)).as("__n"), statAggs: _*).collect() }
-        (perFile.map(_.getAs[Long]("__n")).sum,
-          perFile.toSeq.flatMap { r =>
-            statsCols.flatMap { c =>
-              if (r.isNullAt(r.fieldIndex(s"__mn_$c"))) None
-              else Some(DirStat(dirRel, c, toDouble(r.getAs[Any](s"__mn_$c")),
+      val footers = dirs.map { case (d, _, _) =>
+        val files = data.list(root, d).filter(e => e.isFile &&
+          e.name.endsWith(".parquet") && !e.name.startsWith(".") &&
+          !e.name.startsWith("_")).map(_.name)
+        d -> FooterStats.read(spark.sparkContext.hadoopConfiguration,
+          new File(root, d), files, hullCols(d), physFor, typeFor)
+      }
+      val fromFooters = footers.collect { case (d, Some((n, fs))) =>
+        d -> (n, fs.map(s => DirStat(d, s.col, s.min, s.max, Some(s.file))))
+      }.toMap
+      val fallback = footers.collect { case (d, None) => d }
+      if (fallback.isEmpty) fromFooters
+      else {
+        val cols = fallback.flatMap(hullCols).distinct
+        val tagged = fallback.map(d => readBack(d)
+          .select(cols.map(col) :+ col("__file"): _*)
+          .withColumn("__dir", lit(d))).reduce(_ union _)
+        val aggs = cols.flatMap(c => Seq(
+          min(statProbe(anchor(c).dataType, c)).as(s"__mn_$c"),
+          max(statProbe(anchor(c).dataType, c)).as(s"__mx_$c")))
+        val perFile = tagged.groupBy(col("__dir"), col("__file"))
+          .agg(count(lit(1)).as("__n"), aggs: _*).collect().toSeq
+        fromFooters ++ fallback.map { d =>
+          val rs = perFile.filter(_.getAs[String]("__dir") == d)
+          d -> (rs.map(_.getAs[Long]("__n")).sum, rs.flatMap { r =>
+            hullCols(d).flatMap { c =>
+              if (r.isNullAt(r.fieldIndex(s"__mn_$c"))) None // all-null file
+              else Some(DirStat(d, c, toDouble(r.getAs[Any](s"__mn_$c")),
                 toDouble(r.getAs[Any](s"__mx_$c")), Some(r.getAs[String]("__file"))))
             }
           })
-    }
-    val stats = statsCols.flatMap { c =>
-      val fs = fileStats.filter(_.col == c)
-      if (fs.isEmpty) None
-      else Some(DirStat(dirRel, c, fs.map(_.min).min, fs.map(_.max).max))
-    } ++ fileStats
-    val blooms = bloomCols.map { c =>
-      val bf = graft.BenchProbe.time("vt.commit.bloom") {
-        committed.stat.bloomFilter(c, math.max(rows, 1L), bloomFpp)
+        }
       }
-      val rel = s"_blooms/${new File(dirRel).getName}_$c.bloom"
-      val os = data.create(root, rel)
-      try bf.writeTo(os) finally os.close()
-      DirBloom(dirRel, c, rel)
     }
-    (dirRel, rows, stats, blooms)
+    // dir hull = fold of the file hulls; an all-null or empty dir has none
+    val stats = dirs.flatMap { case (d, sc, _) =>
+      val fs = measured(d)._2.filter(s => sc.contains(s.col))
+      sc.flatMap { c =>
+        val cs = fs.filter(_.col == c)
+        if (cs.isEmpty) None
+        else Some(DirStat(d, c, cs.map(_.min).min, cs.map(_.max).max))
+      } ++ fs
+    }
+    // Bloom sidecars: equality skipping where min/max cannot help (a point
+    // key intersects every dir's range). One distributed agg per (dir,
+    // column), sized from the dir's row count. (r17 measured a single-pass
+    // all-columns Catalyst aggregate here: its per-row interpreted update
+    // was ~2x the per-column sketch's tight RDD fold — kept per column.)
+    val written = Seq.newBuilder[DirBloom]
+    try {
+      dirs.foreach { case (d, _, bcols) =>
+        lazy val dirDf = readBack(d) // a stats-only measurement never scans
+        val (rows, hulls) = measured(d)
+        bcols.foreach { c =>
+          val n = math.max(rows, 1L)
+          val bf =
+            if (!hulls.exists(_.col == c))
+              org.apache.spark.util.sketch.BloomFilter.create(n, bloomFpp)
+            else graft.BenchProbe.time("vt.commit.bloom") {
+              dirDf.stat.bloomFilter(c, n, bloomFpp)
+            }
+          val rel = s"_blooms/${new File(d).getName}-$token-_$c.bloom"
+          val os = data.create(root, rel)
+          written += DirBloom(d, c, rel)
+          try bf.writeTo(os) finally os.close()
+        }
+      }
+    } catch { case e: Throwable =>
+      written.result().foreach(b => data.deleteFile(root, b.path))
+      throw e
+    }
+    (measured.map { case (d, (n, _)) => d -> n }, stats, written.result())
   }
 
   /** Per-dir indexing discipline recorded in the parent snapshot — a
@@ -2123,16 +1943,18 @@ class VersionedTableOps(val store: CommitStore,
     * basenames) lands as a single `partitionBy("__dir")` write into an
     * attempt-unique staging tree, and each partition dir is promoted —
     * same-filesystem rename — to a first-class data dir. Every rewritten
-    * dir inherits its predecessor's stats/bloom discipline: min/max come
-    * from ONE grouped agg over the promoted files, bloom sidecars are
-    * re-derived per inherited (dir, column). Nothing references the new
-    * dirs until the caller's manifest publishes; on ANY failure in here
-    * the promotions are rolled back before rethrowing, and the caller
-    * deletes them (plus sidecars) if its publish loses the race.
+    * dir inherits its predecessor's stats/bloom discipline and is measured
+    * by [[measureDirs]]: dir- and file-grain hulls from the promoted
+    * files' footers, bloom sidecars re-derived per inherited (dir, column).
+    * Nothing references the new dirs until the caller's manifest
+    * publishes; on ANY failure in here the promotions are rolled back
+    * before rethrowing, and the caller deletes them (plus sidecars) if its
+    * publish loses the race.
     *
     * Returns (oldDirRel -> newDirRel, stats, blooms). Cost for K touched
-    * dirs: 1 write job + 1 stats agg job + one bloom agg per inherited
-    * (dir, bloomCol) — never O(K) count/rewrite jobs.
+    * dirs: 1 write job + O(files) footer reads (plus 1 stats agg job over
+    * the dirs whose footers cannot prove exact) + one bloom agg per
+    * inherited (dir, bloomCol) — never O(K) count/rewrite jobs.
     */
   private def stageRewrites(spark: SparkSession, rewrite: DataFrame,
       root: String, version: Int, snap: Snapshot,
@@ -2142,7 +1964,6 @@ class VersionedTableOps(val store: CommitStore,
     val token = UUID.randomUUID().toString.take(8)
     val staging = new File(root, s"data/.rewrite-$token")
     val promoted = Seq.newBuilder[String]
-    val sidecars = Seq.newBuilder[String]
     try {
       // (1) ONE job writes every replacement dir (dir-per-partition).
       toPhysical(rewrite, anchor).write.partitionBy("__dir")
@@ -2161,55 +1982,15 @@ class VersionedTableOps(val store: CommitStore,
       }.toMap
       if (newByOld.isEmpty) return (Map.empty, Seq.empty, Seq.empty)
 
-      // (2) inherited disciplines, and ONE grouped agg for all dirs' stats.
-      val metaOf = newByOld.map { case (old, rel) => rel -> dirMetaCols(snap, old) }
-      val statsColsAll = metaOf.values.flatMap(_._1).toSeq.distinct
-      val bloomColsAll = metaOf.values.flatMap(_._2).toSeq.distinct
-      val needAgg = statsColsAll.nonEmpty || bloomColsAll.nonEmpty
-      val rbSchema =
-        if (VersionedTable.isMapped(anchor)) VersionedTable.physicalSchema(anchor)
-        else anchor
-      val taggedNew =
-        if (!needAgg) null
-        else newByOld.values.toSeq.sorted.map { rel =>
-          toLogical(spark.read.schema(rbSchema)
-            .parquet(new File(root, rel).getPath), anchor)
-            .withColumn("__dir", lit(rel))
-        }.reduce(_ union _)
-      val statAggs = statsColsAll.flatMap(c => Seq(
-        min(statProbe(anchor(c).dataType, c)).as(s"__mn_$c"),
-        max(statProbe(anchor(c).dataType, c)).as(s"__mx_$c")))
-      val grouped =
-        if (!needAgg) Array.empty[org.apache.spark.sql.Row]
-        else taggedNew.groupBy(col("__dir"))
-          .agg(count(lit(1)).as("__n"), statAggs: _*).collect()
-      val stats = grouped.toSeq.flatMap { r =>
-        val rel = r.getAs[String]("__dir")
-        metaOf(rel)._1.flatMap { c =>
-          if (r.isNullAt(r.fieldIndex(s"__mn_$c"))) None
-          else Some(DirStat(rel, c, toDouble(r.getAs[Any](s"__mn_$c")),
-            toDouble(r.getAs[Any](s"__mx_$c"))))
-        }
-      }
-      // (3) sidecars per inherited (dir, bloomCol).
-      val blooms = metaOf.toSeq.sortBy(_._1).flatMap { case (rel, (_, bcols)) =>
-        val n = grouped.find(_.getAs[String]("__dir") == rel)
-          .map(_.getAs[Long]("__n")).getOrElse(1L)
-        val dirDf = toLogical(spark.read.schema(rbSchema)
-          .parquet(new File(root, rel).getPath), anchor)
-        bcols.map { c =>
-          val bf = dirDf.stat.bloomFilter(c, math.max(n, 1L), bloomFpp)
-          val path = s"_blooms/${new File(rel).getName}_$c.bloom"
-          val os = data.create(root, path)
-          try bf.writeTo(os) finally os.close()
-          sidecars += path
-          DirBloom(rel, c, path)
-        }
-      }
+      // (2) inherited disciplines, measured by the shared kernel.
+      val (_, stats, blooms) = measureDirs(spark, root,
+        newByOld.toSeq.map { case (old, rel) =>
+          val (sc, bc) = dirMetaCols(snap, old)
+          (rel, sc, bc)
+        }.sortBy(_._1), anchor, bloomFpp, token)
       (newByOld, stats, blooms)
     } catch { case e: Throwable =>
       promoted.result().foreach(d => data.deleteTree(root, d))
-      sidecars.result().foreach(p => data.deleteFile(root, p))
       throw e
     } finally data.deleteTree(root, s"data/.rewrite-$token")
   }
@@ -3195,11 +2976,11 @@ class VersionedTableOps(val store: CommitStore,
       data.deleteTree(root, d)
       !data.exists(root, d) // report only what actually died
     }
-    // A dead dir's bloom sidecars die with it (they are named by the dir —
-    // commit writes `<dir>_<col>.bloom`, analyze `<dir>-<token>-_<col>.bloom`
-    // — so orphaned sidecars are exactly the ones whose dir-name prefix is
-    // gone; dir names can't prefix each other within a version, each carries
-    // its own random token).
+    // A dead dir's bloom sidecars die with it: [[measureDirs]] names every
+    // sidecar `<dir>-<token>-_<col>.bloom` (older tables also hold the
+    // former `<dir>_<col>.bloom`), so orphaned sidecars are exactly the
+    // ones whose dir-name prefix is gone; dir names can't prefix each other
+    // within a version, each carries its own random token.
     deleted.foreach { d =>
       val prefix = new File(d).getName
       data.list(root, "_blooms").filter(_.name.startsWith(prefix))

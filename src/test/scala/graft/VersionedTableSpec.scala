@@ -1166,6 +1166,25 @@ class VersionedTableSpec extends SparkTestBase {
       "earlier bloom sidecars must survive a later analyze")
   }
 
+  test("analyze on an additively evolved table measures a column older dirs lack") {
+    val root = freshRoot()
+    VersionedTable.commit(spark.range(0, 50).toDF("id"), root) // v1: {id}
+    VersionedTable.commit(spark.range(50, 100).toDF("id")      // v2: {id, extra}
+      .withColumn("extra", col("id") * 10L), root)
+    // the v1 dir has no `extra` column: its read-back must serve it
+    // null-filled under the snapshot anchor, never infer a schema without it
+    VersionedTable.analyze(spark, root, statsCols = Seq("extra"),
+      bloomCols = Seq("extra"))
+    val snap = VersionedTable.snapshot(root, 3)
+    val newer = VersionedTable.snapshot(root, 2).dataDirs.last
+    assert(snap.dirStats.filter(s => s.col == "extra" && s.file.isEmpty)
+      .map(s => (s.dir, s.min, s.max)) === Seq((newer, 500.0, 990.0)),
+      "only the dir holding `extra` values gets a hull")
+    def probe = VersionedTable.read(spark, root).filter(col("extra") === 730L)
+    assert(probe.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((73L, 730L)))
+    assert(dirsScanned(probe) === 1, "the older all-null dir must be skipped")
+  }
+
   test("transactional commit: replays absorbed, foreign commits interleave, apps independent") {
     val root = freshRoot()
     VersionedTable.commit(spark.range(0, 5).toDF("id"), root) // pre-seeded table
