@@ -188,17 +188,16 @@ object PitSnapshot {
       max_by(col("low"), col("bucket")).as("low"),
       max_by(col("close"), col("bucket")).as("close"))
 
-    // ONE top-20 frame feeds SMA-20, the raw SMA the regime tag compares
-    // against, and the EWM-12 fold (last 12 of the ascending-sorted 20) —
-    // three of the reference's nine lookups collapsed into a single
+    // ONE top-20 frame feeds SMA-20 (which the regime tag also compares
+    // against) and the EWM-12 fold (last 12 of the ascending-sorted 20) —
+    // two of the reference's nine lookups collapsed into a single
     // order-limit aggregate, trimming cold-plan stages (serving latency is
     // made of stage scheduling, not data volume, at snapshot cardinality).
     val topk = base.orderBy(col("time").desc).limit(20)
       .agg(
         Quantize.r(avg(col("price")), 6).as("sma_20"),
-        avg(col("price")).as("sma_raw"),
         sort_array(collect_list(struct(col("time"), col("price")))).as("tp"))
-      .select(col("sma_20"), col("sma_raw"),
+      .select(col("sma_20"),
         Quantize.r(Ewm.ewmOverArray(expr(
           "transform(slice(tp, greatest(1, size(tp) - 11), 12), x -> x.price)")), 6)
           .as("ewm_12"))
@@ -250,8 +249,8 @@ object PitSnapshot {
         col("large_trade_flag"), col("percentile_95"),
         col("bid"), col("ask"), col("bidask_spread"),
         col("trade_imbalance_5m"),
-        when(col("last_price") > col("sma_raw"), "up")
-          .when(col("last_price") < col("sma_raw"), "down")
+        when(col("last_price") > col("sma_20"), "up")
+          .when(col("last_price") < col("sma_20"), "down")
           .when(col("last_price").isNotNull, "neutral").as("regime_tag"))
   }
 }

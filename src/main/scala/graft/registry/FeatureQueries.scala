@@ -542,13 +542,13 @@ object FeatureQueries {
         |FROM trades WHERE bid IS NOT NULL AND ask IS NOT NULL""".stripMargin),
 
     "q_regime" -> withTrades(
-      """SELECT time, symbol, price, floor((sma) * 1e6 + 0.5) / 1e6 AS sma_20,
-        |       CASE WHEN price > sma THEN 'up' WHEN price < sma THEN 'down'
+      """SELECT time, symbol, price, sma_20,
+        |       CASE WHEN price > sma_20 THEN 'up' WHEN price < sma_20 THEN 'down'
         |            ELSE 'neutral' END AS regime_tag
         |FROM (
         |  SELECT time, symbol, price,
-        |         avg(price) OVER (PARTITION BY symbol ORDER BY time
-        |             ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS sma
+        |         floor((avg(price) OVER (PARTITION BY symbol ORDER BY time
+        |             ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)) * 1e6 + 0.5) / 1e6 AS sma_20
         |  FROM trades)""".stripMargin),
 
     "q_large_trades" -> withTrades(
@@ -972,8 +972,6 @@ object FeatureQueries {
        |        FROM base GROUP BY 1)),
        |sma AS (SELECT floor((avg(price)) * 1e6 + 0.5) / 1e6 AS sma_20
        |        FROM (SELECT price FROM base ORDER BY time DESC LIMIT 20)),
-       |sma_raw AS (SELECT avg(price) AS sma_raw
-       |        FROM (SELECT price FROM base ORDER BY time DESC LIMIT 20)),
        |ewm AS (SELECT floor((list_reduce(list(price ORDER BY time),
        |               (acc, x) -> CAST(0.85 AS DOUBLE) * acc + CAST(0.15 AS DOUBLE) * x)) * 1e6 + 0.5) / 1e6 AS ewm_12
        |        FROM (SELECT time, price FROM base ORDER BY time DESC LIMIT 12)),
@@ -1000,10 +998,10 @@ object FeatureQueries {
        |                   sum(CASE WHEN side = 'sell' THEN volume ELSE CAST(0 AS DOUBLE) END) AS s
        |            FROM base WHERE side IS NOT NULL GROUP BY 1))),
        |lastp AS (SELECT arg_max(price, time) AS last_price FROM base),
-       |regime AS (SELECT CASE WHEN last_price > sma_raw THEN 'up'
-       |                       WHEN last_price < sma_raw THEN 'down'
+       |regime AS (SELECT CASE WHEN last_price > sma_20 THEN 'up'
+       |                       WHEN last_price < sma_20 THEN 'down'
        |                       WHEN last_price IS NOT NULL THEN 'neutral' END AS regime_tag
-       |           FROM lastp CROSS JOIN sma_raw)
+       |           FROM lastp CROSS JOIN sma)
        |SELECT '$symbol' AS symbol, TIMESTAMP '$asOf' AS as_of_ts,
        |       open, high, low, close, sma_20, ewm_12, volatility_1h, vwap_5m,
        |       large_trade_flag, percentile_95, bid, ask, bidask_spread,

@@ -929,21 +929,11 @@ class VersionedTableOps(val store: CommitStore,
   def transactionalCommit(df: DataFrame, root: String, appId: String,
       batchId: Long, mode: String = "append",
       statsCols: Seq[String] = Seq.empty,
-      bloomCols: Seq[String] = Seq.empty, bloomFpp: Double = 0.01,
-      maxRetries: Int = 20): Boolean = {
-    var attempt = 0
-    while (true) {
-      if (lastCommittedBatch(root, appId).exists(_ >= batchId)) return false
-      try {
-        commit(df, root, mode, statsCols = statsCols, bloomCols = bloomCols,
-          bloomFpp = bloomFpp, txn = Some((appId, batchId)))
-        return true
-      } catch {
-        case _: CommitConflictException if attempt < maxRetries => attempt += 1
-      }
+      bloomCols: Seq[String] = Seq.empty, bloomFpp: Double = 0.01): Boolean =
+    exactlyOnce(root, appId, batchId) { txn =>
+      commit(df, root, mode, statsCols = statsCols, bloomCols = bloomCols,
+        bloomFpp = bloomFpp, txn = Some(txn))
     }
-    false // unreachable
-  }
 
   /** Transactional MERGE — [[transactionalCommit]]'s exactly-once protocol
     * over the [[merge]] upsert: stamps `(appId, batchId)` on the merge
@@ -957,23 +947,10 @@ class VersionedTableOps(val store: CommitStore,
     * with the transaction point in the commit log instead of a warehouse.
     */
   def transactionalMerge(source: DataFrame, root: String, appId: String,
-      batchId: Long, keyCol: String, maxProbeKeys: Int = 10000,
-      bloomFpp: Double = 0.01, maxRetries: Int = 20,
-      cdf: Option[Boolean] = None): Boolean = {
-    var attempt = 0
-    while (true) {
-      if (lastCommittedBatch(root, appId).exists(_ >= batchId)) return false
-      try {
-        merge(source.sparkSession, root, source, keyCol,
-          maxProbeKeys = maxProbeKeys, bloomFpp = bloomFpp,
-          txn = Some((appId, batchId)), cdf = cdf)
-        return true
-      } catch {
-        case _: CommitConflictException if attempt < maxRetries => attempt += 1
-      }
+      batchId: Long, keyCol: String, cdf: Option[Boolean] = None): Boolean =
+    exactlyOnce(root, appId, batchId) { txn =>
+      merge(source.sparkSession, root, source, keyCol, Some(txn), cdf)
     }
-    false // unreachable
-  }
 
   /** [[transactionalMerge]] over the merge-on-read kernel ([[mergeMor]]):
     * the exactly-once streaming-upsert sink for high-frequency batches —
@@ -984,19 +961,30 @@ class VersionedTableOps(val store: CommitStore,
     * and foreign-conflict retry as the copy-on-write form.
     */
   def transactionalMergeMor(source: DataFrame, root: String, appId: String,
-      batchId: Long, keyCol: String, maxProbeKeys: Int = 10000,
-      bloomFpp: Double = 0.01, maxRetries: Int = 20,
-      cdf: Option[Boolean] = None): Boolean = {
-    var attempt = 0
+      batchId: Long, keyCol: String, cdf: Option[Boolean] = None): Boolean =
+    exactlyOnce(root, appId, batchId) { txn =>
+      mergeMor(source.sparkSession, root, source, keyCol, Some(txn), cdf)
+    }
+
+  /** Conflicts a `transactional*` commit absorbs before giving up. */
+  private val maxRetries = 20
+
+  /** The `transactional*` retry loop: absorb a batch `appId` already
+    * committed (false), else run `attempt` with the `(appId, batchId)`
+    * stamp, re-checking the high-water mark after each conflict lost to a
+    * foreign writer — up to [[maxRetries]] times, then the conflict
+    * propagates. True iff this call committed.
+    */
+  private def exactlyOnce(root: String, appId: String, batchId: Long)(
+      attempt: ((String, Long)) => Unit): Boolean = {
+    var conflicts = 0
     while (true) {
       if (lastCommittedBatch(root, appId).exists(_ >= batchId)) return false
       try {
-        mergeMor(source.sparkSession, root, source, keyCol,
-          maxProbeKeys = maxProbeKeys, bloomFpp = bloomFpp,
-          txn = Some((appId, batchId)), cdf = cdf)
+        attempt((appId, batchId))
         return true
       } catch {
-        case _: CommitConflictException if attempt < maxRetries => attempt += 1
+        case _: CommitConflictException if conflicts < maxRetries => conflicts += 1
       }
     }
     false // unreachable
@@ -1999,20 +1987,21 @@ class VersionedTableOps(val store: CommitStore,
     * dir (`_changes/v%05d-<token>`, Delta's `_change_data` shape): the
     * anchor columns + `_change_type` ∈ {insert, update_preimage,
     * update_postimage, delete}. Nothing references the dir until the
-    * caller's manifest publishes a `cdf=` line; a failed/lost-race commit
-    * deletes it. ONE write job, O(changed rows) — the price of serving
+    * caller's manifest publishes a `cdf=` line; a failed write removes its
+    * partial dir, and the caller deletes it if the commit fails later.
+    * ONE write job, O(changed rows) — the price of serving
     * subscribers O(delta) instead of forcing an O(table) resync per DML
     * commit ([[VersionedTableOps.changeFeed]]).
     */
   private def stageChanges(changes: DataFrame, root: String, version: Int,
-      anchor: org.apache.spark.sql.types.StructType = null): String = {
+      anchor: org.apache.spark.sql.types.StructType): String = {
     val token = UUID.randomUUID().toString.take(8)
     val rel = f"_changes/v$version%05d-$token"
     // change images persist under PHYSICAL names, exactly like data dirs
     // (_change_type has no mapping and passes through) — one uniform
     // on-disk namespace per table, stable across renames
-    val out = if (anchor == null) changes else toPhysical(changes, anchor)
-    out.write.parquet(new File(root, rel).getPath)
+    try toPhysical(changes, anchor).write.parquet(new File(root, rel).getPath)
+    catch { case e: Throwable => data.deleteTree(root, rel); throw e }
     rel
   }
 
@@ -2020,260 +2009,377 @@ class VersionedTableOps(val store: CommitStore,
     * dir (`_dv/v%05d-<token>`, schema [[VersionedTable.dvSchema]]) from a
     * frame carrying `__dv_file`/`__dv_pos` row identities (a
     * [[taggedUnion]] with `keepDvCols`). Nothing references the dir until
-    * the caller's manifest publishes a `dv=` line; a failed/lost-race
-    * commit deletes it. ONE write job, O(matched rows).
+    * the caller's manifest publishes a `dv=` line; a failed write removes
+    * its partial dir, and the caller deletes it if the commit fails later.
+    * ONE write job, O(matched rows).
     */
   private def stageDv(hits: DataFrame, root: String, version: Int): String = {
     val token = UUID.randomUUID().toString.take(8)
     val rel = f"_dv/v$version%05d-$token"
-    hits.select(col("__dv_file").as("__file"), col("__dv_pos").as("__pos"))
+    try hits.select(col("__dv_file").as("__file"), col("__dv_pos").as("__pos"))
       .write.parquet(new File(root, rel).getPath)
+    catch { case e: Throwable => data.deleteTree(root, rel); throw e }
     rel
   }
 
-  /** Copy-on-write row-level DELETE — `DELETE FROM t WHERE p`, the Delta
-    * shape re-expressed over the commit log. The predicate is translated
-    * into [[VersionedTable.DirFilter]]s by the SAME machinery the
-    * planning-time scan uses ([[org.apache.spark.sql.graft.ManifestScan
-    * .translatedFilters]]): dirs the manifest's min/max stats and bloom
-    * sidecars dismiss provably hold no matching row and are CARRIED
-    * FORWARD untouched — their files are never opened. Each surviving
-    * candidate dir is probed with one count; dirs with no actual matches
-    * carry forward too, fully-matched dirs are dropped from the manifest
-    * (their files stay on disk for time travel until vacuum), and only
-    * partially-matched dirs are rewritten (keep-rows staged to a fresh
-    * attempt-unique dir inheriting the dir's stats/bloom columns). ONE
-    * manifest publishes the result atomically; `operation=delete` is
-    * non-append, so change-feed consumers fail loudly and resync, exactly
-    * as with overwrite.
-    *
-    * SQL semantics: a row is deleted iff `predicate` evaluates TRUE —
-    * NULL keeps the row. Returns the number of rows deleted; when no row
-    * matches, NOTHING is committed and 0 is returned (a no-op DELETE does
-    * not burn a version). Cost at 100 TB: one manifest read + one count
-    * per candidate dir + a rewrite per PARTIALLY-matched dir — O(touched
-    * data), never O(table).
+  /** Bloom false-positive rate of every sidecar a DML commit writes. */
+  private val dmlBloomFpp = 0.01
+
+  /** Most distinct source keys a MERGE probes one by one against the
+    * candidate dirs' bloom sidecars; a larger source keeps its hull-only
+    * candidates.
     */
-  def delete(spark: SparkSession, root: String,
-      predicate: org.apache.spark.sql.Column,
-      cdf: Option[Boolean] = None): Long = {
+  private val maxProbeKeys = 10000
+
+  /** A DML verb's part of a [[dml]] commit. The frames it sees are live
+    * rows of the candidate dirs, conformed to the snapshot's union schema
+    * and tagged with their dir's basename (`__dir`).
+    *
+    *   - `candidates`: the dirs that may hold rows the verb removes; every
+    *     other dir is carried by name, its files never opened.
+    *   - `mark`: adds the non-null boolean `__hit` — the row is removed.
+    *   - `added`: the rows the commit lands, from the hit rows (None when
+    *     nothing was hit).
+    *   - `images`: the change images (anchor columns + `_change_type`),
+    *     from the hit rows.
+    *   - `landed`: manifest `rows=` of a verb that commits even when it
+    *     hits nothing (MERGE: the source rows); None for the removing verbs,
+    *     whose `rows=` is the hit count and whose no-hit call commits
+    *     nothing.
+    *   - `release`: frees what the plan cached, after the commit.
+    */
+  private final class DmlPlan(val op: String, val candidates: Seq[String],
+      val mark: DataFrame => DataFrame,
+      val added: Option[DataFrame] => Option[DataFrame],
+      val images: Option[DataFrame] => DataFrame,
+      val landed: Option[Long] = None,
+      val release: () => Unit = () => ())
+
+  /** The one DML commit kernel behind [[delete]], [[update]], [[merge]]
+    * and their merge-on-read twins. It resolves the parent snapshot, asks
+    * the verb for its [[DmlPlan]], and classifies the candidate dirs' live
+    * rows ([[taggedUnion]], deletion vectors folded in). The storage
+    * strategy decides only how removed rows are recorded:
+    *
+    *   - copy-on-write: ONE grouped classify job counts rows and hits per
+    *     dir. Fully-hit dirs leave the manifest (their files stay for time
+    *     travel until vacuum), partially-hit dirs' keep-rows land through
+    *     ONE [[stageRewrites]] job, and dv entries whose dirs all vanished
+    *     are dropped ([[liveDvs]]).
+    *   - merge-on-read: the hit rows are counted, and their positions
+    *     land as ONE deletion vector ([[stageDv]]) recording the candidate
+    *     dirs; every dir is carried by name.
+    *
+    * The hit rows are cached once for the writes that read them. Then the
+    * added rows land as ONE fresh dir ([[stageDir]]) indexed
+    * under the table's discipline (the union of the parent's per-dir
+    * stats/bloom columns), the change images as ONE `_changes` dir when
+    * CDF is on ([[resolveCdf]]), and ONE manifest publishes it all. Every
+    * staged artifact is registered the moment it exists and deleted on any
+    * failure up to and including a lost publish; each stager removes its
+    * own partial output when it fails. A removing verb that hits nothing
+    * commits nothing (no version burned) and returns None; otherwise the
+    * result is (version, rows hit).
+    */
+  private def dml(spark: SparkSession, root: String, mor: Boolean,
+      cdf: Option[Boolean], txn: Option[(String, Long)] = None)(
+      plan: (Snapshot, org.apache.spark.sql.types.StructType) => DmlPlan):
+      Option[(Int, Long)] = {
     val doCdf = resolveCdf(root, cdf)
     val parent = latestVersion(root)
       .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
     val version = parent + 1
     val snap = snapshot(root, parent)
     val anchor = snapshotSchema(spark, root, snap)
-    val dirFilters = predicateFilters(spark, root, anchor, predicate)
-    val candidates = admittedDirs(root, snap, dirFilters)
-    if (candidates.isEmpty) return 0L // skipping tiers proved a no-op
-    val hit = coalesce(predicate, lit(false))
-    val oldByBase = candidates.map(d => new File(d).getName -> d).toMap
-    val tagged = taggedUnion(spark, root, candidates, anchor, snap.dvs)
-
-    // ONE classify job over every candidate dir: per-dir total + matches.
-    val classified = tagged.groupBy(col("__dir"))
-      .agg(count(lit(1)).as("__n"),
-        sum(when(hit, 1L).otherwise(0L)).as("__m")).collect()
-    def counts(r: org.apache.spark.sql.Row) =
-      (r.getAs[String]("__dir"), r.getAs[Long]("__n"), r.getAs[Long]("__m"))
-    val deleted = classified.map(counts(_)._3).sum
-    if (deleted == 0L) return 0L // pure no-op: no version burned
-    val fullBases = classified.map(counts).collect {
-      case (b, n, m) if m == n => b
-    }.toSet
-    val partialBases = classified.map(counts).collect {
-      case (b, n, m) if m > 0 && m < n => b
-    }.toSeq.sorted
-
-    // ONE rewrite job for ALL partially-matched dirs (the __dir filter
-    // constant-folds per union branch — fully/un-matched dirs never read).
-    val (newByOld, newStats, newBlooms) =
-      if (partialBases.isEmpty)
-        (Map.empty[String, String], Seq.empty[DirStat], Seq.empty[DirBloom])
-      else stageRewrites(spark,
-        tagged.filter(col("__dir").isin(partialBases: _*)).filter(!hit),
-        root, version, snap,
-        oldByBase.filter { case (b, _) => partialBases.contains(b) },
-        anchor, bloomFpp = 0.01)
-    // row-level CDF: the deleted rows themselves (one extra read of the
-    // dirs actually holding matches — fully-matched dirs contribute all
-    // their rows, partial dirs their hit rows)
-    val hitBases = classified.map(counts).collect {
-      case (b, _, m) if m > 0 => b
-    }.toSeq.sorted
-    val cdfRel =
-      if (!doCdf) None
-      else Some(stageChanges(
-        tagged.filter(col("__dir").isin(hitBases: _*)).filter(hit)
-          .select(anchor.map(f => col(f.name)): _*)
-          .withColumn("_change_type", lit("delete")),
-        root, version, anchor))
+    val p = plan(snap, anchor)
+    // every staged artifact, registered the moment it exists
+    val dirs = Seq.newBuilder[String]
+    val blooms = Seq.newBuilder[DirBloom]
+    val newStats = Seq.newBuilder[DirStat]
+    var cached: Option[DataFrame] = None
     try {
-      val dropped = fullBases.map(oldByBase)
+      if (p.candidates.isEmpty && p.landed.isEmpty)
+        return None // skipping tiers proved a no-op
+      val marked = if (p.candidates.isEmpty) None
+        else Some(p.mark(taggedUnion(spark, root, p.candidates, anchor,
+          snap.dvs, keepDvCols = mor)))
+      // removal: (rows hit, hit rows, dropped dirs, rewritten dirs, dv)
+      val none: (Long, Option[DataFrame], Set[String], Map[String, String],
+        Option[DvFile]) = (0L, None, Set.empty, Map.empty, None)
+      val (removed, hits, dropped, newByOld, dv) = marked match {
+        case None => none
+        case Some(m) if mor =>
+          val h = m.filter(col("__hit")).cache()
+          cached = Some(h)
+          val n = h.count()
+          if (n == 0L) none
+          else {
+            val rel = stageDv(h, root, version)
+            dirs += rel
+            (n, Some(h), Set.empty[String], Map.empty[String, String],
+              Some(DvFile(rel, n, p.candidates.map(d => new File(d).getName))))
+          }
+        case Some(m) =>
+          val classified = m.groupBy(col("__dir"))
+            .agg(count(lit(1)), sum(when(col("__hit"), 1L).otherwise(0L)))
+            .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+          val oldByBase = p.candidates.map(d => new File(d).getName -> d).toMap
+          val hitBases = classified.collect { case (b, _, k) if k > 0 => b }.sorted
+          val partial = classified.collect { case (b, n, k) if k > 0 && k < n => b }.sorted
+          val (rewritten, rwStats, rwBlooms) =
+            if (partial.isEmpty)
+              (Map.empty[String, String], Seq.empty[DirStat], Seq.empty[DirBloom])
+            else stageRewrites(spark,
+              m.filter(col("__dir").isin(partial: _*)).filter(!col("__hit"))
+                .select(anchor.map(f => col(f.name)) :+ col("__dir"): _*),
+              root, version, snap, partial.map(b => b -> oldByBase(b)).toMap,
+              anchor, dmlBloomFpp)
+          dirs ++= rewritten.values
+          blooms ++= rwBlooms
+          newStats ++= rwStats
+          val hit = classified.map(_._3).sum
+          cached = if (hit == 0L) None
+            else Some(m.filter(col("__dir").isin(hitBases: _*))
+              .filter(col("__hit")).cache())
+          (hit, cached,
+            classified.collect { case (b, n, k) if k == n => oldByBase(b) }.toSet,
+            rewritten, None)
+      }
+      if (removed == 0L && p.landed.isEmpty) return None // no version burned
+      val addedDir = p.added(hits).map { df =>
+        val (rel, _, st, bl) = stageDir(df, root, version,
+          snap.dirStats.map(_.col).distinct, snap.dirBlooms.map(_.col).distinct,
+          dmlBloomFpp, anchor)
+        dirs += rel
+        blooms ++= bl
+        newStats ++= st
+        rel
+      }
+      val cdfRel =
+        if (!doCdf) None
+        else {
+          val rel = stageChanges(p.images(hits), root, version, anchor)
+          dirs += rel
+          Some(rel)
+        }
       val newDirs = snap.dataDirs.flatMap { d =>
         if (dropped(d)) None else Some(newByOld.getOrElse(d, d))
-      }
-      val keepSet = newDirs.toSet
-      // manifest rows= records the commit's DELTA, like append's batch size:
-      // for a delete, the rows removed
-      publish(root, version, parent, "delete", deleted,
+      } ++ addedDir
+      val keep = newDirs.toSet
+      // manifest rows= records the commit's DELTA (append convention): the
+      // rows a DELETE/UPDATE hit, the source rows a MERGE landed
+      publish(root, version, parent, p.op, p.landed.getOrElse(removed),
         anchor.fieldNames.toSeq, newDirs,
-        snap.dirStats.filter(s => keepSet(s.dir)) ++ newStats,
-        snap.dirBlooms.filter(b => keepSet(b.dir)) ++ newBlooms,
-        snap.txns, Some(anchor.json), cdfRel, liveDvs(snap.dvs, newDirs),
-        snap.fstatsRefs)
-      deleted
+        snap.dirStats.filter(s => keep(s.dir)) ++ newStats.result(),
+        snap.dirBlooms.filter(b => keep(b.dir)) ++ blooms.result(),
+        snap.txns ++ txn.toMap, Some(anchor.json), cdfRel,
+        liveDvs(snap.dvs, newDirs) ++ dv, snap.fstatsRefs)
+      Some((version, removed))
     } catch { case e: Throwable =>
-      newByOld.values.foreach(d => data.deleteTree(root, d))
-      newBlooms.foreach(b => data.deleteFile(root, b.path))
-      cdfRel.foreach(d => data.deleteTree(root, d))
+      dirs.result().foreach(data.deleteTree(root, _))
+      blooms.result().foreach(b => data.deleteFile(root, b.path))
       throw e
+    } finally {
+      cached.foreach(_.unpersist())
+      p.release()
     }
   }
 
+  /** Copy-on-write row-level DELETE — `DELETE FROM t WHERE p`, the Delta
+    * shape re-expressed over the commit log, committed by the [[dml]]
+    * kernel. The predicate is translated into
+    * [[VersionedTable.DirFilter]]s by the SAME machinery the planning-time
+    * scan uses ([[org.apache.spark.sql.graft.ManifestScan
+    * .translatedFilters]]): dirs the manifest's min/max stats and bloom
+    * sidecars dismiss provably hold no matching row and are CARRIED
+    * FORWARD untouched — their files are never opened. Of the surviving
+    * candidates, dirs with no actual matches carry forward too,
+    * fully-matched dirs are dropped from the manifest (their files stay on
+    * disk for time travel until vacuum), and only partially-matched dirs
+    * are rewritten (keep-rows staged to a fresh attempt-unique dir
+    * inheriting the dir's stats/bloom columns). ONE manifest publishes the
+    * result atomically; with CDF on, the deleted rows are its
+    * `_change_type=delete` images.
+    *
+    * SQL semantics: a row is deleted iff `predicate` evaluates TRUE —
+    * NULL keeps the row. Returns the number of rows deleted; when no row
+    * matches, NOTHING is committed and 0 is returned (a no-op DELETE does
+    * not burn a version). Cost at 100 TB: one manifest read + ONE classify
+    * job over the candidate dirs + ONE rewrite job over the
+    * PARTIALLY-matched dirs — O(touched data), never O(table).
+    */
+  def delete(spark: SparkSession, root: String,
+      predicate: org.apache.spark.sql.Column,
+      cdf: Option[Boolean] = None): Long =
+    predicateDml(spark, root, predicate, None, mor = false, cdf)
+
   /** Copy-on-write row-level UPDATE — `UPDATE t SET c = expr WHERE p`,
-    * completing the DML verb set over the same kernel as [[delete]]: the
-    * predicate's translated [[VersionedTable.DirFilter]]s bound the
-    * candidate dirs (stats/bloom-dismissed dirs carried by name, never
-    * opened), each candidate is probed with one count, and only dirs
-    * actually holding matched rows are rewritten — matched rows get the
-    * assignments applied (each cast back to the column's existing type:
-    * UPDATE never mutates the schema), unmatched rows pass through
-    * byte-identical. ONE manifest publishes atomically
-    * (`operation=update`, non-append → change-feed consumers resync);
-    * rewritten dirs re-derive their inherited stats/bloom columns, so an
-    * update that moves a column's range keeps skipping truthful.
+    * committed by the [[dml]] kernel exactly like [[delete]] plus one
+    * added dir: the predicate's translated [[VersionedTable.DirFilter]]s
+    * bound the candidate dirs (stats/bloom-dismissed dirs carried by name,
+    * never opened), fully-matched dirs are dropped, partially-matched dirs
+    * are rewritten with their KEEP-rows only, and the matched rows'
+    * post-images land as ONE fresh dir under the table's stats/bloom
+    * discipline — the layout [[updateMor]] and both merges use. Each
+    * assignment is cast back to the column's existing type (UPDATE never
+    * mutates the schema); every new dir's skipping metadata is measured
+    * fresh, so an update that moves a column's range keeps skipping
+    * truthful. With CDF on, each matched row yields its pre-/post-image
+    * pair.
     *
     * SQL semantics: a row is updated iff `predicate` is TRUE (NULL leaves
     * it untouched); assignments may reference any of the row's old
     * columns, evaluated against the PRE-update row. Returns rows updated;
-    * a no-match update commits nothing. Cost: manifest + one count per
-    * candidate dir + a rewrite per matched dir — O(touched data).
+    * a no-match update commits nothing. Cost: manifest + ONE classify job
+    * + ONE keep-row rewrite job + ONE post-image write — O(touched data).
     */
   def update(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column],
       cdf: Option[Boolean] = None): Long = {
-    val doCdf = resolveCdf(root, cdf)
-    val parent = latestVersion(root)
-      .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
-    val version = parent + 1
-    val snap = snapshot(root, parent)
     require(assignments.nonEmpty, "no assignments")
-    val anchor = snapshotSchema(spark, root, snap)
-    val unknown = assignments.keySet.diff(anchor.fieldNames.toSet)
-    require(unknown.isEmpty,
-      s"assignments target unknown columns: ${unknown.mkString(",")}")
-    val dirFilters = predicateFilters(spark, root, anchor, predicate)
-    val candidates = admittedDirs(root, snap, dirFilters)
-    if (candidates.isEmpty) return 0L
-    val hit = coalesce(predicate, lit(false))
-    val oldByBase = candidates.map(d => new File(d).getName -> d).toMap
-    // Rows conform to the snapshot's UNION schema before anything else, so
-    // an assignment to an additively-added column lands in EVERY matched
-    // dir — a dir predating the column is rewritten with it null-filled
-    // then assigned, never silently without it.
-    val tagged = taggedUnion(spark, root, candidates, anchor, snap.dvs)
-
-    // ONE classify job: per-dir match counts.
-    val classified = tagged.groupBy(col("__dir"))
-      .agg(sum(when(hit, 1L).otherwise(0L)).as("__m")).collect()
-    val updated = classified.map(_.getAs[Long]("__m")).sum
-    if (updated == 0L) return 0L // pure no-op: no version burned
-    val matchedBases = classified
-      .filter(_.getAs[Long]("__m") > 0L).map(_.getAs[String]("__dir")).toSeq.sorted
-
-    // ONE rewrite job for ALL matched dirs: assignments applied to matched
-    // rows (cast back to the column's anchor type — UPDATE never mutates
-    // the schema), unmatched rows pass through untouched.
-    val rewriteCols = anchor.map { f =>
-      assignments.get(f.name) match {
-        case Some(a) => when(hit, a.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        case None    => col(f.name)
-      }
-    } :+ col("__dir")
-    val (newByOld, newStats, newBlooms) = stageRewrites(spark,
-      tagged.filter(col("__dir").isin(matchedBases: _*))
-        .select(rewriteCols: _*),
-      root, version, snap,
-      oldByBase.filter { case (b, _) => matchedBases.contains(b) },
-      anchor, bloomFpp = 0.01)
-    // row-level CDF: each matched row yields its pre- and post-image in
-    // ONE pass (inline over a two-struct array — no second read per image)
-    val cdfRel =
-      if (!doCdf) None
-      else {
-        val pre = struct(anchor.map(f => col(f.name)) :+
-          lit("update_preimage").as("_change_type"): _*)
-        val post = struct(anchor.map { f =>
-          assignments.get(f.name) match {
-            case Some(a) => a.cast(f.dataType).as(f.name)
-            case None    => col(f.name)
-          }
-        } :+ lit("update_postimage").as("_change_type"): _*)
-        Some(stageChanges(
-          tagged.filter(col("__dir").isin(matchedBases: _*)).filter(hit)
-            .select(inline(array(pre, post))),
-          root, version, anchor))
-      }
-    try {
-      val newDirs = snap.dataDirs.map(d => newByOld.getOrElse(d, d))
-      val keepSet = newDirs.toSet
-      // manifest rows= records the commit's DELTA: rows updated
-      publish(root, version, parent, "update", updated,
-        anchor.fieldNames.toSeq, newDirs,
-        snap.dirStats.filter(s => keepSet(s.dir)) ++ newStats,
-        snap.dirBlooms.filter(b => keepSet(b.dir)) ++ newBlooms,
-        snap.txns, Some(anchor.json), cdfRel, liveDvs(snap.dvs, newDirs),
-        snap.fstatsRefs)
-      updated
-    } catch { case e: Throwable =>
-      newByOld.values.foreach(d => data.deleteTree(root, d))
-      newBlooms.foreach(b => data.deleteFile(root, b.path))
-      cdfRel.foreach(d => data.deleteTree(root, d))
-      throw e
-    }
+    predicateDml(spark, root, predicate, Some(assignments), mor = false, cdf)
   }
 
   /** Copy-on-write MERGE — whole-row upsert by key, the Delta
     * `MERGE WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`
-    * shape over the commit log: every table row whose `keyCol` appears in
-    * `source` is replaced by the source row; source rows with unseen keys
-    * are inserts. `source` must be key-unique (checked — an ambiguous
-    * source is refused loudly, like Delta's multiple-source-rows-match
-    * error) and carry the table's columns.
+    * shape over the commit log, committed by the [[dml]] kernel: every
+    * table row whose `keyCol` appears in `source` is replaced by the
+    * source row; source rows with unseen keys are inserts. `source` must
+    * be key-unique (checked — an ambiguous source is refused loudly, like
+    * Delta's multiple-source-rows-match error) and carry the table's
+    * columns.
     *
-    * Touched-dir bounding composes the two skipping tiers without ever
-    * shuffling the table: the source keys' [min, max] hull prunes on the
-    * manifest's min/max stats, then — when the source's distinct keys fit
-    * `maxProbeKeys` — each surviving dir's bloom sidecar is probed per
-    * key, dismissing dirs that share the hull but none of the keys. Each
-    * remaining dir is probed with one broadcast semi-join count; only
-    * dirs actually holding matched keys are rewritten (anti-join against
-    * the source keys, staged fresh, inheriting the dir's stats/bloom
-    * columns). The source lands as its own new dir indexed with the
-    * UNION of the parent snapshot's stats/bloom disciplines. ONE manifest
-    * publishes atomically; `operation=merge` is non-append (change-feed
-    * consumers resync). Returns the new version.
+    * Candidate dirs are bounded by the source keys' hull and per-key bloom
+    * probes ([[mergePlan]]) without ever shuffling the table; one
+    * broadcast join marks matched rows, fully-matched dirs are dropped and
+    * only partially-matched dirs are rewritten (their keep-rows, staged
+    * fresh, inheriting the dir's stats/bloom columns). The source lands as
+    * its own new dir indexed with the UNION of the parent snapshot's
+    * stats/bloom disciplines; with CDF on, matched rows are pre-images and
+    * source rows post-images or inserts. ONE manifest publishes
+    * atomically, stamped with `txn` when given. Returns the new version.
     *
-    * Cost at 100 TB: manifest + sidecar probes + one broadcast semi-join
-    * per candidate dir + rewrites of dirs that truly hold matched keys +
-    * O(source) for the insert dir — O(touched data + delta), never
-    * O(table); the table is never shuffled.
+    * Cost at 100 TB: manifest + sidecar probes + ONE classify job over
+    * the candidates + ONE rewrite job over the dirs that truly hold
+    * matched keys + O(source) for the source dir — O(touched data +
+    * delta), never O(table); the table is never shuffled.
     */
   def merge(spark: SparkSession, root: String, source: DataFrame,
-      keyCol: String, maxProbeKeys: Int = 10000,
-      bloomFpp: Double = 0.01, txn: Option[(String, Long)] = None,
-      cdf: Option[Boolean] = None): Int = {
-    val doCdf = resolveCdf(root, cdf)
-    val parent = latestVersion(root)
-      .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
-    val version = parent + 1
-    val snap = snapshot(root, parent)
+      keyCol: String, txn: Option[(String, Long)] = None,
+      cdf: Option[Boolean] = None): Int =
+    dml(spark, root, mor = false, cdf, txn)(mergePlan(root, source, keyCol)).get._1
+
+  /** Merge-on-read DELETE — [[delete]]'s semantics at O(deleted rows)
+    * commit cost: the [[dml]] kernel persists the matched rows' positions
+    * as a DELETION VECTOR (`dv=` manifest line,
+    * [[VersionedTable.DvFile]]) instead of rewriting partially-matched
+    * dirs, and every data dir is CARRIED FORWARD untouched. Readers fold
+    * the dv set in as one anti-join ([[applyDvs]]); time travel is exact
+    * per version (each manifest lists exactly the dvs committed at or
+    * before it). This is the Delta deletion-vector / Iceberg
+    * positional-delete shape: the right verb when deletes are small and
+    * scattered — a GDPR-style key delete on a 100 TB table commits
+    * O(matched rows), not O(every touched dir's data). The read-side price
+    * accumulates with the dv set; [[purgeDeletes]] (or any
+    * OPTIMIZE/compaction) folds it back to zero.
+    *
+    * Same SQL semantics, candidate bounding and CDF images as [[delete]];
+    * rows already dv'd by earlier MOR commits can never match twice (the
+    * classify frame is live-rows-only). Returns rows deleted; a no-match
+    * DELETE commits nothing.
+    */
+  def deleteMor(spark: SparkSession, root: String,
+      predicate: org.apache.spark.sql.Column,
+      cdf: Option[Boolean] = None): Long =
+    predicateDml(spark, root, predicate, None, mor = true, cdf)
+
+  /** Merge-on-read UPDATE — [[update]]'s semantics at O(updated rows)
+    * commit cost: the [[dml]] kernel lands the matched rows' positions in
+    * a deletion vector and their post-assignment images as ONE fresh dir
+    * (indexed under the table's stats/bloom discipline), and carries every
+    * existing dir forward untouched. Assignments, casts and CDF images are
+    * exactly the copy-on-write twin's. Returns rows updated; a no-match
+    * UPDATE commits nothing.
+    */
+  def updateMor(spark: SparkSession, root: String,
+      predicate: org.apache.spark.sql.Column,
+      assignments: Map[String, org.apache.spark.sql.Column],
+      cdf: Option[Boolean] = None): Long = {
+    require(assignments.nonEmpty, "no assignments")
+    predicateDml(spark, root, predicate, Some(assignments), mor = true, cdf)
+  }
+
+  /** Merge-on-read MERGE — [[merge]]'s whole-row upsert contract at
+    * O(source + matched rows) commit cost: the [[dml]] kernel lands
+    * matched table rows' positions in a deletion vector and the source as
+    * ONE fresh dir (its rows are the post-images and the inserts), and
+    * rewrites or drops NO existing dir — where the copy-on-write twin
+    * rewrites every partially-matched dir, this commits O(delta)
+    * regardless of how many dirs the keys touch. The continuous-upsert
+    * shape: a streaming silver table maintained by per-batch merges pays
+    * O(batch) per commit, and its CDF subscribers the same. Same candidate
+    * bounding, key-uniqueness check, CDF images and txn stamping as
+    * [[merge]]. Returns the new version.
+    */
+  def mergeMor(spark: SparkSession, root: String, source: DataFrame,
+      keyCol: String, txn: Option[(String, Long)] = None,
+      cdf: Option[Boolean] = None): Int =
+    dml(spark, root, mor = true, cdf, txn)(mergePlan(root, source, keyCol)).get._1
+
+  /** DELETE (no `assignments`) or UPDATE through [[dml]]: candidates are
+    * the dirs the predicate's translated [[VersionedTable.DirFilter]]s
+    * admit ([[predicateFilters]] — one manifest, zero file listings), a
+    * row is hit iff the predicate is TRUE, and UPDATE adds the hit rows'
+    * post-images. Returns rows hit (0 = nothing committed).
+    */
+  private def predicateDml(spark: SparkSession, root: String,
+      predicate: org.apache.spark.sql.Column,
+      assignments: Option[Map[String, org.apache.spark.sql.Column]],
+      mor: Boolean, cdf: Option[Boolean]): Long =
+    dml(spark, root, mor, cdf) { (snap, anchor) =>
+      assignments.foreach { a =>
+        val unknown = a.keySet.diff(anchor.fieldNames.toSet)
+        require(unknown.isEmpty,
+          s"assignments target unknown columns: ${unknown.mkString(",")}")
+      }
+      val row = anchor.map(f => col(f.name))
+      // the post-image: assignments over the PRE-update row, cast back to
+      // the column's anchor type
+      val post = anchor.map { f =>
+        assignments.flatMap(_.get(f.name)) match {
+          case Some(a) => a.cast(f.dataType).as(f.name)
+          case None    => col(f.name)
+        }
+      }
+      new DmlPlan(if (assignments.isEmpty) "delete" else "update",
+        admittedDirs(root, snap, predicateFilters(spark, root, anchor, predicate)),
+        mark = _.withColumn("__hit", coalesce(predicate, lit(false))),
+        added = hits => assignments.flatMap(_ => hits.map(_.select(post: _*))),
+        images = hits =>
+          if (assignments.isEmpty)
+            hits.get.select(row: _*).withColumn("_change_type", lit("delete"))
+          else hits.get.select(inline(array(
+            struct(row :+ lit("update_preimage").as("_change_type"): _*),
+            struct(post :+ lit("update_postimage").as("_change_type"): _*)))))
+    }.map(_._2).getOrElse(0L)
+
+  /** MERGE's part of a [[dml]] commit. The source is conformed to the
+    * anchor, cached for the commit, and checked key-unique and non-empty.
+    * Candidate dirs compose the two skipping tiers: the source keys'
+    * [min, max] hull prunes on the manifest's min/max stats, then — when
+    * the source's distinct keys fit [[maxProbeKeys]] — each surviving
+    * dir's bloom sidecar on `keyCol` is probed per key, dismissing dirs
+    * that share the hull but none of the keys. Rows are hit through ONE
+    * broadcast left join against the (key-unique) source keys, which marks
+    * matches without multiplying rows. The source is the added dir; its
+    * rows are post-images where the key was hit and inserts elsewhere.
+    */
+  private def mergePlan(root: String, source: DataFrame, keyCol: String)(
+      snap: Snapshot, anchor: org.apache.spark.sql.types.StructType): DmlPlan = {
     require(snap.schemaCols.toSet == source.columns.toSet,
       s"source columns ${source.columns.mkString(",")} must match table schema " +
         snap.schemaCols.mkString(","))
-    val anchor = snapshotSchema(spark, root, snap)
     val src = conformTo(source, anchor).cache()
     try {
       // Key hull in the STATS' numeric image (micros for timestamps,
@@ -2297,388 +2403,48 @@ class VersionedTableOps(val store: CommitStore,
       require(srcRows == srcKeys,
         s"merge source is not key-unique on $keyCol: $srcRows rows, $srcKeys keys")
       require(srcRows > 0, "empty merge source")
-
-      // Tier 1: the key hull vs manifest min/max (numeric, timestamp AND
-      // string keys — toDouble renders strings as their prefix image).
+      // Tier 1: the key hull vs manifest min/max.
       val hull =
         if (srcAgg.isNullAt(2)) Seq.empty
         else Seq(VersionedTable.RangeFilter(keyCol,
           toDouble(srcAgg.get(2)), toDouble(srcAgg.get(3))))
-      var candidates = admittedDirs(root, snap, hull)
+      val inHull = admittedDirs(root, snap, hull)
       // Tier 2: per-key bloom probes, budget-capped (sidecars are tiny and
       // driver-local; dirs without a sidecar on keyCol always survive).
       val bloomFor = snap.dirBlooms.filter(_.col == keyCol).map(b => b.dir -> b).toMap
-      if (srcKeys <= maxProbeKeys && bloomFor.nonEmpty) {
-        val keys = src.select(col(keyCol)).collect().map(_.get(0))
-        candidates = candidates.filter { d =>
-          bloomFor.get(d).forall { b =>
-            // load the sidecar ONCE, probe every key in memory
-            loadBloom(root, b).forall(bf => keys.exists(k => bloomProbe(bf, k)))
-          }
-        }
-      }
-
-      val srcKeyFrame = broadcast(src.select(col(keyCol)))
-      val cleanupDirs = Seq.newBuilder[String]
-      val cleanupBlooms = Seq.newBuilder[DirBloom]
-      try {
-        // ONE classify job over every candidate dir: a broadcast left join
-        // against the (key-unique) source keys marks matched rows without
-        // multiplying them, then one grouped agg yields per-dir totals and
-        // match counts — never a semi-join + count pair per dir.
-        // row-level CDF: matched table rows are pre-images, source rows
-        // split into post-images (key present in the table) and inserts —
-        // O(matched + source), staged as the commit's _changes dir
-        def insertOnlyCdf(): Option[String] =
-          if (!doCdf) None
-          else Some(stageChanges(
-            src.select(anchor.map(f => col(f.name)): _*)
-              .withColumn("_change_type", lit("insert")),
-            root, version, anchor))
-        val (newByOld, rwStats, rwBlooms, fullDropped, cdfRel) =
-          if (candidates.isEmpty)
-            (Map.empty[String, String], Seq.empty[DirStat],
-              Seq.empty[DirBloom], Set.empty[String], insertOnlyCdf())
-          else {
-            val oldByBase = candidates.map(d => new File(d).getName -> d).toMap
-            val tagged = taggedUnion(spark, root, candidates, anchor, snap.dvs)
-            val classified = tagged.join(
-              broadcast(src.select(col(keyCol)).withColumn("__hit", lit(1))),
-              Seq(keyCol), "left")
-              .groupBy(col("__dir"))
-              .agg(count(lit(1)).as("__n"), count(col("__hit")).as("__k"))
-              .collect()
-            def counts(r: org.apache.spark.sql.Row) =
-              (r.getAs[String]("__dir"), r.getAs[Long]("__n"), r.getAs[Long]("__k"))
-            val fullBases = classified.map(counts).collect {
-              case (b, n, k) if k == n => b
-            }.toSet
-            val partialBases = classified.map(counts).collect {
-              case (b, n, k) if k > 0 && k < n => b
-            }.toSeq.sorted
-            // ONE rewrite job: all partially-matched dirs' keep-rows (the
-            // anti-join against the broadcast source keys), dir-per-partition.
-            val (rew, st, bl) =
-              if (partialBases.isEmpty)
-                (Map.empty[String, String], Seq.empty[DirStat], Seq.empty[DirBloom])
-              else stageRewrites(spark,
-                tagged.filter(col("__dir").isin(partialBases: _*))
-                  .join(srcKeyFrame, Seq(keyCol), "left_anti")
-                  .select(anchor.map(f => col(f.name)) :+ col("__dir"): _*),
-                root, version, snap,
-                oldByBase.filter { case (b, _) => partialBases.contains(b) },
-                anchor, bloomFpp)
-            cleanupDirs ++= rew.values
-            cleanupBlooms ++= bl
-            val hitBases = classified.map(counts).collect {
-              case (b, _, k) if k > 0 => b
-            }.toSeq.sorted
-            val cdfStaged =
-              if (!doCdf) None
-              else if (hitBases.isEmpty) insertOnlyCdf()
-              else {
-                val matchedTable = tagged
-                  .filter(col("__dir").isin(hitBases: _*))
-                  .join(srcKeyFrame, Seq(keyCol), "leftsemi")
-                  .select(anchor.map(f => col(f.name)): _*)
-                val matchedKeys = matchedTable.select(col(keyCol)).distinct()
-                val srcFlagged = src
-                  .join(broadcast(matchedKeys.withColumn("__m", lit(1))),
-                    Seq(keyCol), "left")
-                  .withColumn("_change_type",
-                    when(col("__m").isNotNull, "update_postimage")
-                      .otherwise("insert"))
-                  .select(anchor.map(f => col(f.name)) :+ col("_change_type"): _*)
-                Some(stageChanges(
-                  matchedTable
-                    .withColumn("_change_type", lit("update_preimage"))
-                    .unionByName(srcFlagged),
-                  root, version, anchor))
-              }
-            (rew, st, bl, fullBases.map(oldByBase), cdfStaged)
-          }
-        cdfRel.foreach(cleanupDirs += _)
-        // The source lands as its own dir under the TABLE's indexing
-        // discipline (union of the parent's per-dir stats/bloom columns).
-        val tableStatsCols = snap.dirStats.map(_.col).distinct
-        val tableBloomCols = snap.dirBlooms.map(_.col).distinct
-        val srcStaged = stageDir(src, root, version,
-          tableStatsCols, tableBloomCols, bloomFpp, anchor)
-        cleanupDirs += srcStaged._1
-        cleanupBlooms ++= srcStaged._4
-        val newDirs = snap.dataDirs.flatMap { d =>
-          if (fullDropped(d)) None else Some(newByOld.getOrElse(d, d))
-        } :+ srcStaged._1
-        val keepSet = newDirs.toSet
-        // manifest rows= records the commit's DELTA (append convention):
-        // for a merge, the source rows it landed
-        publish(root, version, parent, "merge",
-          srcRows, anchor.fieldNames.toSeq, newDirs,
-          snap.dirStats.filter(s => keepSet(s.dir)) ++ rwStats ++ srcStaged._3,
-          snap.dirBlooms.filter(b => keepSet(b.dir)) ++ rwBlooms ++ srcStaged._4,
-          snap.txns ++ txn.toMap, Some(anchor.json), cdfRel,
-          liveDvs(snap.dvs, newDirs), snap.fstatsRefs)
-        version
-      } catch { case e: Throwable =>
-        cleanupDirs.result().foreach(d =>
-          data.deleteTree(root, d))
-        cleanupBlooms.result().foreach(b => data.deleteFile(root, b.path))
-        throw e
-      }
-    } finally src.unpersist()
-  }
-
-  /** Merge-on-read DELETE — [[delete]]'s semantics at O(deleted rows)
-    * commit cost: instead of rewriting every partially-matched dir
-    * (copy-on-write, O(touched dirs) data moved), the matched rows'
-    * positions are persisted as a DELETION VECTOR (`dv=` manifest line,
-    * [[VersionedTable.DvFile]]) and every data dir is CARRIED FORWARD
-    * untouched. Readers fold the dv set in as one anti-join
-    * ([[applyDvs]]); time travel is exact per version (each manifest
-    * lists exactly the dvs committed at or before it). This is the Delta
-    * deletion-vector / Iceberg positional-delete shape: the right verb
-    * when deletes are small and scattered — a GDPR-style key delete on a
-    * 100 TB table commits O(matched rows), not O(every touched dir's
-    * data). The read-side price accumulates with the dv set;
-    * [[purgeDeletes]] (or any OPTIMIZE/compaction) folds it back to zero.
-    *
-    * Same SQL semantics and CDF images as [[delete]]: a row is deleted
-    * iff `predicate` is TRUE (NULL keeps it); subscribers get the deleted
-    * rows as `_change_type=delete`; a no-match DELETE commits nothing.
-    * Candidate dirs are bounded by the same stats/bloom translation, and
-    * rows already dv'd by earlier MOR commits can never match twice (the
-    * classify frame is live-rows-only). Returns rows deleted.
-    */
-  def deleteMor(spark: SparkSession, root: String,
-      predicate: org.apache.spark.sql.Column,
-      cdf: Option[Boolean] = None): Long = {
-    val doCdf = resolveCdf(root, cdf)
-    val parent = latestVersion(root)
-      .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
-    val version = parent + 1
-    val snap = snapshot(root, parent)
-    val anchor = snapshotSchema(spark, root, snap)
-    val dirFilters = predicateFilters(spark, root, anchor, predicate)
-    val candidates = admittedDirs(root, snap, dirFilters)
-    if (candidates.isEmpty) return 0L // skipping tiers proved a no-op
-    val hit = coalesce(predicate, lit(false))
-    val hits = taggedUnion(spark, root, candidates, anchor, snap.dvs,
-      keepDvCols = true).filter(hit).cache()
-    try {
-      val deleted = hits.count()
-      if (deleted == 0L) return 0L // pure no-op: no version burned
-      val dvRel = stageDv(hits, root, version)
-      val cdfRel =
-        if (!doCdf) None
-        else Some(stageChanges(
-          hits.select(anchor.map(f => col(f.name)): _*)
-            .withColumn("_change_type", lit("delete")),
-          root, version, anchor))
-      try {
-        // dirs/stats/blooms carried VERBATIM: nothing physical changed.
-        // Stats stay conservative (upper bounds over live rows).
-        publish(root, version, parent, "delete", deleted,
-          anchor.fieldNames.toSeq, snap.dataDirs, snap.dirStats,
-          snap.dirBlooms, snap.txns, Some(anchor.json), cdfRel,
-          snap.dvs :+ DvFile(dvRel, deleted,
-            candidates.map(d => new File(d).getName)), snap.fstatsRefs)
-        deleted
-      } catch { case e: Throwable =>
-        data.deleteTree(root, dvRel)
-        cdfRel.foreach(d => data.deleteTree(root, d))
-        throw e
-      }
-    } finally hits.unpersist()
-  }
-
-  /** Merge-on-read UPDATE — [[update]]'s semantics at O(updated rows)
-    * commit cost: matched rows' positions land in a deletion vector, the
-    * post-assignment images land as ONE fresh append-style dir (indexed
-    * under the table's stats/bloom discipline), and every existing dir is
-    * carried forward untouched. Assignments are evaluated against the
-    * PRE-update row and cast back to the column's anchor type, exactly
-    * like the copy-on-write twin; the CDF dir carries the same
-    * pre/post-image pairs. Returns rows updated; a no-match UPDATE
-    * commits nothing.
-    */
-  def updateMor(spark: SparkSession, root: String,
-      predicate: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column],
-      cdf: Option[Boolean] = None): Long = {
-    val doCdf = resolveCdf(root, cdf)
-    val parent = latestVersion(root)
-      .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
-    val version = parent + 1
-    val snap = snapshot(root, parent)
-    require(assignments.nonEmpty, "no assignments")
-    val anchor = snapshotSchema(spark, root, snap)
-    val unknown = assignments.keySet.diff(anchor.fieldNames.toSet)
-    require(unknown.isEmpty,
-      s"assignments target unknown columns: ${unknown.mkString(",")}")
-    val dirFilters = predicateFilters(spark, root, anchor, predicate)
-    val candidates = admittedDirs(root, snap, dirFilters)
-    if (candidates.isEmpty) return 0L
-    val hit = coalesce(predicate, lit(false))
-    val hits = taggedUnion(spark, root, candidates, anchor, snap.dvs,
-      keepDvCols = true).filter(hit).cache()
-    try {
-      val updated = hits.count()
-      if (updated == 0L) return 0L
-      val dvRel = stageDv(hits, root, version)
-      // post-images as one fresh dir under the TABLE's indexing
-      // discipline (union of the parent's per-dir stats/bloom columns)
-      val post = hits.select(anchor.map { f =>
-        assignments.get(f.name) match {
-          case Some(a) => a.cast(f.dataType).as(f.name)
-          case None    => col(f.name)
-        }
-      }: _*)
-      val tableStatsCols = snap.dirStats.map(_.col).distinct
-      val tableBloomCols = snap.dirBlooms.map(_.col).distinct
-      val staged = stageDir(post, root, version,
-        tableStatsCols, tableBloomCols, bloomFpp = 0.01, anchor = anchor)
-      val cdfRel =
-        if (!doCdf) None
+      val candidates =
+        if (srcKeys > maxProbeKeys || bloomFor.isEmpty) inHull
         else {
-          val pre = struct(anchor.map(f => col(f.name)) :+
-            lit("update_preimage").as("_change_type"): _*)
-          val postImg = struct(anchor.map { f =>
-            assignments.get(f.name) match {
-              case Some(a) => a.cast(f.dataType).as(f.name)
-              case None    => col(f.name)
+          val keys = src.select(col(keyCol)).collect().map(_.get(0))
+          inHull.filter { d =>
+            bloomFor.get(d).forall { b =>
+              // load the sidecar ONCE, probe every key in memory
+              loadBloom(root, b).forall(bf => keys.exists(k => bloomProbe(bf, k)))
             }
-          } :+ lit("update_postimage").as("_change_type"): _*)
-          Some(stageChanges(hits.select(inline(array(pre, postImg))),
-            root, version, anchor))
-        }
-      try {
-        publish(root, version, parent, "update", updated,
-          anchor.fieldNames.toSeq, snap.dataDirs :+ staged._1,
-          snap.dirStats ++ staged._3, snap.dirBlooms ++ staged._4,
-          snap.txns, Some(anchor.json), cdfRel,
-          snap.dvs :+ DvFile(dvRel, updated,
-            candidates.map(d => new File(d).getName)), snap.fstatsRefs)
-        updated
-      } catch { case e: Throwable =>
-        data.deleteTree(root, dvRel)
-        data.deleteTree(root, staged._1)
-        staged._4.foreach(b => data.deleteFile(root, b.path))
-        cdfRel.foreach(d => data.deleteTree(root, d))
-        throw e
-      }
-    } finally hits.unpersist()
-  }
-
-  /** Merge-on-read MERGE — [[merge]]'s whole-row upsert contract at
-    * O(source + matched rows) commit cost: matched table rows' positions
-    * land in a deletion vector, the source lands as ONE fresh dir (its
-    * rows are the post-images and the inserts), and NO existing dir is
-    * rewritten or dropped — where the copy-on-write twin rewrites every
-    * partially-matched dir, this commits O(delta) regardless of how many
-    * dirs the keys touch. The continuous-upsert shape: a streaming silver
-    * table maintained by per-batch merges pays O(batch) per commit, and
-    * its CDF subscribers the same. Same candidate bounding (key hull +
-    * bloom probes), key-uniqueness check, CDF images, and txn stamping as
-    * [[merge]]. Returns the new version.
-    */
-  def mergeMor(spark: SparkSession, root: String, source: DataFrame,
-      keyCol: String, maxProbeKeys: Int = 10000,
-      bloomFpp: Double = 0.01, txn: Option[(String, Long)] = None,
-      cdf: Option[Boolean] = None): Int = {
-    val doCdf = resolveCdf(root, cdf)
-    val parent = latestVersion(root)
-      .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
-    val version = parent + 1
-    val snap = snapshot(root, parent)
-    require(snap.schemaCols.toSet == source.columns.toSet,
-      s"source columns ${source.columns.mkString(",")} must match table schema " +
-        snap.schemaCols.mkString(","))
-    val anchor = snapshotSchema(spark, root, snap)
-    val src = conformTo(source, anchor).cache()
-    try {
-      val keyProbe = src.schema(keyCol).dataType match {
-        case TimestampType                             => unix_micros(col(keyCol))
-        case _: org.apache.spark.sql.types.NumericType => col(keyCol).cast("double")
-        case StringType                                => col(keyCol)
-        case _                                         => lit(null).cast("double")
-      }
-      val srcAgg = src.agg(count(lit(1)), countDistinct(col(keyCol)),
-        min(keyProbe), max(keyProbe)).head()
-      val (srcRows, srcKeys) = (srcAgg.getLong(0), srcAgg.getLong(1))
-      require(srcRows == srcKeys,
-        s"merge source is not key-unique on $keyCol: $srcRows rows, $srcKeys keys")
-      require(srcRows > 0, "empty merge source")
-      val hull =
-        if (srcAgg.isNullAt(2)) Seq.empty
-        else Seq(VersionedTable.RangeFilter(keyCol,
-          toDouble(srcAgg.get(2)), toDouble(srcAgg.get(3))))
-      var candidates = admittedDirs(root, snap, hull)
-      val bloomFor = snap.dirBlooms.filter(_.col == keyCol).map(b => b.dir -> b).toMap
-      if (srcKeys <= maxProbeKeys && bloomFor.nonEmpty) {
-        val keys = src.select(col(keyCol)).collect().map(_.get(0))
-        candidates = candidates.filter { d =>
-          bloomFor.get(d).forall { b =>
-            loadBloom(root, b).forall(bf => keys.exists(k => bloomProbe(bf, k)))
           }
         }
-      }
-      // matched LIVE table rows, with their row identities: the dv set
-      // and the CDF pre-images in one cached frame
-      val matched =
-        if (candidates.isEmpty) None
-        else Some(taggedUnion(spark, root, candidates, anchor, snap.dvs,
-          keepDvCols = true)
-          .join(broadcast(src.select(col(keyCol))), Seq(keyCol), "leftsemi")
-          .cache())
-      try {
-        val m = matched.map(_.count()).getOrElse(0L)
-        val dv = if (m == 0L) None
-          else Some(DvFile(stageDv(matched.get, root, version), m,
-            candidates.map(d => new File(d).getName)))
-        val cdfRel =
-          if (!doCdf) None
-          else if (m == 0L)
-            Some(stageChanges(
-              src.select(anchor.map(f => col(f.name)): _*)
-                .withColumn("_change_type", lit("insert")),
-              root, version, anchor))
-          else {
-            val matchedTable = matched.get
-              .select(anchor.map(f => col(f.name)): _*)
-            val matchedKeys = matchedTable.select(col(keyCol)).distinct()
-            val srcFlagged = src
-              .join(broadcast(matchedKeys.withColumn("__m", lit(1))),
-                Seq(keyCol), "left")
-              .withColumn("_change_type",
-                when(col("__m").isNotNull, "update_postimage")
-                  .otherwise("insert"))
-              .select(anchor.map(f => col(f.name)) :+ col("_change_type"): _*)
-            Some(stageChanges(
-              matchedTable
-                .withColumn("_change_type", lit("update_preimage"))
-                .unionByName(srcFlagged),
-              root, version, anchor))
-          }
-        val tableStatsCols = snap.dirStats.map(_.col).distinct
-        val tableBloomCols = snap.dirBlooms.map(_.col).distinct
-        val srcStaged = stageDir(src, root, version,
-          tableStatsCols, tableBloomCols, bloomFpp, anchor)
-        try {
-          publish(root, version, parent, "merge", srcRows,
-            anchor.fieldNames.toSeq, snap.dataDirs :+ srcStaged._1,
-            snap.dirStats ++ srcStaged._3, snap.dirBlooms ++ srcStaged._4,
-            snap.txns ++ txn.toMap, Some(anchor.json), cdfRel,
-            snap.dvs ++ dv, snap.fstatsRefs)
-          version
-        } catch { case e: Throwable =>
-          data.deleteTree(root, srcStaged._1)
-          srcStaged._4.foreach(b => data.deleteFile(root, b.path))
-          dv.foreach(d => data.deleteTree(root, d.path))
-          cdfRel.foreach(d => data.deleteTree(root, d))
-          throw e
-        }
-      } finally matched.foreach(_.unpersist())
-    } finally src.unpersist()
+      val row = anchor.map(f => col(f.name))
+      new DmlPlan("merge", candidates,
+        mark = _.join(broadcast(src.select(col(keyCol), lit(true).as("__m"))),
+          Seq(keyCol), "left")
+          .withColumn("__hit", col("__m").isNotNull).drop("__m"),
+        added = _ => Some(src),
+        images = {
+          case None =>
+            src.select(row: _*).withColumn("_change_type", lit("insert"))
+          case Some(hits) =>
+            val matched = hits.select(row: _*)
+            val matchedKeys = matched.select(col(keyCol)).distinct()
+            matched.withColumn("_change_type", lit("update_preimage"))
+              .unionByName(src
+                .join(broadcast(matchedKeys.withColumn("__m", lit(1))),
+                  Seq(keyCol), "left")
+                .select(row :+ when(col("__m").isNotNull, "update_postimage")
+                  .otherwise("insert").as("_change_type"): _*))
+        },
+        landed = Some(srcRows),
+        release = () => src.unpersist())
+    } catch { case e: Throwable => src.unpersist(); throw e }
   }
 
   /** Fold every deletion vector back into the data: rewrite ONLY the dirs

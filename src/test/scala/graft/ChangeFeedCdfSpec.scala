@@ -37,47 +37,65 @@ class ChangeFeedCdfSpec extends SparkTestBase {
     df.groupBy("_change_type").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 
+  /** Runs `body` once per storage strategy — copy-on-write (false) and
+    * merge-on-read (true) — on a fresh CDF-on corpus; the images must not
+    * depend on how the removed rows are recorded.
+    */
+  private def bothStrategies(body: (String, Boolean) => Unit): Unit =
+    Seq(false, true).foreach { mor =>
+      withClue(if (mor) "merge-on-read: " else "copy-on-write: ") {
+        val root = freshRoot()
+        corpus(root)
+        body(root, mor)
+      }
+    }
+
   test("DELETE persists its deleted rows as change images") {
-    val root = freshRoot()
-    corpus(root)
-    assert(VersionedTable.delete(spark, root, col("id") >= 12 && col("id") < 25) === 13L)
-    val feed = VersionedTable.changeFeed(spark, root, 3, 4)
-    assert(types(feed) === Map("delete" -> 13L))
-    assert(feed.select("id").collect().map(_.getLong(0)).sorted.toSeq ===
-      (12L until 25L))
-    assert(feed.select("_commit_version").distinct().head().getLong(0) === 4L)
-    // pre-images carry the full row
-    assert(feed.filter(col("id") === 20).head().getAs[Long]("v") === 40L)
+    bothStrategies { (root, mor) =>
+      val pred = col("id") >= 12 && col("id") < 25
+      assert((if (mor) VersionedTable.deleteMor(spark, root, pred)
+        else VersionedTable.delete(spark, root, pred)) === 13L)
+      val feed = VersionedTable.changeFeed(spark, root, 3, 4)
+      assert(types(feed) === Map("delete" -> 13L))
+      assert(feed.select("id").collect().map(_.getLong(0)).sorted.toSeq ===
+        (12L until 25L))
+      assert(feed.select("_commit_version").distinct().head().getLong(0) === 4L)
+      // pre-images carry the full row
+      assert(feed.filter(col("id") === 20).head().getAs[Long]("v") === 40L)
+    }
   }
 
   test("UPDATE persists pre- AND post-images for each matched row") {
-    val root = freshRoot()
-    corpus(root)
-    assert(VersionedTable.update(spark, root, col("id") < 3,
-      Map("v" -> (col("v") + lit(1000L)))) === 3L)
-    val feed = VersionedTable.changeFeed(spark, root, 3, 4)
-    assert(types(feed) === Map("update_preimage" -> 3L, "update_postimage" -> 3L))
-    val pre = feed.filter(col("_change_type") === "update_preimage" && col("id") === 2)
-    val post = feed.filter(col("_change_type") === "update_postimage" && col("id") === 2)
-    assert(pre.head().getAs[Long]("v") === 4L)
-    assert(post.head().getAs[Long]("v") === 1004L)
+    bothStrategies { (root, mor) =>
+      val set = Map("v" -> (col("v") + lit(1000L)))
+      assert((if (mor) VersionedTable.updateMor(spark, root, col("id") < 3, set)
+        else VersionedTable.update(spark, root, col("id") < 3, set)) === 3L)
+      val feed = VersionedTable.changeFeed(spark, root, 3, 4)
+      assert(types(feed) === Map("update_preimage" -> 3L, "update_postimage" -> 3L))
+      val pre = feed.filter(col("_change_type") === "update_preimage" && col("id") === 2)
+      val post = feed.filter(col("_change_type") === "update_postimage" && col("id") === 2)
+      assert(pre.head().getAs[Long]("v") === 4L)
+      assert(post.head().getAs[Long]("v") === 1004L)
+    }
   }
 
   test("MERGE persists pre-images, post-images, and inserts") {
-    val root = freshRoot()
-    corpus(root)
-    val src = spark.range(25, 35).toDF("id").withColumn("v", lit(-1L))
-    VersionedTable.merge(spark, root, src, "id") // 25..29 matched, 30..34 new
-    val feed = VersionedTable.changeFeed(spark, root, 3, 4)
-    assert(types(feed) === Map("update_preimage" -> 5L,
-      "update_postimage" -> 5L, "insert" -> 5L))
-    assert(feed.filter(col("_change_type") === "update_preimage")
-      .select("id").collect().map(_.getLong(0)).sorted.toSeq === (25L until 30L))
-    assert(feed.filter(col("_change_type") === "insert")
-      .select("id").collect().map(_.getLong(0)).sorted.toSeq === (30L until 35L))
-    // post-images carry SOURCE values
-    assert(feed.filter(col("_change_type") === "update_postimage")
-      .select("v").distinct().head().getLong(0) === -1L)
+    bothStrategies { (root, mor) =>
+      val src = spark.range(25, 35).toDF("id").withColumn("v", lit(-1L))
+      // 25..29 matched, 30..34 new
+      if (mor) VersionedTable.mergeMor(spark, root, src, "id")
+      else VersionedTable.merge(spark, root, src, "id")
+      val feed = VersionedTable.changeFeed(spark, root, 3, 4)
+      assert(types(feed) === Map("update_preimage" -> 5L,
+        "update_postimage" -> 5L, "insert" -> 5L))
+      assert(feed.filter(col("_change_type") === "update_preimage")
+        .select("id").collect().map(_.getLong(0)).sorted.toSeq === (25L until 30L))
+      assert(feed.filter(col("_change_type") === "insert")
+        .select("id").collect().map(_.getLong(0)).sorted.toSeq === (30L until 35L))
+      // post-images carry SOURCE values
+      assert(feed.filter(col("_change_type") === "update_postimage")
+        .select("v").distinct().head().getLong(0) === -1L)
+    }
   }
 
   test("replaying the whole feed reconstructs the table exactly (multiset)") {

@@ -40,12 +40,22 @@ class FeatureSpec extends SparkTestBase {
   }
 
   test("regime tags form the {up, down, neutral} domain; first tick is neutral") {
-    val r = Regime.compute(rampTrades(25))
+    // a constant 0.1 price beside the ramp: its raw window sum drifts
+    // (0.1 + 0.1 + 0.1 = 0.30000000000000004), its reported SMA does not
+    val flat = rampTrades(25, "FLAT").withColumn("price", lit(0.1))
+    val r = Regime.compute(rampTrades(25).unionByName(flat))
     val tags = r.select("regime_tag").distinct().collect().map(_.getString(0)).toSet
     assert(tags.subsetOf(Set("up", "down", "neutral")))
     // On a strictly increasing ramp every tick after the first is 'up'.
-    assert(r.orderBy("time").collect().head.getAs[String]("regime_tag") === "neutral")
-    assert(r.filter(col("regime_tag") === "down").count() === 0)
+    val ramp = r.filter(col("symbol") === "RAMP")
+    assert(ramp.orderBy("time").collect().head.getAs[String]("regime_tag") === "neutral")
+    assert(ramp.filter(col("regime_tag") === "down").count() === 0)
+    // A constant price equals its SMA-20 on every tick.
+    val flatTags = r.filter(col("symbol") === "FLAT").select("regime_tag", "sma_20")
+      .collect().map(row => (row.getString(0), row.getDouble(1)))
+    assert(flatTags.length === 25)
+    assert(flatTags.forall(_ == ("neutral", 0.1)),
+      s"constant price must tag neutral: ${flatTags.mkString(",")}")
   }
 
   test("EWM-12: single tick = price; two ticks = 0.85*p1 + 0.15*p2") {

@@ -3,7 +3,7 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-import graft.sources.{CommitStore, VersionedTable, VersionedTableOps}
+import graft.sources.{CommitStore, DataStore, VersionedTable, VersionedTableOps}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -61,6 +61,47 @@ class MaintenanceRaceSpec extends SparkTestBase {
     override def get(root: String, version: Int): Option[String] = inner.get(root, version)
     override def versions(root: String): Seq[Int] = inner.versions(root)
     override def delete(root: String, version: Int): Unit = inner.delete(root, version)
+  }
+
+  /** A data plane that delegates to the default store but, once armed,
+    * throws on the first create of a `_blooms/` path — a bloom sidecar
+    * write failing part-way through a DML commit's staging, after the
+    * artifacts staged before it already landed.
+    */
+  private final class BloomFailStore extends DataStore {
+    private val inner = DataStore.default
+    @volatile var armed = false
+    override def create(root: String, rel: String): java.io.OutputStream = {
+      if (armed && rel.startsWith("_blooms/")) {
+        armed = false
+        throw new java.io.IOException(s"injected failure creating $rel")
+      }
+      inner.create(root, rel)
+    }
+    override def open(root: String, rel: String) = inner.open(root, rel)
+    override def list(root: String, rel: String) = inner.list(root, rel)
+    override def exists(root: String, rel: String) = inner.exists(root, rel)
+    override def modifiedMs(root: String, rel: String) = inner.modifiedMs(root, rel)
+    override def promoteDir(root: String, stagedRel: String, finalRel: String): Unit =
+      inner.promoteDir(root, stagedRel, finalRel)
+    override def deleteTree(root: String, rel: String): Unit = inner.deleteTree(root, rel)
+    override def deleteFile(root: String, rel: String): Unit = inner.deleteFile(root, rel)
+    override def cloneTree(srcRoot: String, srcRel: String,
+        dstRoot: String, dstRel: String): Unit =
+      inner.cloneTree(srcRoot, srcRel, dstRoot, dstRel)
+  }
+
+  /** Entries under the staging namespaces (data dirs, deletion vectors,
+    * change images, bloom sidecars) that no existing manifest references.
+    */
+  private def unreferenced(root: String): Set[String] = {
+    val referenced = VersionedTable.existingVersions(root).flatMap { v =>
+      val s = VersionedTable.snapshot(root, v)
+      s.dataDirs ++ s.dvs.map(_.path) ++ s.cdfDir ++ s.dirBlooms.map(_.path)
+    }.toSet
+    Seq("data", "_dv", "_changes", "_blooms").flatMap { ns =>
+      Option(new File(root, ns).listFiles()).toSeq.flatten.map(f => s"$ns/${f.getName}")
+    }.toSet -- referenced
   }
 
   /** Data dirs actually on disk (non-hidden) — staged leftovers detector. */
@@ -233,6 +274,45 @@ class MaintenanceRaceSpec extends SparkTestBase {
     }
     assert(!ids(VersionedTable.read(spark, root)).exists(i => i == 101L || i == 102L),
       "both MOR deletes' state must survive the aborted purge")
+  }
+
+  test("a DML commit whose staging fails deletes everything it staged") {
+    val root = freshRoot()
+    VersionedTable.setTableProperties(root,
+      Map(VersionedTable.CdfEnabledProp -> "true"))
+    Seq((0L, 100L), (100L, 200L)).foreach { case (lo, hi) =>
+      VersionedTable.commit(
+        spark.range(lo, hi).toDF("id").withColumn("v", col("id") * 2),
+        root, "append", statsCols = Seq("id"), bloomCols = Seq("id"))
+    }
+    val store = new BloomFailStore
+    val ops = new VersionedTableOps(CommitStore.local, store)
+    // every verb whose staging writes a bloom sidecar: COW rewrites of the
+    // partially-hit high dir, or the added dir under the table's id bloom
+    // (deleteMor stages no dir, so it writes no sidecar)
+    val source = spark.range(150L, 250L).toDF("id").withColumn("v", lit(-1L))
+    val verbs: Seq[(String, () => Any)] = Seq(
+      "delete" -> (() => ops.delete(spark, root, col("id") >= 150L)),
+      "update" -> (() => ops.update(spark, root, col("id") >= 150L,
+        Map("v" -> lit(0L)))),
+      "merge" -> (() => ops.merge(spark, root, source, "id")),
+      "updateMor" -> (() => ops.updateMor(spark, root, col("id") >= 150L,
+        Map("v" -> lit(0L)))),
+      "mergeMor" -> (() => ops.mergeMor(spark, root, source, "id")))
+    val leaks = verbs.map { case (name, run) =>
+      val before = unreferenced(root)
+      store.armed = true
+      val e = intercept[java.io.IOException](run())
+      assert(e.getMessage.contains("injected failure"), name)
+      assert(VersionedTable.latestVersion(root) === Some(2),
+        s"$name published despite the failure")
+      name -> (unreferenced(root) -- before).toSeq.sorted
+    }.filter(_._2.nonEmpty)
+    assert(leaks.isEmpty, s"staged artifacts left behind: ${leaks.mkString("; ")}")
+    // disarmed, the same store commits normally
+    ops.mergeMor(spark, root, source, "id")
+    assert(VersionedTable.latestVersion(root) === Some(3))
+    assert(ids(VersionedTable.read(spark, root)) === (0L until 250L))
   }
 
   test("two separate JVMs: appender and compactor race; no row lost, both verbs land") {

@@ -79,6 +79,16 @@ class PitSpec extends SparkTestBase {
       s"non-null features on an empty history: ${row.mkString(",")}")
   }
 
+  test("a constant price snapshots as neutral: the regime tag compares the reported SMA-20") {
+    // 20 ticks of 0.1: the raw average is 0.10000000000000002, the
+    // reported (quantized) sma_20 is 0.1 — equal to the last price
+    val flat = rampTrades(25, "FLAT").withColumn("price", lit(0.1))
+    val row = PitSnapshot.snapshot(spark, flat, "FLAT",
+      Timestamp.valueOf("2024-01-02 00:00:00")).collect()(0)
+    assert(row.getAs[Double]("sma_20") === 0.1)
+    assert(row.getAs[String]("regime_tag") === "neutral")
+  }
+
   test("future as_of is rejected") {
     val now = Timestamp.valueOf("2024-01-30 00:00:00")
     assert(PitSnapshot.validateAsOf(Timestamp.valueOf("2024-02-01 00:00:00"), now).isLeft)

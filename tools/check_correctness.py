@@ -4,8 +4,12 @@ runs graft.Verify at a given SF dir, then executes each oracle_sql.json entry
 in DuckDB over the same parquet tables and compares (rows, schema, values).
 
 Usage: python3 tools/check_correctness.py [sfdir] [outdir] [--skip-verify]
+
+Verify runs from the checkout that holds this script, and its log goes to
+<outdir>/verify_log.txt, so runs from different checkouts or into different
+outdirs never share state.
 """
-import json, sys, glob, os
+import json, sys, glob, os, shlex
 import duckdb
 import pandas as pd
 import numpy as np
@@ -48,12 +52,16 @@ def compare(name, spark_df, duck_df):
 def main():
     sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    log = os.path.join(outdir, "verify_log.txt")
     if "--skip-verify" not in sys.argv:
+        os.makedirs(outdir, exist_ok=True)
+        verify = shlex.quote(f"runMain graft.Verify {os.path.abspath(sfdir)} {os.path.abspath(outdir)}")
         rc = os.system(
-            f"cd /root/repo && timeout 3600 sbt -batch 'runMain graft.Verify {sfdir} {outdir}' "
-            f"> /tmp/verify_log.txt 2>&1")
+            f"cd {shlex.quote(repo)} && timeout 3600 sbt -batch {verify} "
+            f"> {shlex.quote(log)} 2>&1")
         if rc != 0:
-            print(open("/tmp/verify_log.txt").read()[-4000:])
+            print(open(log).read()[-4000:])
             sys.exit(f"Verify run failed rc={rc}")
     oracles = json.load(open(f"{outdir}/oracle_sql.json"))
     con = duckdb.connect()
@@ -86,7 +94,7 @@ def main():
             n_ok += 1
     missing = set(oracles) - {d for d in os.listdir(outdir) if os.path.isdir(os.path.join(outdir, d))}
     for m in missing:
-        print(f"✗ {m}: NO SPARK OUTPUT (query failed — see /tmp/verify_log.txt)")
+        print(f"✗ {m}: NO SPARK OUTPUT (query failed — see {log})")
         n_bad += 1
     print(f"\n{n_ok} ok / {n_bad} bad")
     sys.exit(1 if n_bad else 0)
