@@ -3,8 +3,9 @@ package graft.asof
 import graft.functions.Quantize
 import java.sql.Timestamp
 
-import graft.features._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.features.{Ewm, Volatility}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Point-in-time feature snapshot: every contract feature for one symbol,
@@ -18,38 +19,19 @@ import org.apache.spark.sql.functions._
   * `:200-201`); tested by `tests/test_pit_correctness.py:38-79`.
   *
   * Spark-first shape: one partition-pruned filtered scan of the fact table
-  * (`symbol = ? AND time <= ts` — predicate pushes to parquet), then the
-  * reference's nine "latest <= ts" lookups FUSE into six 0/1-row aggregate
-  * branches (`max_by` over a bucket is the exact analogue of the SQL
-  * `ORDER BY time DESC LIMIT 1` under the same filter; the three order-limit
-  * features share one top-20 frame, and the scalar lookups share one
-  * conditional aggregate). The 1-row frames are cross-joined like the
-  * reference's `LEFT JOIN ... ON TRUE` (`sql/timescaledb_schema.sql:401-409`)
-  * — cartesians of singleton frames, so the "join" is free. Nothing here
-  * collects to the driver.
+  * (`symbol = ? AND time <= ts` — predicate pushes to parquet), collapsed to
+  * one partition, then ONE pass over it. The nine lookups read four bucket
+  * levels of the same ticks — the whole history, 1 min, 5 min and 1 h — so
+  * one aggregate keyed by (level, bucket) computes every bucket of every
+  * level, and one global aggregate picks each level's latest bucket with `max_by` on a key
+  * that is set only on that level's rows (`max_by` over the bucket is the
+  * exact analogue of the SQL `ORDER BY time DESC LIMIT 1` under the same
+  * filter). Like the reference's single `(symbol, time DESC)` index scan
+  * (`sql/timescaledb_schema.sql:34-35`), a snapshot is scan → one
+  * single-partition exchange → one task: two Spark jobs, no joins, nothing
+  * cached, nothing collected to the driver.
   */
 object PitSnapshot {
-
-  /** Strong references on purpose: the CacheManager pins the persisted plan
-    * until `unpersist` is called on the SAME Dataset wrapper, so a weak ref
-    * here could be GC-cleared and leave the cache entry unreleasable
-    * forever. Boundedness comes from keep-last-per-session plus a sweep of
-    * stopped sessions on every snapshot call (a stopped session's cache
-    * died with it — dropping the entry just lets the objects collect).
-    */
-  private val lastBase =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, DataFrame]()
-
-  private def sweepStopped(): Unit =
-    lastBase.keySet.forEach { s =>
-      if (s.sparkContext.isStopped) lastBase.remove(s)
-    }
-
-  /** Release the cached snapshot base for `spark`, if any — call on session
-    * teardown in long-running serving processes.
-    */
-  def releaseCache(spark: SparkSession): Unit =
-    Option(lastBase.remove(spark)).foreach(_.unpersist(blocking = false))
 
   /** Session-scoped SERVING cache of materialized snapshot results, keyed by
     * (session, source key, symbol, as-of). The reference serves snapshots
@@ -60,8 +42,7 @@ object PitSnapshot {
     * execution entirely (measured: ~0.5 s of per-call plan work at snapshot
     * cardinality, vs the 100 ms serving SLA). Entries are 1-row
     * LocalRelation frames (a BOUNDED driver-side value, like a Redis
-    * entry) — memory cost is nil; stopped sessions are swept like
-    * [[lastBase]].
+    * entry) — memory cost is nil; stopped sessions are swept on every call.
     */
   private val served = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String, Timestamp), DataFrame]()
@@ -72,8 +53,8 @@ object PitSnapshot {
     }
 
   /** Serving entry point: [[snapshot]] memoized per (session, `sourceKey`,
-    * symbol, as-of), with the result persisted and materialized on first
-    * call so every repeat is a cache hit. `sourceKey` names the trades
+    * symbol, as-of), with the result materialized on first call so every
+    * repeat is a cache hit. `sourceKey` names the trades
     * source (e.g. its directory); `trades` is by-name and only evaluated on
     * a miss. First call pays the full plan+execute cost; the p95 of a
     * serving loop is the hit path.
@@ -84,7 +65,7 @@ object PitSnapshot {
     served.computeIfAbsent((spark, sourceKey, symbol, asOf), _ => {
       // Materialize to a LocalRelation — the served VALUE, like the
       // reference's Redis/prepared-result row. A hit re-plans a 1-row local
-      // frame (no scan, no tasks, no Catalyst work over the 9-branch tree).
+      // frame (no scan, no tasks, no Catalyst work over the snapshot plan).
       val computed = snapshot(spark, trades, symbol, asOf)
       spark.createDataFrame(
         java.util.Arrays.asList(computed.collect(): _*), computed.schema)
@@ -137,7 +118,7 @@ object PitSnapshot {
     * applied over [[graft.sources.VersionedTableOps.read]], whose scan
     * turns it into a symbol point probe (bloom sidecars) ∧ a time range
     * (manifest min/max) — one manifest read, the surviving dirs only, then
-    * the usual guarded 9-branch assembly. At 100 TB with per-day append
+    * the usual guarded one-pass assembly. At 100 TB with per-day append
     * commits the snapshot touches O(dirs overlapping the horizon ∧ containing the
     * symbol), never the table. Skipping is conservative; [[snapshot]]'s
     * row-level PIT guard still applies on top, so the result is
@@ -151,103 +132,109 @@ object PitSnapshot {
     snapshot(spark, graft.sources.VersionedTable.read(spark, root, asOfVersion),
       symbol, asOf)
 
-  def snapshot(spark: SparkSession, trades: DataFrame, symbol: String, asOf: Timestamp): DataFrame = {
-    val asOfCol = lit(asOf)
-    // The PIT guard: the single most important filter in the engine.
-    // Persisted: all 9 feature branches below re-read this frame; without it
-    // each branch re-scans the fact table (9 scans → 1). The frame is ONE
-    // symbol's history ≤ ts — bounded and small at any corpus scale (the
-    // reference's feature_pit_snapshot is likewise a point lookup over one
-    // symbol's partitions). Callers serving many snapshots per session
-    // should use [[prepare]] (explicit handle) or snapshot several symbols
-    // per retrieval (HistoricalFeatures) rather than loop this entry point.
-    // repartition(1): the scan/filter stays parallel, then the surviving
-    // rows collapse to one cached partition — the 9 downstream aggregates
-    // each run as ~2 tasks instead of (input partitions + 1), which is what
-    // the serving-path latency is made of (measured: warm p95 halves).
-    val base = trades.filter(col("symbol") === symbol && col("time") <= asOfCol)
-      .repartition(1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Bounded cache lifecycle for serving loops: keep at most one snapshot
-    // base cached per session (keep-last is deliberate — a caller assembling
-    // MANY entities at once should use HistoricalFeatures, not a snapshot
-    // loop). Unpersisting the previous base is safe — it only removes the
-    // cache; an un-executed earlier snapshot recomputes its bounded lineage.
-    PitSnapshot.sweepStopped()
-    Option(PitSnapshot.lastBase.put(spark, base)).foreach(_.unpersist(blocking = false))
-    assemble(base, symbol, asOf)
-  }
+  def snapshot(spark: SparkSession, trades: DataFrame, symbol: String, asOf: Timestamp): DataFrame =
+    // The PIT guard: the single most important filter in the engine. The
+    // scan/filter stays parallel; repartition(1) then collapses the
+    // survivors — ONE symbol's history <= ts, bounded at any corpus scale —
+    // into the single partition every later operator of the assembly runs
+    // on without another exchange. Callers serving many snapshots of one
+    // symbol should use [[prepare]] (explicit cached handle).
+    assemble(trades.filter(col("symbol") === symbol && col("time") <= lit(asOf))
+      .repartition(1), symbol, asOf)
 
-  /** The 9-branch single-record assembly over an already-guarded base. */
+  /** The single-record assembly over an already-guarded, single-partition
+    * base.
+    */
   private def assemble(base: DataFrame, symbol: String, asOf: Timestamp): DataFrame = {
-    val asOfCol = lit(asOf)
-    // Latest 1-minute OHLC bar <= ts (bar may be partial — correct PIT view).
-    val ohlc = Ohlc.compute(base).agg(
-      max_by(col("open"), col("bucket")).as("open"),
-      max_by(col("high"), col("bucket")).as("high"),
-      max_by(col("low"), col("bucket")).as("low"),
-      max_by(col("close"), col("bucket")).as("close"))
+    val micros = unix_micros(col("time"))
+    // Every tick joins four (level, bucket) groups; a level is its bucket
+    // width in seconds, 0 the whole history. Bucket starts are
+    // `window(time, w).start` derived arithmetically: window() may appear
+    // only once per node. An explode, not Dataset.groupingSets: Expand
+    // forgets the single-partition layout and would add a shuffle (and a
+    // job) per aggregate, where Generate keeps it.
+    val keys = array(Seq(0L, 60L, 300L, 3600L).map { w =>
+      val start = if (w == 0) lit(0L) else micros - pmod(micros, lit(w * 1000000L))
+      struct(lit(w).as("level"), start.as("bucket"))
+    }: _*)
+    // the log-return lag crosses bucket boundaries (as in Volatility); rn
+    // ranks the ticks newest-first for the top-20 (SMA-20 and EWM-12)
+    val ticks = Volatility.withLogReturn(base)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("symbol").orderBy(col("time").desc)))
+      .select(col("*"), inline(keys))
+    def level(w: Long) = col("level") === w
 
-    // ONE top-20 frame feeds SMA-20 (which the regime tag also compares
-    // against) and the EWM-12 fold (last 12 of the ascending-sorted 20) —
-    // two of the reference's nine lookups collapsed into a single
-    // order-limit aggregate, trimming cold-plan stages (serving latency is
-    // made of stage scheduling, not data volume, at snapshot cardinality).
-    val topk = base.orderBy(col("time").desc).limit(20)
-      .agg(
-        Quantize.r(avg(col("price")), 6).as("sma_20"),
-        sort_array(collect_list(struct(col("time"), col("price")))).as("tp"))
-      .select(col("sma_20"),
-        Quantize.r(Ewm.ewmOverArray(expr(
-          "transform(slice(tp, greatest(1, size(tp) - 11), 12), x -> x.price)")), 6)
-          .as("ewm_12"))
-
-    // Latest 1-hour volatility bucket <= ts with a defined value (a
-    // single-sample bucket has NULL stddev; the DuckDB oracle's arg_max
-    // skips NULL values, so we align by filtering them out explicitly).
-    val vol = Volatility.compute(base)
-      .filter(col("volatility_1h").isNotNull)
-      .agg(max_by(col("volatility_1h"), col("bucket")).as("volatility_1h"))
-
-    // Latest 5-minute VWAP bucket <= ts.
-    val vwap = Vwap.compute(base).agg(
-      max_by(col("vwap_5m"), col("bucket")).as("vwap_5m"))
-
-    // Large-trade flag, latest bid/ask tick, and latest price fused into
-    // ONE scalar aggregate over the base: max_by skips rows whose ordering
-    // key is null, so the "latest tick carrying both bid and ask" keeps
-    // its filtered semantics via conditional keys.
+    // Stage 1: every bucket of every level in one aggregate. The whole-
+    // history inputs (top-20, percentile) are level-conditional so they do
+    // not run per bucket; the cheap per-bucket sums run on every level and
+    // stage 2 reads each only on its own level.
+    val top20 = level(0) && col("rn") <= 20
     val quoted = col("bid").isNotNull && col("ask").isNotNull
-    val scalars = base
+    def sided(s: String) =
+      sum(when(col("side").isNotNull,
+        when(col("side") === s, col("volume")).otherwise(lit(0.0)))).as(s)
+    val buckets = ticks.groupBy("level", "bucket")
       .agg(
-        percentile(col("volume"), lit(0.95)).as("p95"),
+        // 1 min: the OHLC bar (min_by/max_by = Timescale's ordered first/last)
+        min_by(col("price"), col("time")).as("open"),
+        max(col("price")).as("high"),
+        min(col("price")).as("low"),
+        max_by(col("price"), col("time")).as("close"),
+        // 5 min: VWAP, and the imbalance over the rows that carry a side
+        sum(col("price") * col("volume")).as("pv"),
+        sum(col("volume")).as("total_volume"),
+        count(col("side")).as("side_rows"),
+        sided("buy"), sided("sell"),
+        // 1 h: realized volatility
+        Quantize.r(stddev_samp(col("log_return")), 6).as("vol"),
+        // whole history: top-20, p95, and the latest tick's scalars (max_by
+        // skips rows whose ordering key is null, so the "latest tick
+        // carrying both bid and ask" keeps its filter via conditional keys)
+        Quantize.r(avg(when(top20, col("price"))), 6).as("sma_20"),
+        sort_array(collect_list(when(top20, struct(col("time"), col("price"))))).as("tp"),
+        percentile(when(level(0), col("volume")), lit(0.95)).as("p95"),
         max_by(col("volume"), col("time")).as("last_volume"),
         max_by(when(quoted, col("bid")), when(quoted, col("time"))).as("b"),
         max_by(when(quoted, col("ask")), when(quoted, col("time"))).as("a"),
         max_by(col("price"), col("time")).as("last_price"))
+
+    // Stage 2: each level's latest bucket, by max_by on a key that is null
+    // on every other level's rows.
+    def latest(w: Long, eligible: Column = lit(true)) =
+      when(level(w) && eligible, col("bucket"))
+    def pick(c: String, w: Long) = max_by(col(c), latest(w)).as(c)
+    buckets
+      .agg(
+        pick("open", 60), pick("high", 60), pick("low", 60), pick("close", 60),
+        // VWAP of the latest 5-min bucket: null when its volume is 0
+        max_by(Quantize.r(col("pv") / nullif(col("total_volume"), lit(0.0)), 6),
+          latest(300)).as("vwap_5m"),
+        // imbalance of the latest 5-min bucket holding a non-null side
+        max_by(Quantize.r((col("buy") - col("sell")) /
+            nullif(col("buy") + col("sell"), lit(0.0)), 6),
+          latest(300, col("side_rows") > 0)).as("trade_imbalance_5m"),
+        // the latest 1-h bucket with a defined value (a single-sample
+        // bucket has NULL stddev; the DuckDB oracle's arg_max skips NULL
+        // values, so they are skipped explicitly)
+        max_by(col("vol"), latest(3600, col("vol").isNotNull)).as("volatility_1h"),
+        pick("sma_20", 0), pick("tp", 0), pick("p95", 0), pick("last_volume", 0),
+        pick("b", 0), pick("a", 0), pick("last_price", 0))
+      // Regime: latest price vs SMA-20 at ts (the implicit "regime join",
+      // sql/timescaledb_schema.sql:241-255, collapsed onto the snapshot).
+      // EWM-12 folds the last 12 of the ascending-sorted top 20.
       .select(
+        lit(symbol).as("symbol"), lit(asOf).as("as_of_ts"),
+        col("open"), col("high"), col("low"), col("close"),
+        col("sma_20"),
+        Quantize.r(Ewm.ewmOverArray(expr(
+          "transform(slice(tp, greatest(1, size(tp) - 11), 12), x -> x.price)")), 6)
+          .as("ewm_12"),
+        col("volatility_1h"), col("vwap_5m"),
         (col("last_volume") > col("p95")).as("large_trade_flag"),
         Quantize.r(col("p95"), 6).as("percentile_95"),
         Quantize.r(col("b"), 6).as("bid"), Quantize.r(col("a"), 6).as("ask"),
         Quantize.r(col("a") - col("b"), 6).as("bidask_spread"),
-        col("last_price"))
-
-    // Latest 5-minute imbalance bucket <= ts.
-    val imb = Imbalance.compute(base).agg(
-      max_by(col("imbalance"), col("bucket")).as("trade_imbalance_5m"))
-
-    // Regime: latest price vs SMA-20 at ts (the implicit "regime join",
-    // sql/timescaledb_schema.sql:241-255, collapsed onto the snapshot) —
-    // computed in the final projection from the fused branches.
-    ohlc
-      .crossJoin(topk).crossJoin(vol).crossJoin(vwap)
-      .crossJoin(scalars).crossJoin(imb)
-      .select(
-        lit(symbol).as("symbol"), asOfCol.as("as_of_ts"),
-        col("open"), col("high"), col("low"), col("close"),
-        col("sma_20"), col("ewm_12"), col("volatility_1h"), col("vwap_5m"),
-        col("large_trade_flag"), col("percentile_95"),
-        col("bid"), col("ask"), col("bidask_spread"),
         col("trade_imbalance_5m"),
         when(col("last_price") > col("sma_20"), "up")
           .when(col("last_price") < col("sma_20"), "down")

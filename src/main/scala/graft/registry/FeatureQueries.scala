@@ -69,7 +69,7 @@ object FeatureQueries {
     // three chronological append commits carrying time stats + a symbol
     // bloom, then snapshotVersioned prunes to the dirs overlapping the
     // as-of horizon ∧ possibly containing the symbol before the guarded
-    // 9-branch assembly. Oracle = q_pit_snapshot's full-table SQL verbatim:
+    // one-pass assembly. Oracle = q_pit_snapshot's full-table SQL verbatim:
     // index-shaped access must be value-transparent.
     "q_pit_versioned" -> ((s, d) => {
       import graft.sources.VersionedTable

@@ -203,11 +203,12 @@ object StreamingFeatures {
     Seq("bucket", "time").find(batch.columns.contains)
 
   /** Central-schema sidecar (`_schema.json`, underscore-prefixed so parquet
-    * readers ignore it): written after every merge, it plays the role a
-    * table format's metastore schema does — readers and merges see
-    * additively-evolved columns WITHOUT an O(all-file-footers) mergeSchema
-    * pass, keeping each merge O(touched partitions) regardless of table
-    * age. Tables written before the sidecar existed fall back to
+    * readers ignore it): written by every merge before its data lands
+    * (ahead of the partition swap; inside the staged dir of a full
+    * rewrite), it plays the role a table format's metastore schema
+    * does — readers and merges see additively-evolved columns WITHOUT an
+    * O(all-file-footers) mergeSchema pass, keeping each merge O(touched
+    * partitions) regardless of table age. Tables written before the sidecar existed fall back to
     * mergeSchema once; their next merge writes the sidecar.
     */
   private def sidecarFile(tablePath: String) =
@@ -390,8 +391,13 @@ object StreamingFeatures {
         graft.BenchProbe.time("merge.write") {
           merged.write.mode("overwrite").partitionBy(PartCol).parquet(stage)
         }
+        // the sidecar goes in BEFORE the swap: a crash between the two then
+        // leaves a sidecar naming a column no swapped file carries yet
+        // (read back null-filled, as additive evolution does anyway), never
+        // swapped files carrying a column the sidecar hides
+        new java.io.File(tablePath).mkdirs()
+        writeSchemaSidecar(tablePath, merged.schema)
         graft.BenchProbe.time("merge.swap") {
-          new java.io.File(tablePath).mkdirs()
           Option(new java.io.File(stage).listFiles()).toSeq.flatten
             .filter(f => f.isDirectory && f.getName.startsWith(s"$PartCol="))
             .foreach { d =>
@@ -403,7 +409,6 @@ object StreamingFeatures {
               java.nio.file.Files.move(d.toPath, target.toPath)
             }
         }
-        writeSchemaSidecar(tablePath, merged.schema)
       } finally {
         import scala.reflect.io.Directory
         new Directory(new java.io.File(stage)).deleteRecursively()
@@ -411,16 +416,18 @@ object StreamingFeatures {
     } else {
       // No event-time column: single-partition table, full rewrite (staged
       // through a temp dir so a crash never leaves a half-written table).
+      // The sidecar is written into the staged dir, so it moves in with
+      // the data it describes.
       val tmp = tablePath + "_tmp"
       graft.BenchProbe.time("merge.write") {
         merged.write.mode("overwrite").parquet(tmp) }
+      writeSchemaSidecar(tmp, merged.schema)
       val target = new java.io.File(tablePath)
       if (target.exists()) {
         import scala.reflect.io.Directory
         new Directory(target).deleteRecursively()
       }
       new java.io.File(tmp).renameTo(target)
-      writeSchemaSidecar(tablePath, merged.schema)
     }
   }
 

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import graft.asof.{AsOfJoin, PitSnapshot}
 import graft.core.Tables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PIT correctness — the reference's central invariant suite
@@ -62,6 +63,139 @@ class PitSpec extends SparkTestBase {
     val files = scannedFiles(probe)
     assert(files.nonEmpty && files.forall(_.contains("data/v00001")),
       s"PIT probe touched out-of-horizon dirs: ${files.mkString(",")}")
+  }
+
+  test("a versioned snapshot runs as one pass: at most 2 Spark jobs, no joins, no cache") {
+    import graft.sources.VersionedTable
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true",
+      "the shape is asserted for the adaptive plan a serving session runs")
+    val root = java.nio.file.Files.createTempDirectory("graft_pitshape_").toString
+    val t = trades.select(col("time"), col("symbol"), col("price"),
+      col("volume"), col("trade_id"), col("side"), col("bid"), col("ask"))
+    // four chronological commits with time stats + a symbol bloom
+    val cuts = Seq("2000-01-01", "2024-01-08", "2024-01-16", "2024-01-24", "2100-01-01")
+      .map(d => Timestamp.valueOf(s"$d 00:00:00"))
+    for (Seq(lo, hi) <- cuts.sliding(2))
+      VersionedTable.commit(t.filter(col("time") >= lit(lo) && col("time") < lit(hi)),
+        root, "append", statsCols = Seq("time"), bloomCols = Seq("symbol"))
+    assert(VersionedTable.latestVersion(root).contains(4))
+    val group = s"pit-jobs-${java.util.UUID.randomUUID().toString.take(8)}"
+    spark.sparkContext.setJobGroup(group, "PIT snapshot job-count probe")
+    val snap = try {
+      val df = PitSnapshot.snapshotVersioned(spark, root, "3",
+        Timestamp.valueOf("2024-01-20 00:00:00"))
+      assert(df.collect().length === 1)
+      df
+    } finally spark.sparkContext.clearJobGroup()
+    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    // scan -> Exchange SinglePartition (one job), then the single task that
+    // runs both aggregates (one job)
+    assert(jobs <= 2, s"expected at most 2 Spark jobs per snapshot, saw $jobs")
+    val plan = snap.queryExecution.executedPlan
+    val offending = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case p @ (_: BroadcastNestedLoopJoinExec | _: BroadcastExchangeExec |
+          _: InMemoryTableScanExec) => p.nodeName
+    }
+    assert(offending.isEmpty, s"snapshot plan holds ${offending.mkString(", ")}:\n$plan")
+  }
+
+  /** The per-kernel formulation of a snapshot, kept as the spec of the
+    * one-pass assembly: each "latest <= ts" lookup through its own feature
+    * kernel and `max_by` over the bucket, the top-20 as an order-limit, and
+    * the 1-row results cross-joined.
+    */
+  private def perKernelSnapshot(t: DataFrame, symbol: String, asOf: Timestamp): DataFrame = {
+    import graft.features.{Ewm, Imbalance, Ohlc, Volatility, Vwap}
+    import graft.functions.Quantize
+    val base = t.filter(col("symbol") === symbol && col("time") <= lit(asOf))
+    val ohlc = Ohlc.compute(base).agg(
+      max_by(col("open"), col("bucket")).as("open"),
+      max_by(col("high"), col("bucket")).as("high"),
+      max_by(col("low"), col("bucket")).as("low"),
+      max_by(col("close"), col("bucket")).as("close"))
+    val topk = base.orderBy(col("time").desc).limit(20)
+      .agg(
+        Quantize.r(avg(col("price")), 6).as("sma_20"),
+        sort_array(collect_list(struct(col("time"), col("price")))).as("tp"))
+      .select(col("sma_20"), Quantize.r(Ewm.ewmOverArray(expr(
+        "transform(slice(tp, greatest(1, size(tp) - 11), 12), x -> x.price)")), 6).as("ewm_12"))
+    val vol = Volatility.compute(base).filter(col("volatility_1h").isNotNull)
+      .agg(max_by(col("volatility_1h"), col("bucket")).as("volatility_1h"))
+    val vwap = Vwap.compute(base).agg(max_by(col("vwap_5m"), col("bucket")).as("vwap_5m"))
+    val quoted = col("bid").isNotNull && col("ask").isNotNull
+    val scalars = base
+      .agg(
+        percentile(col("volume"), lit(0.95)).as("p95"),
+        max_by(col("volume"), col("time")).as("last_volume"),
+        max_by(when(quoted, col("bid")), when(quoted, col("time"))).as("b"),
+        max_by(when(quoted, col("ask")), when(quoted, col("time"))).as("a"),
+        max_by(col("price"), col("time")).as("last_price"))
+      .select(
+        (col("last_volume") > col("p95")).as("large_trade_flag"),
+        Quantize.r(col("p95"), 6).as("percentile_95"),
+        Quantize.r(col("b"), 6).as("bid"), Quantize.r(col("a"), 6).as("ask"),
+        Quantize.r(col("a") - col("b"), 6).as("bidask_spread"),
+        col("last_price"))
+    val imb = Imbalance.compute(base).agg(
+      max_by(col("imbalance"), col("bucket")).as("trade_imbalance_5m"))
+    ohlc.crossJoin(topk).crossJoin(vol).crossJoin(vwap).crossJoin(scalars).crossJoin(imb)
+      .select(
+        lit(symbol).as("symbol"), lit(asOf).as("as_of_ts"),
+        col("open"), col("high"), col("low"), col("close"),
+        col("sma_20"), col("ewm_12"), col("volatility_1h"), col("vwap_5m"),
+        col("large_trade_flag"), col("percentile_95"),
+        col("bid"), col("ask"), col("bidask_spread"),
+        col("trade_imbalance_5m"),
+        when(col("last_price") > col("sma_20"), "up")
+          .when(col("last_price") < col("sma_20"), "down")
+          .when(col("last_price").isNotNull, "neutral").as("regime_tag"))
+  }
+
+  test("one-pass snapshot equals the per-kernel lookups on edge-case histories") {
+    import spark.implicits._
+    def at(hms: String) = Timestamp.valueOf(s"2024-03-04 $hms")
+    // (time, price, volume, side, bid, ask)
+    val ticks = Seq[(String, Double, Double, String, java.lang.Double, java.lang.Double)](
+      ("10:00:00", 100.0, 10.0, "buy", 99.9, 100.1),
+      ("10:01:30", 101.0, 5.0, "sell", 100.9, 101.1),
+      ("10:02:10", 0.0, 3.0, "buy", null, null),     // a zero price
+      ("10:03:00", 102.0, 7.0, "sell", 101.9, 102.1),
+      ("10:20:00", 103.0, 4.0, "buy", 102.9, 103.1),
+      ("10:26:00", 103.5, 0.0, "buy", 103.4, 103.6), // sided, zero volume
+      ("10:27:00", 103.2, 0.0, "sell", 103.1, 103.3),
+      ("10:40:00", 101.5, 6.0, null, null, null),    // no quote
+      ("10:41:00", 101.7, 2.0, null, 101.6, 101.8),  // 5-min bucket: no side
+      ("10:59:00", 104.0, 2.0, "sell", 103.9, 104.1),
+      ("11:02:00", 105.0, 0.0, null, null, null))    // 1-h bucket: one tick
+      .map { case (hms, p, v, s, b, a) => (at(hms), "E", p, v, hms, s, b, a) }
+      .toDF("time", "symbol", "price", "volume", "trade_id", "side", "bid", "ask")
+    // 25 ticks a minute apart (more than the top-20) whose latest 5-min
+    // bucket carries no side
+    val ramp = rampTrades(25, "R").withColumn("side",
+      when(col("time") >= lit(Timestamp.valueOf("2024-01-01 00:20:00")), lit(null))
+        .otherwise(col("side")))
+    val cases = Seq(
+      (ticks, "E", at("11:03:00")), // vol falls back an hour; 5m: no side, zero volume
+      (ticks, "E", at("10:59:30")),
+      (ticks, "E", at("10:41:30")), // latest 5-min bucket: every side null
+      (ticks, "E", at("10:27:30")), // latest 5-min bucket: zero volume, sided
+      (ticks, "E", at("10:02:10")), // the latest tick has a zero price
+      (ticks, "E", at("10:00:00")), // a single tick
+      (ticks, "E", at("09:00:00")), // before the first tick
+      (ramp, "R", Timestamp.valueOf("2024-01-01 00:22:00")),
+      (ramp, "R", Timestamp.valueOf("2024-01-01 00:12:00")))
+    for ((t, sym, asOf) <- cases) {
+      val got = PitSnapshot.snapshot(spark, t, sym, asOf)
+      val want = perKernelSnapshot(t, sym, asOf)
+      assert(got.schema.map(f => (f.name, f.dataType)) ===
+        want.schema.map(f => (f.name, f.dataType)))
+      val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+      assert(g === w, s"$sym @ $asOf")
+    }
   }
 
   test("a symbol with no tick at or before as_of snapshots to one all-null row") {
