@@ -66,7 +66,7 @@ object PitSnapshot {
       // Materialize to a LocalRelation — the served VALUE, like the
       // reference's Redis/prepared-result row. A hit re-plans a 1-row local
       // frame (no scan, no tasks, no Catalyst work over the snapshot plan).
-      val computed = snapshot(spark, trades, symbol, asOf)
+      val computed = snapshot(trades, symbol, asOf)
       spark.createDataFrame(
         java.util.Arrays.asList(computed.collect(): _*), computed.schema)
     })
@@ -129,10 +129,10 @@ object PitSnapshot {
     */
   def snapshotVersioned(spark: SparkSession, root: String, symbol: String,
       asOf: Timestamp, asOfVersion: Option[Int] = None): DataFrame =
-    snapshot(spark, graft.sources.VersionedTable.read(spark, root, asOfVersion),
+    snapshot(graft.sources.VersionedTable.read(spark, root, asOfVersion),
       symbol, asOf)
 
-  def snapshot(spark: SparkSession, trades: DataFrame, symbol: String, asOf: Timestamp): DataFrame =
+  def snapshot(trades: DataFrame, symbol: String, asOf: Timestamp): DataFrame =
     // The PIT guard: the single most important filter in the engine. The
     // scan/filter stays parallel; repartition(1) then collapses the
     // survivors — ONE symbol's history <= ts, bounded at any corpus scale —

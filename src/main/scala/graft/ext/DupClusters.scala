@@ -138,8 +138,6 @@ object DupClusters {
       changed = next.filter(col("chg")).count()
       labels = next.select("id", "lbl")
       i += 1
-      if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-        System.err.println(s"[cc] round $i changed=$changed")
     }
     edges.unpersist()
     // A label set that is still moving when the iteration budget runs out is

@@ -147,7 +147,7 @@ object GraftExtensions {
       case None => throw new IllegalArgumentException(
         s"feature_pit_snapshot needs $PitSourceConfKey or a 'trades' view")
     }
-    graft.asof.PitSnapshot.snapshot(spark, trades, symbol, asOf)
+    graft.asof.PitSnapshot.snapshot(trades, symbol, asOf)
       .queryExecution.logical
   }
 

@@ -703,7 +703,7 @@ object CoreQueries {
     }),
 
     // OPTIMIZE ZORDER over the versioned table: land trades as ONE dir
-    // (nothing skippable), then `optimize` rewrites the snapshot as 8 dirs
+    // (nothing skippable), then `optimizeZorder` rewrites the snapshot as 8 dirs
     // clustered on the (symbol, time) Morton interleave — per-dir time
     // min/max + symbol blooms now BOTH bite on the same PIT-shaped probe
     // (middle third ∧ one symbol, via a filtered read). Oracle = the plain
@@ -721,9 +721,9 @@ object CoreQueries {
         max(col("symbol").cast("long")).as("ms"),
         min(col("symbol")).as("sym")).head()
       val (mn, mx, maxSym, sym) = (b.getLong(0), b.getLong(1), b.getLong(2), b.getString(3))
-      VersionedTable.optimize(s, root,
-        col("symbol").cast("long"), maxSym,
-        unix_micros(col("time")) - lit(mn), mx - mn,
+      VersionedTable.optimizeZorder(s, root,
+        Seq(col("symbol").cast("long") -> maxSym,
+          (unix_micros(col("time")) - lit(mn)) -> (mx - mn)),
         nDirs = 8, statsCols = Seq("time"), bloomCols = Seq("symbol"))
       val t1 = mn + (mx - mn) / 3
       val t2 = mn + 2 * ((mx - mn) / 3)

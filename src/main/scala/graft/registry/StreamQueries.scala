@@ -137,11 +137,6 @@ object StreamQueries {
         .option("checkpointLocation", Files.createTempDirectory("graft_ckpt_").toString)
         .start()
       q.awaitTermination()
-      // Per-micro-batch duration breakdown (addBatch / getBatch /
-      // commitOffsets / ...) for replay-floor attribution — measurement
-      // tool, off unless asked for (guide §1.5).
-      if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach(p => System.err.println(s"[tws] ${p.json}"))
     } finally {
       prevProvider match {
         case Some(p) => s.conf.set(providerKey, p)

@@ -438,16 +438,14 @@ class VersionedTableOps(val store: CommitStore,
   }
 
   /** Commit `df` as the next version. `mode` is "append" (snapshot = parent
-    * dirs + new dir), "overwrite" (snapshot = new dir only), or "optimize"
-    * (overwrite DIRS semantics but declared content-preserving — Delta's
-    * `dataChange=false`: change feeds cross it as an empty delta instead
-    * of forcing a resync; reserved for layout ops whose row content is
-    * identical to the parent snapshot). Returns the
-    * committed version number; throws [[VersionedTable.CommitConflictException]]
-    * if another writer claimed the target version first — detected both up
-    * front (`expectedVersion`, the CAS form: pass `latestVersion(root) + 1`
-    * as read at transaction start) and at the conditional put (defense in
-    * depth against the read-to-publish window). A losing writer can never
+    * dirs + new dir) or "overwrite" (snapshot = new dir only); the
+    * content-preserving `optimize` op is the maintenance verbs' own
+    * ([[rewrite]]). Returns the committed version number; throws
+    * [[VersionedTable.CommitConflictException]] if another writer claimed
+    * the target version first — detected both up front (`expectedVersion`,
+    * the CAS form: pass `latestVersion(root) + 1` as read at transaction
+    * start) and at the conditional put (defense in depth against the
+    * read-to-publish window). A losing writer can never
     * damage the winner's commit: its data lives under its own unique dir,
     * which is deleted on conflict (or vacuumed later if this JVM dies first).
     *
@@ -472,8 +470,7 @@ class VersionedTableOps(val store: CommitStore,
       bloomCols: Seq[String] = Seq.empty,
       bloomFpp: Double = 0.01,
       txn: Option[(String, Long)] = None): Int = {
-    require(mode == "append" || mode == "overwrite" || mode == "optimize",
-      s"bad mode $mode")
+    require(mode == "append" || mode == "overwrite", s"bad mode $mode")
     val parent = latestVersion(root)
     val version = parent.getOrElse(0) + 1
     expectedVersion.filter(_ != version)
@@ -514,9 +511,7 @@ class VersionedTableOps(val store: CommitStore,
 
     // (2) log: the conditional put is the commit point. An APPEND carries
     // the parent's deletion vectors (its dirs ride along unchanged, so
-    // their dv'd positions stay dead); overwrite/optimize start fresh
-    // (their dirs are newly written — optimize reads through [[read]],
-    // which has already folded the dvs in).
+    // their dv'd positions stay dead); an overwrite starts fresh.
     val allDvs = parentSnap.map(_.dvs).getOrElse(Seq.empty)
     try publish(root, version, parent.getOrElse(0), mode, rows,
       snapSchema.fieldNames.toSeq,
@@ -533,7 +528,7 @@ class VersionedTableOps(val store: CommitStore,
   }
 
   /** Serialize a manifest and run it through the conditional put — the one
-    * commit point shared by [[commit]] and [[optimize]]. Throws
+    * commit point every verb publishes through. Throws
     * [[VersionedTable.CommitConflictException]] on a lost race; the CALLER
     * owns cleanup of its unreferenced data dirs and sidecars.
     */
@@ -590,7 +585,7 @@ class VersionedTableOps(val store: CommitStore,
     cdfDir.foreach(d => body.append(s"cdf=$d\n"))
     // Deletion vectors: this snapshot's live rows = dirs minus these
     // positions. Carried forward by every content-preserving commit;
-    // reset by overwrite/optimize (whose fresh dirs are already folded).
+    // reset by an overwrite, folded away by the rewrites that applied them.
     dvs.foreach { d =>
       val b = if (d.bases.isEmpty) "" else s"|${d.bases.mkString(",")}"
       body.append(s"dv=${d.path}|${d.rows}$b\n")
@@ -672,7 +667,7 @@ class VersionedTableOps(val store: CommitStore,
       .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
 
   /** Schema-pinned frame over a SUBSET of a snapshot's dirs — the keep-read
-    * primitive [[readAdmitted]] and the scoped-maintenance verbs share:
+    * primitive [[readAdmitted]] and the [[rewrite]] layouts share:
     * anchor columns in anchor order (missing columns null-filled by the
     * reader, zero footer I/O), deletion vectors folded, column-mapped
     * snapshots read under physical names and renamed back.
@@ -1230,15 +1225,17 @@ class VersionedTableOps(val store: CommitStore,
 
   /** Compact the latest snapshot into one fresh dir — a content-preserving
     * `optimize` commit (the OPTIMIZE analogue for a table fragmented by
-    * many small appends). History stays readable until vacuumed; the new
+    * many small appends), staged and published by the [[rewrite]] kernel
+    * over every live dir. History stays readable until vacuumed; the new
     * version reads O(1) dirs instead of O(appends); change subscriptions
-    * cross it as an empty delta (dataChange=false), never a resync.
+    * cross it as an empty delta (dataChange=false), never a resync; a
+    * disjoint concurrent append rebases instead of aborting it.
     */
   def compact(spark: SparkSession, root: String,
       statsCols: Seq[String] = Seq.empty,
       bloomCols: Seq[String] = Seq.empty, bloomFpp: Double = 0.01): Int =
-    commit(read(spark, root), root, "optimize",
-      statsCols = statsCols, bloomCols = bloomCols, bloomFpp = bloomFpp)
+    rewrite(spark, root)((snap, _) => snap.dataDirs)(
+      oneDir(spark, root, statsCols, bloomCols, bloomFpp)).merge
 
   /** ANALYZE for the versioned table: backfill data-skipping metadata —
     * per-dir min/max for `statsCols`, bloom sidecars for `bloomCols` — onto
@@ -1246,7 +1243,7 @@ class VersionedTableOps(val store: CommitStore,
     * references the SAME data (operation `analyze`, zero rows moved). The
     * retrofit path for a table whose history predates its skipping needs:
     * filters over [[read]] start pruning immediately,
-    * with no rewrite — where [[optimize]] re-clusters the physical layout,
+    * with no rewrite — where [[optimizeZorder]] re-clusters the physical layout,
     * `analyze` only measures it. Change-feed consumers skip analyze
     * versions as additive no-ops (nothing was added), so a subscription is
     * never broken by a metadata backfill.
@@ -1296,50 +1293,42 @@ class VersionedTableOps(val store: CommitStore,
     }
   }
 
-  /** `OPTIMIZE ... ZORDER BY` for the versioned table: rewrite the latest
-    * snapshot as `nDirs` data dirs CLUSTERED on the Morton interleave of two
-    * dimensions ([[graft.operators.ZOrder]]), each dir covering one
-    * contiguous z-range, published atomically as ONE overwrite manifest
-    * carrying per-dir min/max for `statsCols` (and optional bloom sidecars).
-    * A single-dir [[compact]] gives a filtered [[read]] nothing
-    * to skip, and a linear sort clusters one dimension at the cost of the
-    * other; after a Z rewrite BOTH dimensions' stats are tight in every dir,
-    * so point/range probes on either — or both, the PIT shape — prune to
-    * O(matching dirs). This is the object-store analogue of the reference's
-    * `(symbol, time DESC)` composite index + per-day chunks
-    * (`sql/timescaledb_schema.sql:34-35`), produced by the standard
+  /** `OPTIMIZE ... ZORDER BY` for the versioned table: rewrite the scope as
+    * `nDirs` data dirs CLUSTERED on the Morton interleave of
+    * `(dimension, inclusiveDomainMax)` pairs ([[graft.operators.ZOrder]]),
+    * each dir covering one contiguous z-range and carrying per-dir min/max
+    * for `statsCols` (and optional bloom sidecars), published by the
+    * [[rewrite]] kernel. A single-dir [[compact]] gives a filtered [[read]]
+    * nothing to skip, and a linear sort clusters one dimension at the cost
+    * of the others; after a Z rewrite EVERY dimension's stats are tight in
+    * every dir, so point/range probes on any subset of the dims — the PIT
+    * shape — prune to O(matching dirs). This is the object-store analogue
+    * of the reference's composite index sets + per-day chunks
+    * (`(symbol, time)`, `(symbol, time, trade_id)` dedup probes,
+    * `sql/timescaledb_schema.sql:24,34-37`), produced by the standard
     * lakehouse OPTIMIZE job.
     *
-    * `dimA`/`dimB` are NUMERIC long-valued expressions over the table's
+    * Dimensions are NUMERIC long-valued expressions over the table's
     * columns (e.g. `unix_micros(col("time"))`, `col("symbol").cast("long")`)
     * with contractual inclusive domain maxima — deterministic scaling, no
-    * sampled quantiles (see [[graft.operators.ZOrder.scaleTo16]]); they
-    * drive the layout only and are not materialized. Cost: ONE shuffle of
-    * the snapshot (hash on the dir assignment — the code's top bits — so no
-    * sampling pass) + a local sort per dir + the new dirs' stats from
-    * their footers ([[measureDirs]]); the standard OPTIMIZE shape at 100 TB.
-    */
-  def optimize(spark: SparkSession, root: String,
-      dimA: org.apache.spark.sql.Column, maxA: Long,
-      dimB: org.apache.spark.sql.Column, maxB: Long,
-      nDirs: Int,
-      statsCols: Seq[String] = Seq.empty,
-      bloomCols: Seq[String] = Seq.empty, bloomFpp: Double = 0.01): Int =
-    optimizeZorder(spark, root, Seq(dimA -> maxA, dimB -> maxB), nDirs,
-      statsCols, bloomCols, bloomFpp)
-
-  /** N-dimensional `OPTIMIZE ... ZORDER BY`: [[optimize]] generalized to
-    * any number of `(dimension, inclusiveDomainMax)` pairs — the layout
-    * covers the reference's COMPOSITE index sets (`(symbol, time)` today,
-    * `(symbol, time, trade_id)` dedup probes,
-    * `sql/timescaledb_schema.sql:24,34-37`) with the same single-shuffle
-    * cost. Each dimension scales to 16 bits ([[graft.operators.ZOrder
+    * sampled quantiles: each scales to 16 bits ([[graft.operators.ZOrder
     * .scaleTo16]]) and interleaves at stride N ([[graft.operators.ZOrder
     * .mortonN]]; 2-dim calls produce bit-identical codes to the original
-    * Morton-16 path), so every dimension's stats stay tight in every dir
-    * and a probe on ANY subset of the dims prunes. Wide interleaves
-    * (N > 3) coarsen each dimension to `62/N` bits — granularity, not
-    * soundness, is what narrows.
+    * Morton-16 path). Wide interleaves (N > 3) coarsen each dimension to
+    * `62/N` bits — granularity, not soundness, is what narrows. The dims
+    * drive the layout only and are not materialized.
+    *
+    * Scope: every live dir by default; with `where` (`OPTIMIZE t WHERE p`)
+    * only the dirs the predicate's manifest translation admits — the SAME
+    * stats/bloom admission the scan and the DML verbs use; with
+    * `scopeDirs` a NAMED dir set (a maintenance policy's drift decision,
+    * made from manifest metadata), intersected with the live dirs so a
+    * policy computed against an older snapshot cannot resurrect a dir DML
+    * replaced. Out-of-scope dirs are carried by name, files, stats and
+    * blooms untouched — routine re-clustering of the hot range costs
+    * O(that range), never O(table). Cost: ONE shuffle of the scope (hash
+    * on the dir assignment — the code's top bits — so no sampling pass) +
+    * a local sort per dir + the new dirs' stats from their footers.
     */
   def optimizeZorder(spark: SparkSession, root: String,
       dims: Seq[(org.apache.spark.sql.Column, Long)],
@@ -1357,118 +1346,24 @@ class VersionedTableOps(val store: CommitStore,
     require((1 << java.lang.Integer.numberOfTrailingZeros(nDirs)) == nDirs &&
       java.lang.Integer.numberOfTrailingZeros(nDirs) <= codeBits,
       s"nDirs=$nDirs exceeds the ${dims.size}-dim code space ($codeBits bits)")
-    val parent = latestVersion(root)
-      .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
-    val version = parent + 1
-    // Scoped form (`OPTIMIZE t WHERE p ZORDER BY ...`): rewrite ONLY the
-    // dirs the predicate's manifest translation admits — the SAME
-    // stats/bloom admission the scan and the DML verbs use — and carry
-    // every dismissed dir BY NAME, its files, stats and blooms untouched.
-    // Routine maintenance at 100 TB re-clusters the hot range at O(that
-    // range), never O(table); the unscoped form keeps the full-snapshot
-    // Delta OPTIMIZE shape.
-    val snapP = snapshot(root, parent)
-    val anchorP = snapshotSchema(spark, root, snapP)
-    // A scope can arrive as a predicate (`OPTIMIZE t WHERE p`) or as a
-    // NAMED dir set (a maintenance policy's drift decision, which was
-    // made from manifest metadata and has no Column to offer). Named
-    // scopes are intersected with the live dirs — a policy computed
-    // against an older snapshot must not resurrect a dir DML replaced.
-    val scopeSet = scopeDirs match {
-      case Some(ds) => snapP.dataDirs.toSet intersect ds
-      case None => where match {
-        case None    => snapP.dataDirs.toSet
-        case Some(p) =>
-          admittedDirs(root, snapP,
-            predicateFilters(spark, root, anchorP, p)).toSet
-      }
-    }
-    val scoped = where.isDefined || scopeDirs.isDefined
-    if (scoped && scopeSet.isEmpty) return parent // proven no-op
-    val current =
-      if (!scoped) read(spark, root, Some(parent))
-      else readDirs(spark, root, snapP, snapP.dataDirs.filter(scopeSet), anchorP)
     val shift = codeBits - java.lang.Integer.numberOfTrailingZeros(nDirs)
     val zcode = ZOrder.mortonN(dims.map { case (c, mx) => ZOrder.scaleTo16(c, mx) })
-    val laid = current
-      .withColumn("__zcode", zcode)
-      .withColumn("__zdir", shiftright(col("__zcode"), shift))
-
-    // (1) data: one partitioned write — dir-per-z-bucket, rows z-sorted
-    // within each for row-group locality — into an attempt-unique staging
-    // tree; nothing references it until the manifest publishes.
-    val token = UUID.randomUUID().toString.take(8)
-    val staging = new File(root, s"data/.optimize-$token")
-    // Scoped rewrites on a column-mapped table land files under PHYSICAL
-    // names (the carried dirs keep theirs, so the manifest's mapped
-    // anchor must govern the new dirs too); the full rewrite keeps its
-    // logical-named files and drops the mapping wholesale — every mapped
-    // dir is gone after it.
-    val laidOut = laid.repartition(nDirs, col("__zdir"))
-      .sortWithinPartitions("__zdir", "__zcode")
-      .drop("__zcode")
-    (if (scoped) toPhysical(laidOut, anchorP) else laidOut)
-      .write.partitionBy("__zdir").parquet(staging.getPath)
-    // Promote each z-bucket to a first-class data dir through the
-    // DataStore seam (local: one rename; object model: copy+delete —
-    // legal either way because nothing references the bucket until the
-    // manifest publishes it; buckets with no rows simply don't exist).
-    val stagingRel = s"data/.optimize-$token"
-    val buckets = data.list(root, stagingRel)
-      .filter(e => !e.isFile && e.name.startsWith("__zdir="))
-      .map(e => e.name.stripPrefix("__zdir=").toLong -> e.name)
-      .sortBy(_._1)
-    val dirOf = buckets.map { case (k, srcName) =>
-      val rel = f"data/v$version%05d-$token-z$k%04d"
-      data.promoteDir(root, s"$stagingRel/$srcName", rel)
-      k -> rel
-    }.toMap
-    data.deleteTree(root, stagingRel)
-    val newDirs = dirOf.toSeq.sortBy(_._1).map(_._2)
-    // (2) stats and bloom sidecars from the shared kernel, which reads the
-    // promoted dirs (footers first) — never a second run of the z-code
-    // pipeline. The scoped rewrite's files carry the snapshot anchor's
-    // physical names; the full rewrite's carry the logical frame's.
-    val anchorZ =
-      if (scoped) anchorP
-      else VersionedTable.asNullable(current.schema)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val (rowsOf, stats, blooms) =
-      try measureDirs(spark, root, newDirs.map(d => (d, statsCols, bloomCols)),
-        anchorZ, bloomFpp, token)
-      catch { case e: Throwable =>
-        newDirs.foreach(d => data.deleteTree(root, d))
-        throw e
-      }
-    try {
-      // (3) the commit point. Operation `optimize` = content-preserving
-      // re-layout (dataChange=false): subscriptions cross it untouched.
-      if (!scoped) {
-        publish(root, version, parent, "optimize", rowsOf.values.sum,
-          current.columns.toSeq, newDirs, stats, blooms,
-          snapP.txns, // layout ops never forget writer marks
-          Some(anchorZ.json))
-        version
-      } else {
-        // scoped: dismissed dirs carried by name with their stats/blooms
-        // verbatim (byte-identical files — the survivor contract); the
-        // anchor (and any column mapping) is the snapshot's own; dv
-        // entries referencing only rewritten dirs fold away, those still
-        // covering carried dirs ride along. rows=0 like every other
-        // content-preserving maintenance commit (purgeDeletes, restore):
-        // publishing the rewritten SUBSET's count would make the same
-        // `optimize` verb report different row semantics scoped vs not.
-        // Publishes through the REBASING path: a disjoint concurrent
-        // append cannot starve routine maintenance.
-        publishScopedRewrite(root, parent, snapP, scopeSet, newDirs,
-          stats, blooms, anchorP.json, anchorP.fieldNames.toSeq)
-      }
-    } catch {
-      case e: Throwable =>
-        newDirs.foreach(d => data.deleteTree(root, d))
-        blooms.foreach(b => data.deleteFile(root, b.path))
-        throw e
-    }
+    rewrite(spark, root) { (snap, anchor) =>
+      scopeDirs.map(_.toSeq).getOrElse(where.fold(snap.dataDirs)(p =>
+        admittedDirs(root, snap, predicateFilters(spark, root, anchor, p))))
+    } { (snap, anchor, dirs, version) =>
+      // one partitioned write — dir-per-z-bucket, rows z-sorted within
+      // each for row-group locality; buckets with no rows make no dir
+      val laid = readDirs(spark, root, snap, dirs, anchor)
+        .withColumn("__zcode", zcode)
+        .withColumn("__zdir", shiftright(col("__zcode"), shift))
+        .repartition(nDirs, col("__zdir"))
+        .sortWithinPartitions("__zdir", "__zcode")
+        .drop("__zcode")
+      val (buckets, stats, blooms) = stagePartitioned(laid, root, version,
+        "__zdir", anchor, bloomFpp)(_ => (statsCols, bloomCols))
+      (buckets.map(_._2), stats, blooms)
+    }.merge
   }
 
   /** Scoped compaction — `OPTIMIZE t WHERE p` without re-clustering: the
@@ -1486,16 +1381,10 @@ class VersionedTableOps(val store: CommitStore,
   def compactWhere(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column,
       statsCols: Seq[String] = Seq.empty,
-      bloomCols: Seq[String] = Seq.empty, bloomFpp: Double = 0.01): Int = {
-    val parent = latestVersion(root)
-      .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
-    val snap = snapshot(root, parent)
-    val anchor = snapshotSchema(spark, root, snap)
-    val scopeSet = admittedDirs(root, snap,
-      predicateFilters(spark, root, anchor, predicate)).toSet
-    compactDirs(spark, root, parent, snap, anchor, scopeSet,
-      statsCols, bloomCols, bloomFpp)
-  }
+      bloomCols: Seq[String] = Seq.empty, bloomFpp: Double = 0.01): Int =
+    rewrite(spark, root)((snap, anchor) =>
+      admittedDirs(root, snap, predicateFilters(spark, root, anchor, predicate)))(
+      oneDir(spark, root, statsCols, bloomCols, bloomFpp)).merge
 
   /** The fragmented-dirs AUTO-SCOPE: collapse every data dir whose
     * on-disk footprint is below `maxBytes` into ONE fresh dir, carrying
@@ -1511,51 +1400,92 @@ class VersionedTableOps(val store: CommitStore,
       statsCols: Seq[String] = Seq.empty,
       bloomCols: Seq[String] = Seq.empty, bloomFpp: Double = 0.01): Int = {
     require(minDirs >= 2, "compacting fewer than 2 dirs moves data for nothing")
+    rewrite(spark, root) { (snap, _) =>
+      val small = snap.dataDirs.filter(d => data.sizeOfDir(root, d) < maxBytes)
+      if (small.size < minDirs) Seq.empty else small
+    }(oneDir(spark, root, statsCols, bloomCols, bloomFpp)).merge
+  }
+
+  /** What a maintenance layout staged: fresh data dirs, their dir- and
+    * file-grain stats, and their bloom sidecars.
+    */
+  private type Staged = (Seq[String], Seq[DirStat], Seq[DirBloom])
+
+  /** The one maintenance rewrite kernel behind [[compact]],
+    * [[compactWhere]], [[compactSmallDirs]], [[optimizeZorder]] and
+    * [[purgeDeletes]]. A verb supplies only a `scope` (the dirs to rewrite,
+    * chosen from the parent snapshot and its anchor) and a `layout` (stages
+    * the scope's live rows as fresh dirs under the anchor for the given
+    * version through [[stageDir]] or [[stagePartitioned]], which remove
+    * their own output when they fail). The kernel:
+    *
+    *   - resolves the parent version, its snapshot and schema anchor — the
+    *     anchor (and any column mapping) governs every rewrite, full or
+    *     scoped;
+    *   - intersects the scope with the live dirs; a proven-empty scope
+    *     with nothing to fold is a no-op, `Left(parent)`, no version
+    *     burned;
+    *   - lets the layout stage the scope (an empty scope stages nothing);
+    *   - publishes through [[publishScopedRewrite]], the one rebasing
+    *     commit point for operation `optimize` (rows=0), returning
+    *     `Right(version)`;
+    *   - deletes every staged dir and sidecar when the publish fails.
+    *
+    * Deletion vectors: every read a layout does folds the snapshot's dvs
+    * in, so a rewrite of EVERY live dir folds every dv, and
+    * `foldsEveryDv` (purge) says the layout applied them all; otherwise a
+    * dv folds away only once every dir it recorded is rewritten
+    * ([[liveDvs]]) — a dv with no recorded dirs is carried.
+    */
+  private def rewrite(spark: SparkSession, root: String,
+      foldsEveryDv: Boolean = false)(
+      scope: (Snapshot, org.apache.spark.sql.types.StructType) => Seq[String])(
+      layout: (Snapshot, org.apache.spark.sql.types.StructType, Seq[String], Int) => Staged):
+      Either[Int, Int] = {
     val parent = latestVersion(root)
       .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
     val snap = snapshot(root, parent)
     val anchor = snapshotSchema(spark, root, snap)
-    val small = snap.dataDirs.filter(d => data.sizeOfDir(root, d) < maxBytes)
-    if (small.size < minDirs) return parent
-    compactDirs(spark, root, parent, snap, anchor, small.toSet,
-      statsCols, bloomCols, bloomFpp)
-  }
-
-  /** Shared scoped-compaction kernel: fold `scopeSet`'s dirs (dvs applied)
-    * into one fresh dir, carry the rest by name, publish the
-    * content-preserving `optimize` op. Empty scope = no-op.
-    */
-  private def compactDirs(spark: SparkSession, root: String, parent: Int,
-      snap: Snapshot, anchor: org.apache.spark.sql.types.StructType,
-      scopeSet: Set[String], statsCols: Seq[String],
-      bloomCols: Seq[String], bloomFpp: Double): Int = {
-    if (scopeSet.isEmpty) return parent // skipping tiers proved a no-op
-    val version = parent + 1
-    val df = readDirs(spark, root, snap, snap.dataDirs.filter(scopeSet), anchor)
-    val (dirRel, _, stats, blooms) =
-      stageDir(df, root, version, statsCols, bloomCols, bloomFpp, anchor)
-    try {
-      // rows=0: content-preserving scoped rewrite, same convention as
-      // purgeDeletes — history `rows` means "rows this commit changed".
-      // The rebasing publish absorbs disjoint concurrent appends.
-      publishScopedRewrite(root, parent, snap, scopeSet, Seq(dirRel),
-        stats, blooms, anchor.json, anchor.fieldNames.toSeq)
-    } catch { case e: Throwable =>
-      data.deleteTree(root, dirRel)
+    val scopeSet = scope(snap, anchor).toSet
+    val dirs = snap.dataDirs.filter(scopeSet)
+    val folded =
+      if (foldsEveryDv || (dirs.nonEmpty && dirs.size == snap.dataDirs.size))
+        snap.dvs.map(_.path).toSet
+      else Set.empty[String]
+    if (dirs.isEmpty && folded.isEmpty) return Left(parent)
+    val (newDirs, stats, blooms) =
+      if (dirs.isEmpty) (Seq.empty[String], Seq.empty[DirStat], Seq.empty[DirBloom])
+      else layout(snap, anchor, dirs, parent + 1)
+    try Right(publishScopedRewrite(root, parent, snap, dirs.toSet, newDirs,
+      stats, blooms, anchor, folded))
+    catch { case e: Throwable =>
+      newDirs.foreach(data.deleteTree(root, _))
       blooms.foreach(b => data.deleteFile(root, b.path))
       throw e
     }
   }
 
-  /** The commit point for a content-preserving SCOPED rewrite (`optimize`
-    * op, rows=0): `scopeSet`'s dirs are replaced by `newDirs`, every other
-    * live dir is carried by name. Unlike a data commit, losing the
-    * conditional put here must not mean starting the whole rewrite over —
-    * on a 100 TB table with streaming appends landing every few seconds,
-    * maintenance that aborts on ANY interleaved commit never lands at all.
-    * Because the op is content-preserving over a NAMED dir set, a lost
-    * race is mechanically rebasable exactly when the winner's commits are
-    * provably disjoint from the scope:
+  /** The compaction layout: the scope's live rows as ONE fresh
+    * [[stageDir]] dir indexed on `statsCols`/`bloomCols`.
+    */
+  private def oneDir(spark: SparkSession, root: String,
+      statsCols: Seq[String], bloomCols: Seq[String], bloomFpp: Double)(
+      snap: Snapshot, anchor: org.apache.spark.sql.types.StructType,
+      dirs: Seq[String], version: Int): Staged = {
+    val (rel, _, stats, blooms) = stageDir(readDirs(spark, root, snap, dirs, anchor),
+      root, version, statsCols, bloomCols, bloomFpp, anchor)
+    (Seq(rel), stats, blooms)
+  }
+
+  /** The commit point of every content-preserving rewrite ([[rewrite]]:
+    * `optimize` op, rows=0): `scopeSet`'s dirs are replaced by `newDirs`,
+    * every other live dir is carried by name. Unlike a data commit, losing
+    * the conditional put here must not mean starting the whole rewrite
+    * over — on a 100 TB table with streaming appends landing every few
+    * seconds, maintenance that aborts on ANY interleaved commit never
+    * lands at all. Because the op is content-preserving over a NAMED dir
+    * set, a lost race is mechanically rebasable exactly when the winner's
+    * commits are provably disjoint from the scope:
     *
     *   - every scoped dir is still live at the new tip (dirs are immutable
     *     by name, so presence == byte-identical — no DML rewrote them),
@@ -1576,8 +1506,8 @@ class VersionedTableOps(val store: CommitStore,
   private[sources] def publishScopedRewrite(root: String, firstParent: Int,
       firstSnap: Snapshot, scopeSet: Set[String], newDirs: Seq[String],
       newStats: Seq[DirStat], newBlooms: Seq[DirBloom],
-      anchorJson: String, anchorCols: Seq[String],
-      foldedDvPaths: Set[String] = Set.empty,
+      anchor: org.apache.spark.sql.types.StructType,
+      foldedDvPaths: Set[String],
       maxRebase: Int = 5): Int = {
     val scopeBases = scopeSet.map(d => new File(d).getName)
     // a dv with no recorded candidate dirs could cover anything: treat it
@@ -1594,13 +1524,14 @@ class VersionedTableOps(val store: CommitStore,
       val allDirs = carried ++ newDirs
       try {
         // `foldedDvPaths` = dvs this rewrite already APPLIED into its
-        // output (a purge folds every one) — they must not survive the
-        // publish; dvs a rebase WINNER added on unscoped dirs ride along
-        publish(root, parent + 1, parent, "optimize", 0L, anchorCols,
+        // output (a purge or a whole-snapshot rewrite folds every one) —
+        // they must not survive the publish; dvs a rebase WINNER added on
+        // unscoped dirs ride along
+        publish(root, parent + 1, parent, "optimize", 0L, anchor.fieldNames.toSeq,
           allDirs,
           snap.dirStats.filter(s => carriedSet(s.dir)) ++ newStats,
           snap.dirBlooms.filter(b => carriedSet(b.dir)) ++ newBlooms,
-          snap.txns, Some(anchorJson), None,
+          snap.txns, Some(anchor.json), None,
           liveDvs(snap.dvs.filterNot(dv => foldedDvPaths(dv.path)), allDirs),
           snap.fstatsRefs)
         if (rebases > 0) VersionedTable.rebaseCount.addAndGet(rebases.toLong)
@@ -1634,9 +1565,10 @@ class VersionedTableOps(val store: CommitStore,
   /** Write `df` as a fresh attempt-unique data dir under `anchor`'s
     * physical names and measure it with [[measureDirs]]: returns (dir,
     * row count, dir- and file-grain stats, bloom sidecars). Nothing
-    * references the dir until the caller publishes; on a lost race the
-    * caller deletes it and its sidecars. The staging primitive of
-    * [[commit]], compaction and the DML paths.
+    * references the dir until the caller publishes; a failed write or
+    * measurement removes it, and on a lost race the caller deletes it and
+    * its sidecars. The staging primitive of [[commit]], compaction and the
+    * DML paths.
     */
   private def stageDir(df: DataFrame, root: String, version: Int,
       statsCols: Seq[String], bloomCols: Seq[String], bloomFpp: Double,
@@ -1645,13 +1577,14 @@ class VersionedTableOps(val store: CommitStore,
     dataDir(root).mkdirs()
     val token = UUID.randomUUID().toString.take(8)
     val dirRel = f"data/v$version%05d-$token"
-    graft.BenchProbe.time("vt.commit.write") {
-      toPhysical(df, anchor).write.parquet(new File(root, dirRel).getPath)
-    }
     val (rows, stats, blooms) =
-      try measureDirs(df.sparkSession, root, Seq((dirRel, statsCols, bloomCols)),
-        anchor, bloomFpp, token)
-      catch { case e: Throwable => data.deleteTree(root, dirRel); throw e }
+      try {
+        graft.BenchProbe.time("vt.commit.write") {
+          toPhysical(df, anchor).write.parquet(new File(root, dirRel).getPath)
+        }
+        measureDirs(df.sparkSession, root, Seq((dirRel, statsCols, bloomCols)),
+          anchor, bloomFpp, token)
+      } catch { case e: Throwable => data.deleteTree(root, dirRel); throw e }
     (dirRel, rows(dirRel), stats, blooms)
   }
 
@@ -1926,61 +1859,73 @@ class VersionedTableOps(val store: CommitStore,
     if (keepDvCols || dvs.isEmpty) live else live.drop("__dv_file", "__dv_pos")
   }
 
-  /** Stage every partially-matched dir's replacement in ONE Spark write
-    * job: `rewrite` (rows conformed to `anchor`, tagged with `__dir`
-    * basenames) lands as a single `partitionBy("__dir")` write into an
-    * attempt-unique staging tree, and each partition dir is promoted —
-    * same-filesystem rename — to a first-class data dir. Every rewritten
-    * dir inherits its predecessor's stats/bloom discipline and is measured
-    * by [[measureDirs]]: dir- and file-grain hulls from the promoted
-    * files' footers, bloom sidecars re-derived per inherited (dir, column).
-    * Nothing references the new dirs until the caller's manifest
-    * publishes; on ANY failure in here the promotions are rolled back
-    * before rethrowing, and the caller deletes them (plus sidecars) if its
-    * publish loses the race.
+  /** Stage `df` as one fresh data dir per value of `partCol` in ONE Spark
+    * write job — the one partitioned-staging step behind [[optimizeZorder]]'s
+    * z-buckets and [[stageRewrites]]' per-dir replacements. The frame lands
+    * under `anchor`'s physical names as a single `partitionBy(partCol)`
+    * write into an attempt-unique staging tree (`data/.stage-<token>`);
+    * each partition dir is promoted through the [[DataStore]] seam (local:
+    * one rename; object model: copy+delete — legal either way because
+    * nothing references it until a manifest publishes it) to
+    * `data/v<version>-<token>-p<i>`, in value order (shorter first, so
+    * integer buckets sort numerically). Every promoted dir is measured by
+    * [[measureDirs]] with the stats/bloom columns `meta` names for its
+    * partition value.
     *
-    * Returns (oldDirRel -> newDirRel, stats, blooms). Cost for K touched
-    * dirs: 1 write job + O(files) footer reads (plus 1 stats agg job over
+    * Returns ((value, dir) in value order, stats, blooms). On ANY failure
+    * — the write, a promote, the measurement — every promoted dir is
+    * deleted before rethrowing; the staging tree is deleted in every case.
+    * Cost: 1 write job + O(files) footer reads (plus 1 stats agg job over
     * the dirs whose footers cannot prove exact) + one bloom agg per
-    * inherited (dir, bloomCol) — never O(K) count/rewrite jobs.
+    * (dir, bloom column).
     */
-  private def stageRewrites(spark: SparkSession, rewrite: DataFrame,
+  private def stagePartitioned(df: DataFrame, root: String, version: Int,
+      partCol: String, anchor: org.apache.spark.sql.types.StructType,
+      bloomFpp: Double)(meta: String => (Seq[String], Seq[String])):
+      (Seq[(String, String)], Seq[DirStat], Seq[DirBloom]) = {
+    val token = UUID.randomUUID().toString.take(8)
+    val stagingRel = s"data/.stage-$token"
+    val promoted = Seq.newBuilder[String]
+    try {
+      toPhysical(df, anchor).write.partitionBy(partCol)
+        .parquet(new File(root, stagingRel).getPath)
+      val parts = data.list(root, stagingRel)
+        .filter(e => !e.isFile && e.name.startsWith(s"$partCol="))
+        .map(_.name.stripPrefix(s"$partCol="))
+        .sortBy(v => (v.length, v))
+        .zipWithIndex.map { case (v, i) =>
+          val rel = f"data/v$version%05d-$token-p$i%03d"
+          data.promoteDir(root, s"$stagingRel/$partCol=$v", rel)
+          promoted += rel
+          v -> rel
+        }
+      val (_, stats, blooms) = measureDirs(df.sparkSession, root,
+        parts.map { case (v, rel) => val (sc, bc) = meta(v); (rel, sc, bc) },
+        anchor, bloomFpp, token)
+      (parts, stats, blooms)
+    } catch { case e: Throwable =>
+      promoted.result().foreach(data.deleteTree(root, _))
+      throw e
+    } finally data.deleteTree(root, stagingRel)
+  }
+
+  /** Stage every partially-matched dir's replacement in ONE
+    * [[stagePartitioned]] job: `rows` (conformed to `anchor`,
+    * tagged with `__dir` basenames, `oldByBase` keys) partitions by
+    * `__dir`, and every rewritten dir inherits its predecessor's stats/bloom
+    * discipline. Returns (oldDirRel -> newDirRel, stats, blooms); the
+    * caller deletes the new dirs (plus sidecars) if its publish fails.
+    * Cost for K touched dirs: one write job, never O(K) count/rewrite jobs.
+    */
+  private def stageRewrites(rows: DataFrame,
       root: String, version: Int, snap: Snapshot,
       oldByBase: Map[String, String],
       anchor: org.apache.spark.sql.types.StructType, bloomFpp: Double):
       (Map[String, String], Seq[DirStat], Seq[DirBloom]) = {
-    val token = UUID.randomUUID().toString.take(8)
-    val staging = new File(root, s"data/.rewrite-$token")
-    val promoted = Seq.newBuilder[String]
-    try {
-      // (1) ONE job writes every replacement dir (dir-per-partition).
-      toPhysical(rewrite, anchor).write.partitionBy("__dir")
-        .parquet(staging.getPath)
-      val stagingRel = s"data/.rewrite-$token"
-      val parts = data.list(root, stagingRel)
-        .filter(e => !e.isFile && e.name.startsWith("__dir="))
-        .map(e => e.name.stripPrefix("__dir=") -> e.name)
-        .sortBy(_._1)
-      val newByOld = parts.zipWithIndex.map { case ((base, srcName), i) =>
-        val rel = f"data/v$version%05d-$token-rw$i%03d"
-        data.promoteDir(root, s"$stagingRel/$srcName", rel)
-        promoted += rel
-        oldByBase.getOrElse(base,
-          throw new IllegalStateException(s"unexpected partition $base")) -> rel
-      }.toMap
-      if (newByOld.isEmpty) return (Map.empty, Seq.empty, Seq.empty)
-
-      // (2) inherited disciplines, measured by the shared kernel.
-      val (_, stats, blooms) = measureDirs(spark, root,
-        newByOld.toSeq.map { case (old, rel) =>
-          val (sc, bc) = dirMetaCols(snap, old)
-          (rel, sc, bc)
-        }.sortBy(_._1), anchor, bloomFpp, token)
-      (newByOld, stats, blooms)
-    } catch { case e: Throwable =>
-      promoted.result().foreach(d => data.deleteTree(root, d))
-      throw e
-    } finally data.deleteTree(root, s"data/.rewrite-$token")
+    val (parts, stats, blooms) = stagePartitioned(rows, root, version,
+      "__dir", anchor, bloomFpp)(b => dirMetaCols(snap, oldByBase.getOrElse(b,
+        throw new IllegalStateException(s"unexpected partition $b"))))
+    (parts.map { case (b, rel) => oldByBase(b) -> rel }.toMap, stats, blooms)
   }
 
   /** Stage a DML commit's row-level change images as their own parquet
@@ -2129,7 +2074,7 @@ class VersionedTableOps(val store: CommitStore,
           val (rewritten, rwStats, rwBlooms) =
             if (partial.isEmpty)
               (Map.empty[String, String], Seq.empty[DirStat], Seq.empty[DirBloom])
-            else stageRewrites(spark,
+            else stageRewrites(
               m.filter(col("__dir").isin(partial: _*)).filter(!col("__hit"))
                 .select(anchor.map(f => col(f.name)) :+ col("__dir"): _*),
               root, version, snap, partial.map(b => b -> oldByBase(b)).toMap,
@@ -2447,16 +2392,23 @@ class VersionedTableOps(val store: CommitStore,
     } catch { case e: Throwable => src.unpersist(); throw e }
   }
 
-  /** Fold every deletion vector back into the data: rewrite ONLY the dirs
-    * the dv set actually touches (live rows staged fresh via the shared
-    * [[stageRewrites]] kernel, inheriting each dir's stats/bloom
-    * discipline), drop dirs with zero live rows, and publish ONE
-    * `operation=optimize` manifest with an EMPTY dv list. Content is
-    * preserved by construction — the new snapshot's live rows equal the
-    * parent's — so change subscriptions cross the purge as an empty delta
-    * (dataChange=false), never a resync. Untouched dirs are carried by
-    * name. Returns the new version, or None when the table has no dvs
-    * (no version burned).
+  /** Fold every deletion vector back into the data, through the
+    * [[rewrite]] kernel: the scope is the dirs the dv set actually touches
+    * (the distinct dir prefix of the dv'd file identities, intersected with
+    * the snapshot — stale entries for dirs a later COW rewrite dropped
+    * admit nothing), their live rows are staged fresh by [[stageRewrites]]
+    * (each dir inheriting its stats/bloom discipline; a dir with zero live
+    * rows emits no partition and leaves the manifest, its files kept for
+    * time travel), and ONE `operation=optimize` manifest publishes with an
+    * EMPTY dv list. When every entry is stale the scope is empty and the
+    * purge is exactly the commit that clears the dead state: the
+    * snapshot's dirs by name, no dvs. Content is preserved by construction
+    * — the new snapshot's live rows equal the parent's — so change
+    * subscriptions cross the purge as an empty delta (dataChange=false),
+    * never a resync, and a purge racing a disjoint append rebases (a dv the
+    * winner added on an unscoped dir rides along; one on a scoped dir
+    * aborts loudly). Returns the new version, or None when the table has
+    * no dvs (no version burned).
     *
     * This is the maintenance valve for merge-on-read tables: MOR DML
     * keeps commits O(delta) and lets the read-side anti-join cost
@@ -2465,60 +2417,22 @@ class VersionedTableOps(val store: CommitStore,
     * the touched dirs — never O(table) unless every dir is dv'd.
     */
   def purgeDeletes(spark: SparkSession, root: String,
-      bloomFpp: Double = 0.01): Option[Int] = {
-    val parent = latestVersion(root)
-      .getOrElse(throw new IllegalArgumentException(s"empty versioned table at $root"))
-    val snap = snapshot(root, parent)
-    if (snap.dvs.isEmpty) return None
-    val version = parent + 1
-    val anchor = snapshotSchema(spark, root, snap)
-    // dirs the dv set touches: distinct dir-prefix of the dv'd file
-    // identities, intersected with the snapshot (stale entries for dirs a
-    // later COW rewrite dropped admit nothing and cost nothing)
-    val dvBases = dvFrame(spark, root, snap.dvs)
-      .select(org.apache.spark.sql.functions
-        .split(col("__file"), "/").getItem(0).as("__d"))
-      .distinct().collect().map(_.getString(0)).toSet
-    val affected = snap.dataDirs.filter(d => dvBases(new File(d).getName))
-    if (affected.isEmpty) {
-      // EVERY dv entry is stale (later COW DML rewrote or dropped all
-      // dv'd dirs but carried the entries verbatim): there is nothing to
-      // rewrite, and the purge is exactly the commit that clears the
-      // dead state — publish the snapshot's dirs by name with an EMPTY
-      // dv list. Content-preserving by construction: stale entries match
-      // no live file identity, so dropping them changes no row.
-      publish(root, version, parent, "optimize", 0L,
-        anchor.fieldNames.toSeq, snap.dataDirs, snap.dirStats,
-        snap.dirBlooms, snap.txns, Some(anchor.json), None, Seq.empty,
-        snap.fstatsRefs)
-      return Some(version)
-    }
-    val oldByBase = affected.map(d => new File(d).getName -> d).toMap
-    val live = taggedUnion(spark, root, affected, anchor, snap.dvs)
-    val (newByOld, newStats, newBlooms) =
-      stageRewrites(spark, live, root, version, snap, oldByBase, anchor, bloomFpp)
-    try {
-      val affectedSet = affected.toSet
-      // an affected dir with ZERO live rows emits no rewrite partition —
-      // it is dropped from the manifest (files stay for time travel).
-      // rows = per-commit delta convention: a purge adds nothing. The
-      // purge is the same content-preserving scoped-rewrite shape as
-      // OPTIMIZE WHERE, so it publishes through the same REBASING path —
-      // a purge racing a streaming append re-lands carrying the winner's
-      // dirs instead of starting the dv-fold rewrite over (the folded dvs
-      // die with their scoped dirs; a dv the winner added on an UNSCOPED
-      // dir rides along, and one on a scoped dir aborts loudly).
-      val rewritten = snap.dataDirs.flatMap(d =>
-        if (affectedSet(d)) newByOld.get(d) else None)
-      Some(publishScopedRewrite(root, parent, snap, affectedSet, rewritten,
-        newStats, newBlooms, anchor.json, anchor.fieldNames.toSeq,
-        foldedDvPaths = snap.dvs.map(_.path).toSet))
-    } catch { case e: Throwable =>
-      newByOld.values.foreach(d => data.deleteTree(root, d))
-      newBlooms.foreach(b => data.deleteFile(root, b.path))
-      throw e
-    }
-  }
+      bloomFpp: Double = 0.01): Option[Int] =
+    rewrite(spark, root, foldsEveryDv = true) { (snap, _) =>
+      if (snap.dvs.isEmpty) Seq.empty
+      else {
+        val dvBases = dvFrame(spark, root, snap.dvs)
+          .select(org.apache.spark.sql.functions
+            .split(col("__file"), "/").getItem(0).as("__d"))
+          .distinct().collect().map(_.getString(0)).toSet
+        snap.dataDirs.filter(d => dvBases(new File(d).getName))
+      }
+    } { (snap, anchor, dirs, version) =>
+      val (newByOld, stats, blooms) = stageRewrites(
+        taggedUnion(spark, root, dirs, anchor, snap.dvs), root, version, snap,
+        dirs.map(d => new File(d).getName -> d).toMap, anchor, bloomFpp)
+      (dirs.flatMap(newByOld.get), stats, blooms)
+    }.toOption
 
   /** Change feed: rows ADDED between `fromVersion` (exclusive) and
     * `toVersion` (inclusive) — the input of O(delta) incremental
@@ -3040,14 +2954,14 @@ object VersionedTable extends VersionedTableOps(CommitStore.local) {
       s"commit conflict: version $version was committed concurrently; " +
         "re-read latestVersion and retry")
 
-  /** A scoped maintenance rewrite lost its conditional put to a commit
+  /** A maintenance rewrite lost its conditional put to a commit
     * that TOUCHED the scope (DML rewrote a scoped dir, a dv landed on one,
     * or the schema anchor moved) — not rebasable, by design loud.
     */
   final class ConcurrentScopeException(root: String, why: String)
     extends RuntimeException(s"scoped rewrite on $root conflicts: $why")
 
-  /** Total scoped-rewrite rebases this process performed — observability
+  /** Total maintenance-rewrite rebases this process performed — observability
     * for the maintenance-vs-writer race (asserted by the race tests).
     */
   val rebaseCount = new java.util.concurrent.atomic.AtomicLong(0)

@@ -32,7 +32,7 @@ class IntegrationSpec extends SparkTestBase {
 
     // 3. PIT snapshot over the landed data returns a fully-populated record
     val snap = graft.asof.PitSnapshot.snapshot(
-      spark, landed, "7", java.sql.Timestamp.valueOf("2024-01-20 00:00:00")).collect()(0)
+      landed, "7", java.sql.Timestamp.valueOf("2024-01-20 00:00:00")).collect()(0)
     assert(!snap.isNullAt(snap.fieldIndex("close")))
     assert(!snap.isNullAt(snap.fieldIndex("sma_20")))
     assert(!snap.isNullAt(snap.fieldIndex("regime_tag")))

@@ -315,6 +315,107 @@ class MaintenanceRaceSpec extends SparkTestBase {
     assert(ids(VersionedTable.read(spark, root)) === (0L until 250L))
   }
 
+  test("unscoped compact rebases over a disjoint concurrent append: BOTH land, content = serial") {
+    val root = freshRoot()
+    fragmentedTable(root)
+    val before = VersionedTable.rebaseCount.get()
+    val ops = new VersionedTableOps(new AmbushStore(() =>
+      VersionedTable.commit(
+        spark.range(500L, 520L).toDF("id").withColumn("v", col("id") * 2),
+        root, "append", statsCols = Seq("id"))))
+    val v = ops.compact(spark, root, statsCols = Seq("id"))
+    assert(v === 6, "the append took 5, the full compact re-published at 6")
+    assert(VersionedTable.rebaseCount.get() === before + 1)
+    val appendDir = VersionedTable.snapshot(root, 5).dataDirs
+      .filterNot(VersionedTable.snapshot(root, 4).dataDirs.toSet).head
+    val snap = VersionedTable.snapshot(root, 6)
+    assert(snap.dataDirs.size === 2 && snap.dataDirs.contains(appendDir),
+      "every base dir folds into one; the winner's append rides along")
+    assert(ids(VersionedTable.read(spark, root)) ===
+      ((0L until 300L) ++ (30L until 50L) ++ (500L until 520L)).sorted)
+  }
+
+  test("unscoped optimizeZorder rebases over a disjoint concurrent append") {
+    val root = freshRoot()
+    fragmentedTable(root)
+    val ops = new VersionedTableOps(new AmbushStore(() =>
+      VersionedTable.commit(
+        spark.range(500L, 520L).toDF("id").withColumn("v", col("id") * 2),
+        root, "append", statsCols = Seq("id"))))
+    val v = ops.optimizeZorder(spark, root,
+      Seq(col("id") -> 300L, col("v") -> 600L), nDirs = 2, statsCols = Seq("id"))
+    assert(v === 6)
+    val appendDir = VersionedTable.snapshot(root, 5).dataDirs
+      .filterNot(VersionedTable.snapshot(root, 4).dataDirs.toSet).head
+    assert(VersionedTable.snapshot(root, 6).dataDirs.contains(appendDir))
+    assert(ids(VersionedTable.read(spark, root)) ===
+      ((0L until 300L) ++ (30L until 50L) ++ (500L until 520L)).sorted)
+  }
+
+  /** A data plane that delegates to the default store but, once armed,
+    * throws on the SECOND promote of a staged partition dir — after the
+    * first promote already landed a dir under its final name.
+    */
+  private final class PromoteFailStore extends DataStore {
+    private val inner = DataStore.default
+    @volatile var armed = false
+    private var promotes = 0
+    override def promoteDir(root: String, stagedRel: String, finalRel: String): Unit = {
+      if (armed) {
+        promotes += 1
+        if (promotes == 2) {
+          armed = false
+          promotes = 0
+          throw new java.io.IOException(s"injected failure promoting $stagedRel")
+        }
+      }
+      inner.promoteDir(root, stagedRel, finalRel)
+    }
+    override def create(root: String, rel: String) = inner.create(root, rel)
+    override def open(root: String, rel: String) = inner.open(root, rel)
+    override def list(root: String, rel: String) = inner.list(root, rel)
+    override def exists(root: String, rel: String) = inner.exists(root, rel)
+    override def modifiedMs(root: String, rel: String) = inner.modifiedMs(root, rel)
+    override def deleteTree(root: String, rel: String): Unit = inner.deleteTree(root, rel)
+    override def deleteFile(root: String, rel: String): Unit = inner.deleteFile(root, rel)
+    override def cloneTree(srcRoot: String, srcRel: String,
+        dstRoot: String, dstRel: String): Unit =
+      inner.cloneTree(srcRoot, srcRel, dstRoot, dstRel)
+  }
+
+  test("partitioned staging whose promote fails deletes its staging tree and every promoted dir") {
+    val root = freshRoot()
+    fragmentedTable(root) // v1..4
+    VersionedTable.deleteMor(spark, root, col("id") === 10L)  // v5: dv on the low dir
+    VersionedTable.deleteMor(spark, root, col("id") === 150L) // v6: dv on the mid dir
+    val store = new PromoteFailStore
+    val ops = new VersionedTableOps(CommitStore.local, store)
+    // every verb that stages more than one partition dir: z-buckets, the
+    // purge's per-dir rewrites, a COW delete partially hitting two dirs
+    val verbs: Seq[(String, () => Any)] = Seq(
+      "optimizeZorder" -> (() => ops.optimizeZorder(spark, root,
+        Seq(col("id") -> 300L), nDirs = 4, statsCols = Seq("id"))),
+      "purgeDeletes" -> (() => ops.purgeDeletes(spark, root)),
+      "delete" -> (() => ops.delete(spark, root,
+        col("id") === 20L || col("id") === 120L)))
+    val leaks = verbs.map { case (name, run) =>
+      val before = unreferenced(root)
+      store.armed = true
+      val e = intercept[java.io.IOException](run())
+      assert(e.getMessage.contains("injected failure"), name)
+      assert(VersionedTable.latestVersion(root) === Some(6),
+        s"$name published despite the failure")
+      name -> (unreferenced(root) -- before).toSeq.sorted
+    }.filter(_._2.nonEmpty)
+    assert(leaks.isEmpty, s"staged artifacts left behind: ${leaks.mkString("; ")}")
+    assert(new File(root, "data").list().forall(!_.startsWith(".")),
+      "a staging tree survived the failure")
+    // disarmed, the same store commits normally
+    assert(ops.purgeDeletes(spark, root) === Some(7))
+    assert(ids(VersionedTable.read(spark, root)) ===
+      ((0L until 300L) ++ (30L until 50L)).filterNot(i => i == 10L || i == 150L).sorted)
+  }
+
   test("two separate JVMs: appender and compactor race; no row lost, both verbs land") {
     val root = freshRoot()
     fragmentedTable(root)

@@ -360,4 +360,111 @@ class MaintenanceSpec extends SparkTestBase {
     assert(!Maintenance.plan(root, p)
       .exists(_.isInstanceOf[Maintenance.Recluster]))
   }
+
+  /** Spark jobs `body` submits, counted by job group. */
+  private def jobsOf(body: => Any): Int = {
+    val group = s"maint-jobs-${java.util.UUID.randomUUID().toString.take(8)}"
+    spark.sparkContext.setJobGroup(group, "maintenance job-count probe")
+    try body finally spark.sparkContext.clearJobGroup()
+    spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("the rewrite kernel adds no Spark job to compactSmallDirs, purgeDeletes, a full optimizeZorder or compact") {
+    // compactSmallDirs and purgeDeletes run inside a timed registry pass
+    // (q_policy_sql); each count is pinned at what the verb submitted
+    // before the verbs shared one kernel
+    val small = freshRoot()
+    rangedTable(small)
+    assert(jobsOf(VersionedTable.compactSmallDirs(spark, small,
+      maxBytes = Long.MaxValue / 2, statsCols = Seq("id"))) <= 1)
+    val dv = freshRoot()
+    rangedTable(dv)
+    VersionedTable.deleteMor(spark, dv, col("id") >= 10L && col("id") < 20L)
+    VersionedTable.deleteMor(spark, dv, col("id") >= 250L && col("id") < 260L)
+    assert(jobsOf(VersionedTable.purgeDeletes(spark, dv)) <= 4)
+    val z = freshRoot()
+    rangedTable(z)
+    assert(jobsOf(VersionedTable.optimizeZorder(spark, z,
+      Seq(col("id") -> 300L, col("v") -> 600L), nDirs = 4,
+      statsCols = Seq("id"), bloomCols = Seq("id"))) <= 6)
+    val full = freshRoot()
+    rangedTable(full)
+    assert(jobsOf(VersionedTable.compact(spark, full, statsCols = Seq("id"))) <= 1)
+  }
+
+  test("full OPTIMIZE and compact keep a column-mapped anchor; DROP + re-ADD after brings back nothing") {
+    val root = freshRoot()
+    rangedTable(root)
+    VersionedTable.renameColumn(spark, root, "v", "val") // maps the table
+    val expected = VersionedTable.read(spark, root).collect().map(r =>
+      r.getLong(0) -> r.getLong(1)).toMap
+    def rows = VersionedTable.read(spark, root).collect().map(r =>
+      r.getLong(0) -> r.getLong(1)).toMap
+    val vc = VersionedTable.compact(spark, root, statsCols = Seq("id"))
+    val vz = VersionedTable.optimizeZorder(spark, root,
+      Seq(col("id") -> 300L), nDirs = 2, statsCols = Seq("id"))
+    for (v <- Seq(vc, vz)) {
+      val snap = VersionedTable.snapshot(root, v)
+      val anchor = VersionedTable.anchorAt(spark, root, v)
+      assert(VersionedTable.isMapped(anchor), s"v$v dropped the column mapping")
+      assert(anchor.fieldNames.toSeq === Seq("id", "val"))
+      snap.dataDirs.foreach { d =>
+        val footer = spark.read.parquet(new File(root, d).getPath).columns
+        assert(footer.contains("v") && !footer.contains("val"),
+          s"v$v's $d must land files under the physical name")
+      }
+    }
+    assert(rows === expected, "the full rewrites must read the same logical rows")
+    VersionedTable.dropColumns(spark, root, Seq("val"))
+    VersionedTable.addColumns(spark, root,
+      Seq(org.apache.spark.sql.types.StructField("val",
+        org.apache.spark.sql.types.LongType)))
+    val back = VersionedTable.read(spark, root)
+    assert(back.count() === 300L)
+    assert(back.filter(col("val").isNotNull).count() === 0L,
+      "a re-added column must not resurrect pre-drop values")
+  }
+
+  test("every content-preserving rewrite publishes rows=0 and keeps the snapshot anchor") {
+    val root = freshRoot()
+    rangedTable(root)
+    VersionedTable.deleteMor(spark, root, col("id") === 250L)
+    val anchor = VersionedTable.anchorAt(spark, root, 4)
+    val versions = Seq(
+      VersionedTable.compactWhere(spark, root, col("id") <= 50L),
+      VersionedTable.purgeDeletes(spark, root).get,
+      VersionedTable.compact(spark, root, statsCols = Seq("id")),
+      VersionedTable.optimizeZorder(spark, root, Seq(col("id") -> 300L),
+        nDirs = 2, statsCols = Seq("id")),
+      VersionedTable.compactSmallDirs(spark, root, maxBytes = Long.MaxValue / 2))
+    assert(versions === (5 to 9))
+    versions.foreach { v =>
+      val snap = VersionedTable.snapshot(root, v)
+      assert(snap.operation === "optimize" && snap.rows === 0L,
+        s"v$v: ${snap.operation} rows=${snap.rows}")
+      assert(VersionedTable.anchorAt(spark, root, v) === anchor)
+    }
+    assert(VersionedTable.historySummary(root).filter(_.version >= 5)
+      .forall(_.rows == 0L))
+    assert(ids(VersionedTable.read(spark, root)) === (0L until 300L).filterNot(_ == 250L))
+  }
+
+  test("an empty scope is a no-op for every rewrite verb, no version burned") {
+    val root = freshRoot()
+    val Seq(d1, _, _) = rangedTable(root)
+    val z = Seq(col("id") -> 300L)
+    assert(VersionedTable.compactWhere(spark, root, col("id") > 10000L) === 3)
+    assert(VersionedTable.compactSmallDirs(spark, root, maxBytes = 1L) === 3)
+    assert(VersionedTable.optimizeZorder(spark, root, z, nDirs = 2,
+      where = Some(col("id") > 10000L)) === 3)
+    assert(VersionedTable.optimizeZorder(spark, root, z, nDirs = 2,
+      scopeDirs = Some(Set("data/v00001-gone"))) === 3)
+    assert(VersionedTable.purgeDeletes(spark, root) === None)
+    // a snapshot with no live dirs: the full rewrites have nothing to do
+    VersionedTable.delete(spark, root, col("id") >= 0L)
+    assert(VersionedTable.compact(spark, root) === 4)
+    assert(VersionedTable.optimizeZorder(spark, root, z, nDirs = 2) === 4)
+    assert(VersionedTable.latestVersion(root) === Some(4))
+    assert(VersionedTable.snapshot(root, 3).dataDirs.contains(d1))
+  }
 }

@@ -16,18 +16,18 @@ class PitSpec extends SparkTestBase {
 
   test("no future leakage: snapshot equals snapshot over pre-truncated data") {
     val asOf = Timestamp.valueOf("2024-01-15 00:00:00")
-    val full = PitSnapshot.snapshot(spark, trades, "3", asOf).collect()(0)
+    val full = PitSnapshot.snapshot(trades, "3", asOf).collect()(0)
     // An engine that leaks future rows would differ when the future is
     // physically removed:
     val truncated = PitSnapshot.snapshot(
-      spark, trades.filter(col("time") <= lit(asOf)), "3", asOf).collect()(0)
+      trades.filter(col("time") <= lit(asOf)), "3", asOf).collect()(0)
     assert(full === truncated)
   }
 
   test("determinism: same query twice gives identical records") {
     val asOf = Timestamp.valueOf("2024-01-20 00:00:00")
-    val a = PitSnapshot.snapshot(spark, trades, "5", asOf).collect()(0)
-    val b = PitSnapshot.snapshot(spark, trades, "5", asOf).collect()(0)
+    val a = PitSnapshot.snapshot(trades, "5", asOf).collect()(0)
+    val b = PitSnapshot.snapshot(trades, "5", asOf).collect()(0)
     assert(a === b)
   }
 
@@ -53,7 +53,7 @@ class PitSpec extends SparkTestBase {
     val viaVersioned = PitSnapshot
       .snapshotVersioned(spark, root, "3", asOf).collect()(0)
     val full = PitSnapshot.snapshot(
-      spark, VersionedTable.read(spark, root), "3", asOf).collect()(0)
+      VersionedTable.read(spark, root), "3", asOf).collect()(0)
     assert(viaVersioned === full,
       "skipping-tier snapshot must equal the full-table snapshot")
     // and the access path really skips: the PIT guard over the read
@@ -189,7 +189,7 @@ class PitSpec extends SparkTestBase {
       (ramp, "R", Timestamp.valueOf("2024-01-01 00:22:00")),
       (ramp, "R", Timestamp.valueOf("2024-01-01 00:12:00")))
     for ((t, sym, asOf) <- cases) {
-      val got = PitSnapshot.snapshot(spark, t, sym, asOf)
+      val got = PitSnapshot.snapshot(t, sym, asOf)
       val want = perKernelSnapshot(t, sym, asOf)
       assert(got.schema.map(f => (f.name, f.dataType)) ===
         want.schema.map(f => (f.name, f.dataType)))
@@ -203,7 +203,7 @@ class PitSpec extends SparkTestBase {
     // CTE yields one NULL row, so the cross join is a single row carrying
     // only the requested symbol and as-of time
     val asOf = Timestamp.valueOf("2000-01-01 00:00:00")
-    val rows = PitSnapshot.snapshot(spark, trades, "3", asOf).collect()
+    val rows = PitSnapshot.snapshot(trades, "3", asOf).collect()
     assert(rows.length === 1)
     val row = rows(0)
     assert(row.getAs[String]("symbol") === "3")
@@ -217,7 +217,7 @@ class PitSpec extends SparkTestBase {
     // 20 ticks of 0.1: the raw average is 0.10000000000000002, the
     // reported (quantized) sma_20 is 0.1 — equal to the last price
     val flat = rampTrades(25, "FLAT").withColumn("price", lit(0.1))
-    val row = PitSnapshot.snapshot(spark, flat, "FLAT",
+    val row = PitSnapshot.snapshot(flat, "FLAT",
       Timestamp.valueOf("2024-01-02 00:00:00")).collect()(0)
     assert(row.getAs[Double]("sma_20") === 0.1)
     assert(row.getAs[String]("regime_tag") === "neutral")
@@ -232,7 +232,7 @@ class PitSpec extends SparkTestBase {
   test("snapshot JSON export round-trips every feature key (helpers.py:123-147 parity)") {
     import graft.serving.SnapshotExport
     val asOf = Timestamp.valueOf("2024-01-15 00:00:00")
-    val snap = PitSnapshot.snapshot(spark, trades, "3", asOf)
+    val snap = PitSnapshot.snapshot(trades, "3", asOf)
     val out = java.nio.file.Files.createTempDirectory("graft_snapjson_")
       .resolve("snapshot.json").toString
     val doc = SnapshotExport.exportToJson(snap, out)

@@ -524,7 +524,7 @@ class PlanSpec extends SparkTestBase {
     try {
       Seq(asOf1, asOf2).foreach { ts =>
         val viaHandle = handle.at(ts)
-        val oneShot = graft.asof.PitSnapshot.snapshot(spark, t, "7", ts)
+        val oneShot = graft.asof.PitSnapshot.snapshot(t, "7", ts)
         assert(viaHandle.exceptAll(oneShot).count() === 0)
         assert(oneShot.exceptAll(viaHandle).count() === 0)
       }
@@ -744,7 +744,7 @@ class PlanSpec extends SparkTestBase {
       .agg(max(col("time"))).head().getTimestamp(0)
     val asOf = new java.sql.Timestamp(mx.getTime - 30L * 60 * 1000)
     val expected = graft.asof.PitSnapshot
-      .snapshot(spark, t, probe, asOf).collect().toSeq
+      .snapshot(t, probe, asOf).collect().toSeq
     val prevActive = SparkSession.getActiveSession
     val prevDefault = SparkSession.getDefaultSession
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()

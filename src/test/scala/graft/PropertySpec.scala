@@ -70,9 +70,9 @@ class PropertySpec extends SparkTestBase {
     forAll(Gen.zip(Gen.choose(1, 28), Gen.choose(0L, 100000L))) { case (day, seed) =>
       val t = genTrades(50, seed)
       val asOf = Timestamp.valueOf(f"2024-01-$day%02d 12:00:00")
-      val full = PitSnapshot.snapshot(spark, t, "1", asOf).collect()(0)
+      val full = PitSnapshot.snapshot(t, "1", asOf).collect()(0)
       val truncated = PitSnapshot.snapshot(
-        spark, t.filter(col("time") <= lit(asOf)), "1", asOf).collect()(0)
+        t.filter(col("time") <= lit(asOf)), "1", asOf).collect()(0)
       assert(full === truncated)
     }
   }

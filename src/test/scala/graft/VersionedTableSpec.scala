@@ -1050,8 +1050,8 @@ class VersionedTableSpec extends SparkTestBase {
         (col("id") / 32).cast("long").as("y")) // `/` on longs is double division
 
     VersionedTable.commit(grid, root)
-    val v = VersionedTable.optimize(spark, root,
-      col("x"), 31L, col("y"), 31L, nDirs = 16, statsCols = Seq("x", "y"))
+    val v = VersionedTable.optimizeZorder(spark, root,
+      Seq(col("x") -> 31L, col("y") -> 31L), nDirs = 16, statsCols = Seq("x", "y"))
     assert(v === 2)
     // content is exactly preserved (and v1 stays time-travel readable)
     val after = VersionedTable.read(spark, root)
