@@ -1,12 +1,15 @@
 package graft.asof
 
-import graft.functions.Quantize
 import java.sql.Timestamp
 
-import graft.features.{Ewm, Volatility}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
+import graft.features.Ewm
+import graft.functions.Quantize
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.functions.{col, lit, unix_micros}
+import org.apache.spark.sql.types._
 
 /** Point-in-time feature snapshot: every contract feature for one symbol,
   * using ONLY data with `time <= as_of_ts` — the reference's flagship entry
@@ -20,16 +23,24 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first shape: one partition-pruned filtered scan of the fact table
   * (`symbol = ? AND time <= ts` — predicate pushes to parquet), collapsed to
-  * one partition, then ONE pass over it. The nine lookups read four bucket
-  * levels of the same ticks — the whole history, 1 min, 5 min and 1 h — so
-  * one aggregate keyed by (level, bucket) computes every bucket of every
-  * level, and one global aggregate picks each level's latest bucket with `max_by` on a key
-  * that is set only on that level's rows (`max_by` over the bucket is the
-  * exact analogue of the SQL `ORDER BY time DESC LIMIT 1` under the same
-  * filter). Like the reference's single `(symbol, time DESC)` index scan
-  * (`sql/timescaledb_schema.sql:34-35`), a snapshot is scan → one
-  * single-partition exchange → one task: two Spark jobs, no joins, nothing
-  * cached, nothing collected to the driver.
+  * one partition, sorted by time (Spark's spillable sort), then ONE
+  * streaming fold over it — the reference's procedural pass over a single
+  * `(symbol, time DESC)` index scan (`sql/timescaledb_schema.sql:34-35`).
+  * The nine lookups read four bucket levels of the same ticks — the whole
+  * history, 1 min, 5 min and 1 h — and in time order each "latest bucket"
+  * is just the bucket being filled, so the fold keeps bounded state: the
+  * current 1-min bar, the current 5-min VWAP sums, the latest sided 5-min
+  * bucket, per-hour Welford moments of the log returns, a ring of the last
+  * 20 ticks (SMA-20, EWM-12) and a value→count histogram of volumes (exact
+  * p95). Per request that is O(distinct volumes + 20) beside the sort.
+  * Every value follows the SQL it replaces bit for bit: aggregates skip
+  * NULLs, an ordered first/last pick keeps a NULL value, sums and moments
+  * follow Spark's own update steps, floats quantize through [[Quantize]].
+  * No aggregate, window or generator is planned: those are not whole-stage
+  * code-generated, and their per-task projection codegen was 44% of a
+  * snapshot's executor samples. A snapshot is scan → one single-partition
+  * exchange → one task: two Spark jobs, no joins, nothing cached, nothing
+  * collected to the driver.
   */
 object PitSnapshot {
 
@@ -136,108 +147,214 @@ object PitSnapshot {
     // The PIT guard: the single most important filter in the engine. The
     // scan/filter stays parallel; repartition(1) then collapses the
     // survivors — ONE symbol's history <= ts, bounded at any corpus scale —
-    // into the single partition every later operator of the assembly runs
-    // on without another exchange. Callers serving many snapshots of one
-    // symbol should use [[prepare]] (explicit cached handle).
+    // into the single partition the fold runs on without another exchange.
+    // Callers serving many snapshots of one symbol should use [[prepare]]
+    // (explicit cached handle).
     assemble(trades.filter(col("symbol") === symbol && col("time") <= lit(asOf))
       .repartition(1), symbol, asOf)
 
+  /** The snapshot record: the reference's 14 contract columns plus the
+    * percentile and the quoted bid/ask behind the flags.
+    */
+  private val Record = StructType(
+    Seq(StructField("symbol", StringType, nullable = false),
+      StructField("as_of_ts", TimestampType, nullable = false)) ++
+      Seq("open", "high", "low", "close", "sma_20", "ewm_12", "volatility_1h", "vwap_5m")
+        .map(StructField(_, DoubleType)) ++
+      Seq(StructField("large_trade_flag", BooleanType)) ++
+      Seq("percentile_95", "bid", "ask", "bidask_spread", "trade_imbalance_5m")
+        .map(StructField(_, DoubleType)) ++
+      Seq(StructField("regime_tag", StringType)))
+
   /** The single-record assembly over an already-guarded, single-partition
-    * base.
+    * base: Spark's (spillable) sort orders the partition by time, then one
+    * task folds it into the record. The fold emits `symbol` and `as_of_ts`
+    * itself: a literal projection would compile a new class per request.
     */
   private def assemble(base: DataFrame, symbol: String, asOf: Timestamp): DataFrame = {
-    val micros = unix_micros(col("time"))
-    // Every tick joins four (level, bucket) groups; a level is its bucket
-    // width in seconds, 0 the whole history. Bucket starts are
-    // `window(time, w).start` derived arithmetically: window() may appear
-    // only once per node. An explode, not Dataset.groupingSets: Expand
-    // forgets the single-partition layout and would add a shuffle (and a
-    // job) per aggregate, where Generate keeps it.
-    val keys = array(Seq(0L, 60L, 300L, 3600L).map { w =>
-      val start = if (w == 0) lit(0L) else micros - pmod(micros, lit(w * 1000000L))
-      struct(lit(w).as("level"), start.as("bucket"))
-    }: _*)
-    // the log-return lag crosses bucket boundaries (as in Volatility); rn
-    // ranks the ticks newest-first for the top-20 (SMA-20 and EWM-12)
-    val ticks = Volatility.withLogReturn(base)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("symbol").orderBy(col("time").desc)))
-      .select(col("*"), inline(keys))
-    def level(w: Long) = col("level") === w
+    val ticks = base.select(unix_micros(col("time")).as("t"),
+      col("price"), col("volume"), col("side"), col("bid"), col("ask"))
+    // Spark plans a relation it proves empty (statically, or once the
+    // exchange wrote no row) as zero partitions, which would fold to zero
+    // records. One NULL-time row keeps the single partition; the fold skips
+    // it, so an empty history still yields the all-NULL record.
+    val marker = base.sparkSession.createDataFrame(
+      java.util.List.of(Row.fromSeq(Seq.fill(ticks.columns.length)(null))),
+      StructType(ticks.schema.map(_.copy(nullable = true))))
+    ticks.union(marker).coalesce(1)
+      .sortWithinPartitions("t")
+      .mapPartitions { rows =>
+        val fold = new Fold
+        rows.filterNot(_.isNullAt(0)).foreach(fold.add)
+        Iterator.single(fold.record(symbol, asOf))
+      }(Encoders.row(Record))
+  }
 
-    // Stage 1: every bucket of every level in one aggregate. The whole-
-    // history inputs (top-20, percentile) are level-conditional so they do
-    // not run per bucket; the cheap per-bucket sums run on every level and
-    // stage 2 reads each only on its own level.
-    val top20 = level(0) && col("rn") <= 20
-    val quoted = col("bid").isNotNull && col("ask").isNotNull
-    def sided(s: String) =
-      sum(when(col("side").isNotNull,
-        when(col("side") === s, col("volume")).otherwise(lit(0.0)))).as(s)
-    val buckets = ticks.groupBy("level", "bucket")
-      .agg(
-        // 1 min: the OHLC bar (min_by/max_by = Timescale's ordered first/last)
-        min_by(col("price"), col("time")).as("open"),
-        max(col("price")).as("high"),
-        min(col("price")).as("low"),
-        max_by(col("price"), col("time")).as("close"),
-        // 5 min: VWAP, and the imbalance over the rows that carry a side
-        sum(col("price") * col("volume")).as("pv"),
-        sum(col("volume")).as("total_volume"),
-        count(col("side")).as("side_rows"),
-        sided("buy"), sided("sell"),
-        // 1 h: realized volatility
-        Quantize.r(stddev_samp(col("log_return")), 6).as("vol"),
-        // whole history: top-20, p95, and the latest tick's scalars (max_by
-        // skips rows whose ordering key is null, so the "latest tick
-        // carrying both bid and ask" keeps its filter via conditional keys)
-        Quantize.r(avg(when(top20, col("price"))), 6).as("sma_20"),
-        sort_array(collect_list(when(top20, struct(col("time"), col("price"))))).as("tp"),
-        percentile(when(level(0), col("volume")), lit(0.95)).as("p95"),
-        max_by(col("volume"), col("time")).as("last_volume"),
-        max_by(when(quoted, col("bid")), when(quoted, col("time"))).as("b"),
-        max_by(when(quoted, col("ask")), when(quoted, col("time"))).as("a"),
-        max_by(col("price"), col("time")).as("last_price"))
+  private type D = java.lang.Double
+  private val MinuteUs = 60L * 1000000L
+  private val FiveMinUs = 5 * MinuteUs
+  private val HourUs = 60 * MinuteUs
+  private val TopK = 20
+  private val EwmSpan = 12
 
-    // Stage 2: each level's latest bucket, by max_by on a key that is null
-    // on every other level's rows.
-    def latest(w: Long, eligible: Column = lit(true)) =
-      when(level(w) && eligible, col("bucket"))
-    def pick(c: String, w: Long) = max_by(col(c), latest(w)).as(c)
-    buckets
-      .agg(
-        pick("open", 60), pick("high", 60), pick("low", 60), pick("close", 60),
-        // VWAP of the latest 5-min bucket: null when its volume is 0
-        max_by(Quantize.r(col("pv") / nullif(col("total_volume"), lit(0.0)), 6),
-          latest(300)).as("vwap_5m"),
-        // imbalance of the latest 5-min bucket holding a non-null side
-        max_by(Quantize.r((col("buy") - col("sell")) /
-            nullif(col("buy") + col("sell"), lit(0.0)), 6),
-          latest(300, col("side_rows") > 0)).as("trade_imbalance_5m"),
-        // the latest 1-h bucket with a defined value (a single-sample
-        // bucket has NULL stddev; the DuckDB oracle's arg_max skips NULL
-        // values, so they are skipped explicitly)
-        max_by(col("vol"), latest(3600, col("vol").isNotNull)).as("volatility_1h"),
-        pick("sma_20", 0), pick("tp", 0), pick("p95", 0), pick("last_volume", 0),
-        pick("b", 0), pick("a", 0), pick("last_price", 0))
-      // Regime: latest price vs SMA-20 at ts (the implicit "regime join",
-      // sql/timescaledb_schema.sql:241-255, collapsed onto the snapshot).
-      // EWM-12 folds the last 12 of the ascending-sorted top 20.
-      .select(
-        lit(symbol).as("symbol"), lit(asOf).as("as_of_ts"),
-        col("open"), col("high"), col("low"), col("close"),
-        col("sma_20"),
-        Quantize.r(Ewm.ewmOverArray(expr(
-          "transform(slice(tp, greatest(1, size(tp) - 11), 12), x -> x.price)")), 6)
-          .as("ewm_12"),
-        col("volatility_1h"), col("vwap_5m"),
-        (col("last_volume") > col("p95")).as("large_trade_flag"),
-        Quantize.r(col("p95"), 6).as("percentile_95"),
-        Quantize.r(col("b"), 6).as("bid"), Quantize.r(col("a"), 6).as("ask"),
-        Quantize.r(col("a") - col("b"), 6).as("bidask_spread"),
-        col("trade_imbalance_5m"),
-        when(col("last_price") > col("sma_20"), "up")
-          .when(col("last_price") < col("sma_20"), "down")
-          .when(col("last_price").isNotNull, "neutral").as("regime_tag"))
+  /** Spark's double comparison (NaN above every value, 0.0 = -0.0). */
+  private def cmp(a: Double, b: Double): Int = SQLOrderingUtil.compareDoubles(a, b)
+
+  /** SQL `SUM` step: nulls skip, the first value lands on 0.0. */
+  private def plus(acc: D, x: D): D =
+    if (x == null) acc else (if (acc == null) 0.0 else acc.doubleValue) + x
+
+  /** A binary SQL arithmetic op: NULL if either side is. */
+  private def both(a: D, b: D)(f: (Double, Double) => Double): D =
+    if (a == null || b == null) null else f(a, b)
+
+  private def q(x: D): D = if (x == null) null else Quantize.value(x)
+
+  /** `x / nullif(d, 0)`, NULL-propagating. */
+  private def ratio(x: D, d: D): D =
+    if (x == null || d == null || cmp(d, 0.0) == 0) null else x / d
+
+  /** Running state of one snapshot over its time-ordered ticks. Every
+    * field is bounded except the volume histogram (one entry per distinct
+    * volume, as Spark's own percentile buffer). Each "latest bucket" lookup
+    * of the reference keeps only its current bucket: the ticks arrive in
+    * time order, so a new bucket id means the previous one is complete.
+    */
+  private final class Fold {
+    // 1 min: the OHLC bar of the latest bucket (open/close keep a NULL
+    // price at the first/last tick; high/low skip it)
+    private var minute = Long.MinValue
+    private var open, high, low, close: D = null
+    // 5 min: the VWAP sums of the latest bucket
+    private var fiveMin = Long.MinValue
+    private var pv, volume: D = null
+    // 5 min: the imbalance sums of the latest bucket holding a non-null side
+    private var sidedFiveMin = Long.MinValue
+    private var buy, sell: D = null
+    // 1 h: Spark's stddev_samp (Welford) over the non-null log returns of
+    // the current hour; the lag crosses hour boundaries
+    private var hour = Long.MinValue
+    private var n, mean, m2 = 0.0
+    private var volatility: D = null
+    private var prevPrice: D = null
+    // the newest TopK (time, price), oldest first
+    private val recent = scala.collection.mutable.Queue.empty[(Long, D)]
+    // exact p95: value -> count (Double.equals keys, as Spark's buffer)
+    private val volumes = new java.util.HashMap[D, java.lang.Long]()
+    private var lastVolume, bid, ask: D = null
+
+    def add(r: Row): Unit = {
+      def d(i: Int): D = if (r.isNullAt(i)) null else r.getDouble(i)
+      val t = r.getLong(0)
+      val p = d(1)
+      val v = d(2)
+      val side = r.getString(3)
+
+      val m = t - Math.floorMod(t, MinuteUs)
+      if (m != minute) { minute = m; open = p; high = null; low = null }
+      if (p != null) {
+        if (high == null || cmp(p, high) > 0) high = p
+        if (low == null || cmp(p, low) < 0) low = p
+      }
+      close = p
+
+      val f = t - Math.floorMod(t, FiveMinUs)
+      if (f != fiveMin) { fiveMin = f; pv = null; volume = null }
+      pv = plus(pv, both(p, v)(_ * _))
+      volume = plus(volume, v)
+      if (side != null) {
+        if (f != sidedFiveMin) { sidedFiveMin = f; buy = null; sell = null }
+        buy = plus(buy, if (side == "buy") v else 0.0)
+        sell = plus(sell, if (side == "sell") v else 0.0)
+      }
+
+      val h = t - Math.floorMod(t, HourUs)
+      if (h != hour) { closeHour(); hour = h; n = 0.0; mean = 0.0; m2 = 0.0 }
+      // ln(nullif(p, 0) / nullif(prev, 0)); Spark's ln is NULL at x <= 0
+      val x = ratio(if (p != null && cmp(p, 0.0) == 0) null else p, prevPrice)
+      if (x != null && !(x <= 0.0)) {
+        val delta = StrictMath.log(x) - mean
+        n += 1.0
+        val deltaN = delta / n
+        mean += deltaN
+        m2 += delta * (delta - deltaN)
+      }
+      prevPrice = p
+
+      recent.enqueue((t, p))
+      if (recent.size > TopK) recent.dequeue()
+
+      if (v != null) {
+        val c = volumes.get(v)
+        volumes.put(v, if (c == null) 1L else c + 1L)
+      }
+      lastVolume = v
+      if (!r.isNullAt(4) && !r.isNullAt(5)) { bid = d(4); ask = d(5) }
+    }
+
+    /** The hour's sample stddev, kept when defined (n >= 2): the latest
+      * 1-h bucket with a non-null volatility.
+      */
+    private def closeHour(): Unit =
+      if (n >= 2.0) volatility = q(math.sqrt(m2 / (n - 1.0)))
+
+    /** Spark's `avg`: a 0.0-seeded sum (NULLs add 0.0), newest first. */
+    private def sma: D = {
+      val top = recent.reverseIterator.map(_._2).toSeq
+      val k = top.count(_ != null)
+      if (k == 0) null
+      else q(top.foldLeft(0.0)((s, p) => s + (if (p == null) 0.0 else p.doubleValue)) / k)
+    }
+
+    /** [[Ewm.ewmOverArray]] over the last EwmSpan prices of the newest
+      * TopK sorted by (time, price): seeded at the oldest, NULL if any is.
+      */
+    private def ewm: D = {
+      val byTimePrice = Ordering.Tuple2(Ordering.Long, Ordering.fromLessThan[D] {
+        (a, b) => b != null && (a == null || cmp(a, b) < 0)
+      })
+      val prices = recent.toSeq.sorted(byTimePrice).takeRight(EwmSpan).map(_._2)
+      if (prices.isEmpty || prices.contains(null)) null
+      else q(prices.tail.foldLeft(prices.head.doubleValue) {
+        (s, x) => (1.0 - Ewm.Alpha) * s + Ewm.Alpha * x.doubleValue
+      })
+    }
+
+    /** Spark's exact `percentile(volume, 0.95)`: linear interpolation
+      * between the order statistics around (n - 1) * 0.95.
+      */
+    private def p95: D = if (volumes.isEmpty) null else {
+      val sorted = volumes.entrySet.asScala.toSeq
+        .map(e => (e.getKey.doubleValue, e.getValue.longValue))
+        .sortWith((a, b) => cmp(a._1, b._1) < 0)
+      val cumulative = sorted.map(_._2).scanLeft(0L)(_ + _).tail
+      val position = (cumulative.last - 1) * 0.95
+      val (lower, higher) = (math.floor(position).toLong, math.ceil(position).toLong)
+      def at(rank: Long) = sorted(cumulative.indexWhere(_ >= rank + 1))._1
+      val (lo, hi) = (at(lower), at(higher))
+      if (higher == lower || lo == hi) lo
+      else (higher - position) * lo + (position - lower) * hi
+    }
+
+    def record(symbol: String, asOf: Timestamp): Row = {
+      closeHour()
+      val sma20 = sma
+      val percentile = p95
+      // Regime: latest price vs the reported SMA-20 at ts (the implicit
+      // "regime join", sql/timescaledb_schema.sql:241-255)
+      val regime = (close, sma20) match {
+        case (null, _) => null
+        case (c, s) if s != null && cmp(c, s) > 0 => "up"
+        case (c, s) if s != null && cmp(c, s) < 0 => "down"
+        case _ => "neutral"
+      }
+      val largeTrade: java.lang.Boolean =
+        if (lastVolume == null || percentile == null) null else cmp(lastVolume, percentile) > 0
+      Row(symbol, asOf, open, high, low, close, sma20, ewm, volatility,
+        q(ratio(pv, volume)), largeTrade, q(percentile),
+        q(bid), q(ask), q(both(ask, bid)(_ - _)),
+        q(ratio(both(buy, sell)(_ - _), both(buy, sell)(_ + _))),
+        regime)
+    }
   }
 }

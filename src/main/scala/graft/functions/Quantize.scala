@@ -22,6 +22,14 @@ object Quantize {
     floor(c * lit(p) + lit(0.5)) / lit(p)
   }
 
+  /** [[r]] over one JVM double, the same IEEE op sequence (Spark's `floor`
+    * yields a BIGINT, so NaN quantizes to 0.0 on both sides).
+    */
+  def value(x: Double, scale: Int = 6): Double = {
+    val p = math.pow(10.0, scale)
+    math.floor(x * p + 0.5).toLong / p
+  }
+
   /** The integer quantum of [[r]]: floor(x·10^scale + 0.5) as BIGINT.
     *
     * This is the scale-safe form of the ordered-fold discipline: once a

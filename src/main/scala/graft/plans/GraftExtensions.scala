@@ -79,8 +79,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // The reference's flagship SQL entry point, as a TABLE function
     // (set-returning in the reference, `sql/timescaledb_schema.sql:292-411`):
     //   SELECT * FROM feature_pit_snapshot('5', TIMESTAMP '2024-01-02 03:04:05')
-    // The builder plants the full PitSnapshot plan (9 fused PIT branches over
-    // one guarded scan) into the parsed tree, so a pure-SQL session reaches
+    // The builder plants the full PitSnapshot plan (one guarded scan folded
+    // into the record) into the parsed tree, so a pure-SQL session reaches
     // the engine's centerpiece with zero application code. The trades source
     // resolves from `spark.graft.pit.source` (an events/trades directory) or,
     // absent that, a `trades` view registered in the session catalog.

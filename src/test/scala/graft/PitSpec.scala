@@ -67,8 +67,12 @@ class PitSpec extends SparkTestBase {
 
   test("a versioned snapshot runs as one pass: at most 2 Spark jobs, no joins, no cache") {
     import graft.sources.VersionedTable
+    import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
+      ObjectHashAggregateExec, SortAggregateExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     assert(spark.conf.get("spark.sql.adaptive.enabled") === "true",
@@ -93,14 +97,24 @@ class PitSpec extends SparkTestBase {
     } finally spark.sparkContext.clearJobGroup()
     val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
     // scan -> Exchange SinglePartition (one job), then the single task that
-    // runs both aggregates (one job)
+    // sorts and folds the history (one job)
     assert(jobs <= 2, s"expected at most 2 Spark jobs per snapshot, saw $jobs")
     val plan = snap.queryExecution.executedPlan
-    val offending = new AdaptiveSparkPlanHelper {}.collect(plan) {
+    val helper = new AdaptiveSparkPlanHelper {}
+    val offending = helper.collect(plan) {
       case p @ (_: BroadcastNestedLoopJoinExec | _: BroadcastExchangeExec |
           _: InMemoryTableScanExec) => p.nodeName
     }
     assert(offending.isEmpty, s"snapshot plan holds ${offending.mkString(", ")}:\n$plan")
+    // no operator that is not whole-stage code-generated and would compile
+    // its projections per task: the fold replaces every aggregate, window
+    // and generator
+    val perTaskCodegen = helper.collect(plan) {
+      case p @ (_: HashAggregateExec | _: ObjectHashAggregateExec |
+          _: SortAggregateExec | _: WindowExec | _: GenerateExec) => p.nodeName
+    }
+    assert(perTaskCodegen.isEmpty,
+      s"snapshot plan holds ${perTaskCodegen.mkString(", ")}:\n$plan")
   }
 
   /** The per-kernel formulation of a snapshot, kept as the spec of the
@@ -196,6 +210,80 @@ class PitSpec extends SparkTestBase {
       val (g, w) = (got.collect().toSeq, want.collect().toSeq)
       assert(g === w, s"$sym @ $asOf")
     }
+  }
+
+  test("property: snapshot and PreparedSnapshot.at equal the per-kernel lookups on random histories") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(20240304L)
+    val origin = Timestamp.valueOf("2024-03-04 10:00:00").getTime
+    val horizonSec = 3 * 3600
+    def chance(p: Double) = rnd.nextDouble() < p
+    def opt[T](p: Double)(v: => T): Any = if (chance(p)) null else v
+    // Prices and volumes sit on binary grids (quarters, halves), so every
+    // sum and product is exact and the comparison cannot hinge on the
+    // summation order of either side.
+    def history(symbol: String): Seq[Row] = {
+      val n = rnd.nextInt(61)
+      val secs = scala.collection.mutable.LinkedHashSet.empty[Int]
+      while (secs.size < n) secs += (rnd.nextInt(4) match {
+        // on a 1-min, 5-min or 1-h boundary, or anywhere
+        case 0 => 60 * rnd.nextInt(horizonSec / 60)
+        case 1 => 300 * rnd.nextInt(horizonSec / 300)
+        case 2 => 3600 * rnd.nextInt(horizonSec / 3600)
+        case _ => rnd.nextInt(horizonSec)
+      })
+      // one 5-min bucket whose ticks all trade zero volume
+      val zeroBucket = rnd.nextInt(horizonSec / 300)
+      secs.toSeq.sorted.map { sec =>
+        val price = opt(0.1)(if (chance(0.08)) 0.0 else 100.0 + 0.25 * (rnd.nextInt(41) - 20))
+        val volume = opt(0.1)(if (sec / 300 == zeroBucket) 0.0 else 0.5 * rnd.nextInt(21))
+        val mid = if (price == null) 100.0 else price.asInstanceOf[Double]
+        Row(new Timestamp(origin + sec * 1000L), symbol, price, volume, s"$symbol-$sec",
+          opt(0.2)(if (chance(0.5)) "buy" else "sell"),
+          opt(0.15)(mid - 0.25), opt(0.15)(mid + 0.25))
+      }
+    }
+    val schema = StructType(Seq(StructField("time", TimestampType),
+      StructField("symbol", StringType), StructField("price", DoubleType),
+      StructField("volume", DoubleType), StructField("trade_id", StringType),
+      StructField("side", StringType), StructField("bid", DoubleType),
+      StructField("ask", DoubleType)))
+    // as-of times: on a tick, anywhere (before the first tick included)
+    // and on a 5-min boundary
+    val cases = (0 until 200).map { i =>
+      val ticks = history(s"H$i")
+      val onTick = if (ticks.isEmpty) origin else ticks(rnd.nextInt(ticks.size)).getTimestamp(0).getTime
+      (s"H$i", ticks, Seq(onTick, origin - 600000L + rnd.nextInt(horizonSec + 1200) * 1000L,
+        origin + 300000L * rnd.nextInt(horizonSec / 300 + 1)).map(new Timestamp(_)))
+    }
+    // The per-kernel lookups run interpreted in a session of their own: each
+    // is a dozen tiny aggregates whose per-task code generation would
+    // otherwise dominate the suite's time. Values do not depend on it.
+    val interpreted = spark.newSession()
+    interpreted.conf.set("spark.sql.codegen.wholeStage", "false")
+    interpreted.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    def frame(s: org.apache.spark.sql.SparkSession, ticks: Seq[Row]) =
+      s.createDataFrame(java.util.Arrays.asList(ticks: _*), schema).coalesce(1)
+    def check(symbol: String, ticks: Seq[Row], asOfs: Seq[Timestamp]): Unit = {
+      val (t, spec) = (frame(spark, ticks), frame(interpreted, ticks))
+      val handle = PitSnapshot.prepare(t, symbol)
+      try for (asOf <- asOfs) {
+        val got = PitSnapshot.snapshot(t, symbol, asOf).collect().toSeq
+        assert(got === perKernelSnapshot(spec, symbol, asOf).collect().toSeq,
+          s"$symbol @ $asOf over ${ticks.mkString("; ")}")
+        assert(handle.at(asOf).collect().toSeq === got, s"prepared $symbol @ $asOf")
+      } finally handle.close()
+    }
+    // the histories are independent: four driver threads keep local[4] busy
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try Await.result(Future.traverse(cases) { case (symbol, ticks, asOfs) =>
+      Future(check(symbol, ticks, asOfs))
+    }, Duration.Inf)
+    finally pool.shutdown()
   }
 
   test("a symbol with no tick at or before as_of snapshots to one all-null row") {
