@@ -38,9 +38,22 @@ import org.apache.spark.sql.types._
   * follow Spark's own update steps, floats quantize through [[Quantize]].
   * No aggregate, window or generator is planned: those are not whole-stage
   * code-generated, and their per-task projection codegen was 44% of a
-  * snapshot's executor samples. A snapshot is scan → one single-partition
-  * exchange → one task: two Spark jobs, no joins, nothing cached, nothing
-  * collected to the driver.
+  * snapshot's executor samples. No joins, nothing cached, nothing collected
+  * to the driver.
+  *
+  * The read before the fold depends on the trades relation's size (its
+  * analyzed `sizeInBytes`) against `spark.sql.files.openCostInBytes` (4 MB
+  * by default): at or below it the fold's one task reads the guarded scan
+  * itself — one Spark job, no exchange, no adaptive stage; above it the
+  * scan stays parallel and one single-partition exchange feeds that task —
+  * two jobs. The exchange's shuffle write/read and second job are a fixed
+  * cost a small table does not earn back; at scale a serial read loses
+  * (PIT median ms on versioned tables of sf0.1 trades, exchange → one
+  * task, as-of at end / middle: 1 dir 2.2 MB 209 → 181 / 213 → 127;
+  * 2 dirs 4.4 MB 220 → 175 / 175 → 147; 4 dirs 8.8 MB 225 → 229 /
+  * 176 → 167; 40 dirs 88 MB 577 → 1116 / 353 → 600). A table under the
+  * threshold split into many tiny files is read file by file in one task;
+  * `VersionedTable.compactSmallDirs` is the remedy.
   */
 object PitSnapshot {
 
@@ -143,15 +156,21 @@ object PitSnapshot {
     snapshot(graft.sources.VersionedTable.read(spark, root, asOfVersion),
       symbol, asOf)
 
-  def snapshot(trades: DataFrame, symbol: String, asOf: Timestamp): DataFrame =
-    // The PIT guard: the single most important filter in the engine. The
-    // scan/filter stays parallel; repartition(1) then collapses the
-    // survivors — ONE symbol's history <= ts, bounded at any corpus scale —
-    // into the single partition the fold runs on without another exchange.
+  def snapshot(trades: DataFrame, symbol: String, asOf: Timestamp): DataFrame = {
+    // The PIT guard: the single most important filter in the engine.
+    val guarded = trades.filter(col("symbol") === symbol && col("time") <= lit(asOf))
+    // The read before the fold. A relation no larger than the session's
+    // openCostInBytes (what one task scans in the time it takes to open a
+    // file) is read inside the fold's own task: one job, no exchange. A
+    // larger one keeps a parallel scan/filter whose survivors — ONE
+    // symbol's history <= ts, bounded at any corpus scale — repartition(1)
+    // collapses into the fold's partition: one exchange, two jobs.
     // Callers serving many snapshots of one symbol should use [[prepare]]
     // (explicit cached handle).
-    assemble(trades.filter(col("symbol") === symbol && col("time") <= lit(asOf))
-      .repartition(1), symbol, asOf)
+    val small = trades.queryExecution.analyzed.stats.sizeInBytes <=
+      trades.sparkSession.sessionState.conf.filesOpenCostInBytes
+    assemble(if (small) guarded else guarded.repartition(1), symbol, asOf)
+  }
 
   /** The snapshot record: the reference's 14 contract columns plus the
     * percentile and the quoted bid/ask behind the flags.
@@ -166,10 +185,12 @@ object PitSnapshot {
         .map(StructField(_, DoubleType)) ++
       Seq(StructField("regime_tag", StringType)))
 
-  /** The single-record assembly over an already-guarded, single-partition
-    * base: Spark's (spillable) sort orders the partition by time, then one
-    * task folds it into the record. The fold emits `symbol` and `as_of_ts`
-    * itself: a literal projection would compile a new class per request.
+  /** The single-record assembly over an already-guarded base: `coalesce(1)`
+    * reads every partition of it in one task (a repartitioned base has just
+    * one; a small table's scan may have several, in any file order), Spark's
+    * (spillable) sort orders them by time, then that task folds them into
+    * the record. The fold emits `symbol` and `as_of_ts` itself: a literal
+    * projection would compile a new class per request.
     */
   private def assemble(base: DataFrame, symbol: String, asOf: Timestamp): DataFrame = {
     val ticks = base.select(unix_micros(col("time")).as("t"),

@@ -67,54 +67,84 @@ class PitSpec extends SparkTestBase {
 
   test("a versioned snapshot runs as one pass: at most 2 Spark jobs, no joins, no cache") {
     import graft.sources.VersionedTable
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
     import org.apache.spark.sql.execution.GenerateExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      AdaptiveSparkPlanHelper}
     import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
       ObjectHashAggregateExec, SortAggregateExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.window.WindowExec
-    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     assert(spark.conf.get("spark.sql.adaptive.enabled") === "true",
       "the shape is asserted for the adaptive plan a serving session runs")
-    val root = java.nio.file.Files.createTempDirectory("graft_pitshape_").toString
-    val t = trades.select(col("time"), col("symbol"), col("price"),
-      col("volume"), col("trade_id"), col("side"), col("bid"), col("ask"))
-    // four chronological commits with time stats + a symbol bloom
-    val cuts = Seq("2000-01-01", "2024-01-08", "2024-01-16", "2024-01-24", "2100-01-01")
-      .map(d => Timestamp.valueOf(s"$d 00:00:00"))
-    for (Seq(lo, hi) <- cuts.sliding(2))
-      VersionedTable.commit(t.filter(col("time") >= lit(lo) && col("time") < lit(hi)),
-        root, "append", statsCols = Seq("time"), bloomCols = Seq("symbol"))
-    assert(VersionedTable.latestVersion(root).contains(4))
-    val group = s"pit-jobs-${java.util.UUID.randomUUID().toString.take(8)}"
-    spark.sparkContext.setJobGroup(group, "PIT snapshot job-count probe")
-    val snap = try {
-      val df = PitSnapshot.snapshotVersioned(spark, root, "3",
-        Timestamp.valueOf("2024-01-20 00:00:00"))
-      assert(df.collect().length === 1)
-      df
-    } finally spark.sparkContext.clearJobGroup()
-    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-    // scan -> Exchange SinglePartition (one job), then the single task that
-    // sorts and folds the history (one job)
-    assert(jobs <= 2, s"expected at most 2 Spark jobs per snapshot, saw $jobs")
-    val plan = snap.queryExecution.executedPlan
     val helper = new AdaptiveSparkPlanHelper {}
-    val offending = helper.collect(plan) {
-      case p @ (_: BroadcastNestedLoopJoinExec | _: BroadcastExchangeExec |
-          _: InMemoryTableScanExec) => p.nodeName
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    def tableBytes(root: String) =
+      VersionedTable.read(spark, root).queryExecution.analyzed.stats.sizeInBytes
+    def commitSlices(root: String, t: DataFrame, cuts: Seq[Timestamp]): Unit =
+      for (Seq(lo, hi) <- cuts.sliding(2))
+        VersionedTable.commit(t.filter(col("time") >= lit(lo) && col("time") < lit(hi)),
+          root, "append", statsCols = Seq("time"), bloomCols = Seq("symbol"))
+    /** Snapshot once under a job group: (jobs it ran, its executed plan). */
+    def probe(root: String, symbol: String, asOf: Timestamp) = {
+      val group = s"pit-jobs-${java.util.UUID.randomUUID().toString.take(8)}"
+      spark.sparkContext.setJobGroup(group, "PIT snapshot job-count probe")
+      val snap = try {
+        val df = PitSnapshot.snapshotVersioned(spark, root, symbol, asOf)
+        assert(df.collect().length === 1)
+        df
+      } finally spark.sparkContext.clearJobGroup()
+      val plan = snap.queryExecution.executedPlan
+      // no join, broadcast or cache, and no operator that is not whole-stage
+      // code-generated and would compile its projections per task: the fold
+      // replaces every aggregate, window and generator
+      val offending = helper.collect(plan) {
+        case p @ (_: BroadcastNestedLoopJoinExec | _: BroadcastExchangeExec |
+            _: InMemoryTableScanExec | _: HashAggregateExec |
+            _: ObjectHashAggregateExec | _: SortAggregateExec | _: WindowExec |
+            _: GenerateExec) => p.nodeName
+      }
+      assert(offending.isEmpty, s"snapshot plan holds ${offending.mkString(", ")}:\n$plan")
+      (spark.sparkContext.statusTracker.getJobIdsForGroup(group).length, plan)
     }
-    assert(offending.isEmpty, s"snapshot plan holds ${offending.mkString(", ")}:\n$plan")
-    // no operator that is not whole-stage code-generated and would compile
-    // its projections per task: the fold replaces every aggregate, window
-    // and generator
-    val perTaskCodegen = helper.collect(plan) {
-      case p @ (_: HashAggregateExec | _: ObjectHashAggregateExec |
-          _: SortAggregateExec | _: WindowExec | _: GenerateExec) => p.nodeName
-    }
-    assert(perTaskCodegen.isEmpty,
-      s"snapshot plan holds ${perTaskCodegen.mkString(", ")}:\n$plan")
+    def shuffles(plan: org.apache.spark.sql.execution.SparkPlan) =
+      helper.collect(plan) { case e: ShuffleExchangeExec => e }
+    val day = (d: String) => Timestamp.valueOf(s"$d 00:00:00")
+
+    // At or below openCostInBytes: four chronological commits of the test
+    // corpus, read inside the fold's own task
+    val root = java.nio.file.Files.createTempDirectory("graft_pitshape_").toString
+    commitSlices(root, trades.select(col("time"), col("symbol"), col("price"),
+        col("volume"), col("trade_id"), col("side"), col("bid"), col("ask")),
+      Seq("2000-01-01", "2024-01-08", "2024-01-16", "2024-01-24", "2100-01-01").map(day))
+    assert(VersionedTable.latestVersion(root).contains(4))
+    assert(tableBytes(root) <= openCost, s"${tableBytes(root)} B is not a small table")
+    val (jobs, plan) = probe(root, "3", day("2024-01-20"))
+    assert(jobs === 1, s"expected 1 Spark job per small-table snapshot, saw $jobs")
+    assert(shuffles(plan).isEmpty && plan.find(_.isInstanceOf[AdaptiveSparkPlanExec]).isEmpty,
+      s"a small-table snapshot plans an exchange or an adaptive stage:\n$plan")
+
+    // Above it: slices of an incompressible synthetic history keep the
+    // parallel scan and its one single-partition exchange
+    val bigRoot = java.nio.file.Files.createTempDirectory("graft_pitshape_big_").toString
+    val t0 = day("2024-01-01").getTime / 1000
+    commitSlices(bigRoot, spark.range(160000).select(
+        timestamp_seconds(lit(t0) + col("id")).as("time"),
+        (col("id") % 8).cast("string").as("symbol"),
+        (rand(1) * 100 + 1).as("price"), (rand(2) * 1000).as("volume"),
+        col("id").cast("string").as("trade_id"),
+        when(col("id") % 2 === 0, "buy").otherwise("sell").as("side"),
+        rand(3).as("bid"), rand(4).as("ask")),
+      (0 to 4).map(i => new Timestamp((t0 + i * 40000L) * 1000)))
+    assert(tableBytes(bigRoot) > openCost, s"${tableBytes(bigRoot)} B is not above $openCost B")
+    val (bigJobs, bigPlan) = probe(bigRoot, "3", new Timestamp((t0 + 100000L) * 1000))
+    assert(bigJobs <= 2, s"expected at most 2 Spark jobs per snapshot, saw $bigJobs")
+    val exchanges = shuffles(bigPlan)
+    assert(exchanges.length === 1 && exchanges.head.outputPartitioning == SinglePartition,
+      s"a large-table snapshot must keep one single-partition exchange:\n$bigPlan")
   }
 
   /** The per-kernel formulation of a snapshot, kept as the spec of the
@@ -212,6 +242,38 @@ class PitSpec extends SparkTestBase {
     }
   }
 
+  test("a small versioned table read out of time order in one task equals the per-kernel lookups") {
+    import graft.sources.VersionedTable
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val root = java.nio.file.Files.createTempDirectory("graft_pitorder_").toString
+    val t = trades.select(col("time"), col("symbol"), col("price"),
+      col("volume"), col("trade_id"), col("side"), col("bid"), col("ask"))
+    val cuts = Seq("2000-01-01", "2024-01-08", "2024-01-16", "2024-01-24", "2100-01-01")
+      .map(d => Timestamp.valueOf(s"$d 00:00:00"))
+    // newest slice first; the second commit writes three files, each
+    // holding an interleaved share of its slice's ticks
+    for ((Seq(lo, hi), i) <- cuts.sliding(2).toSeq.reverse.zipWithIndex) {
+      val slice = t.filter(col("time") >= lit(lo) && col("time") < lit(hi))
+      VersionedTable.commit(if (i == 1) slice.repartition(3) else slice,
+        root, "append", statsCols = Seq("time"), bloomCols = Seq("symbol"))
+    }
+    val multiFile = new java.io.File(root, "data").listFiles().exists(
+      _.listFiles().count(_.getName.startsWith("part-")) > 1)
+    assert(multiFile, "no commit wrote more than one file")
+    val table = VersionedTable.read(spark, root)
+    for (asOf <- Seq("2024-01-05 12:00:00", "2024-01-12 00:00:00",
+        "2024-01-20 06:30:00", "2024-02-01 00:00:00").map(Timestamp.valueOf)) {
+      val got = PitSnapshot.snapshotVersioned(spark, root, "3", asOf)
+      val g = got.collect().toSeq
+      val exchanges = new AdaptiveSparkPlanHelper {}.collect(got.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e
+      }
+      assert(exchanges.isEmpty, s"not the single-task read:\n${got.queryExecution.executedPlan}")
+      assert(g === perKernelSnapshot(table, "3", asOf).collect().toSeq, s"@ $asOf")
+    }
+  }
+
   test("property: snapshot and PreparedSnapshot.at equal the per-kernel lookups on random histories") {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
@@ -287,18 +349,38 @@ class PitSpec extends SparkTestBase {
   }
 
   test("a symbol with no tick at or before as_of snapshots to one all-null row") {
+    import graft.sources.VersionedTable
     // the q_pit_snapshot oracle's shape for an empty base: every aggregate
     // CTE yields one NULL row, so the cross join is a single row carrying
     // only the requested symbol and as-of time
-    val asOf = Timestamp.valueOf("2000-01-01 00:00:00")
-    val rows = PitSnapshot.snapshot(trades, "3", asOf).collect()
-    assert(rows.length === 1)
-    val row = rows(0)
-    assert(row.getAs[String]("symbol") === "3")
-    assert(row.getAs[Timestamp]("as_of_ts") === asOf)
-    val features = row.schema.fieldNames.filterNot(Set("symbol", "as_of_ts"))
-    assert(features.filterNot(f => row.isNullAt(row.fieldIndex(f))).isEmpty,
-      s"non-null features on an empty history: ${row.mkString(",")}")
+    def assertAllNull(snap: DataFrame, symbol: String, asOf: Timestamp): Unit = {
+      val rows = snap.collect()
+      assert(rows.length === 1, s"$symbol @ $asOf")
+      val row = rows(0)
+      assert(row.getAs[String]("symbol") === symbol)
+      assert(row.getAs[Timestamp]("as_of_ts") === asOf)
+      val features = row.schema.fieldNames.filterNot(Set("symbol", "as_of_ts"))
+      assert(features.filterNot(f => row.isNullAt(row.fieldIndex(f))).isEmpty,
+        s"non-null features on an empty history: ${row.mkString(",")}")
+    }
+    // every tick is after the as-of
+    val early = Timestamp.valueOf("2000-01-01 00:00:00")
+    assertAllNull(PitSnapshot.snapshot(trades, "3", early), "3", early)
+    // a symbol the bloom tier prunes from every dir: zero files are read
+    // and nothing is exchanged, so only the NULL-time marker keeps the
+    // fold's single partition
+    val root = java.nio.file.Files.createTempDirectory("graft_pitnone_").toString
+    val t = trades.select(col("time"), col("symbol"), col("price"),
+      col("volume"), col("trade_id"), col("side"), col("bid"), col("ask"))
+    val mid = Timestamp.valueOf("2024-01-16 00:00:00")
+    for (slice <- Seq(col("time") < lit(mid), col("time") >= lit(mid)))
+      VersionedTable.commit(t.filter(slice), root, "append",
+        statsCols = Seq("time"), bloomCols = Seq("symbol"))
+    val (absent, asOf) = ("NO_SUCH_SYMBOL", Timestamp.valueOf("2024-01-20 00:00:00"))
+    assert(scannedFiles(VersionedTable.read(spark, root)
+      .filter(col("symbol") === absent && col("time") <= lit(asOf))).isEmpty,
+      "the bloom tier admitted a dir for an absent symbol")
+    assertAllNull(PitSnapshot.snapshotVersioned(spark, root, absent, asOf), absent, asOf)
   }
 
   test("a constant price snapshots as neutral: the regime tag compares the reported SMA-20") {
